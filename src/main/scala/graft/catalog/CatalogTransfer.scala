@@ -1,6 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Portable catalog snapshot — the Spark-native rendering of the
   * reference's Hive-Metastore export/import (its entire raison d'être:
@@ -35,11 +37,11 @@ final case class PropKV(key: String, value: String)
   * travels (a directory scan cannot reproduce the registered set —
   * deliberately-unregistered layout dirs must stay unregistered), but
   * layout-conforming partitions travel as SPEC ONLY (location empty =
-  * "default layout"), they are dumped as their own row-per-partition
-  * dataset (partition-parallel write, not an array inside one table
-  * row), and the import re-registers them through bulk catalog
-  * createPartitions calls (one RPC per 1000, the HMS add_partitions
-  * batch shape) instead of per-partition ADD PARTITION statements. */
+  * "default layout"), they are dumped one line per partition in their
+  * own sub-dir (not as an array inside one table row), and the import
+  * re-registers them through bulk catalog createPartitions calls (one
+  * RPC per 1000, the HMS add_partitions batch shape) instead of
+  * per-partition ADD PARTITION statements. */
 final case class PartitionInfo(spec: Seq[PropKV], location: String,
     // per-partition ANALYZE statistics (export(withStats) — HMS
     // carries these as partition parameters; same flat rendering as
@@ -291,47 +293,94 @@ object CatalogTransfer {
     CatalogSnapshot(databases, tables, functions)
   }
 
-  /** Persist a snapshot as JSON datasets under `dir` (overwrite).
-    * Partitions are dumped as their own row-per-partition dataset, NOT
-    * coalesced: a 100k-partition table writes in parallel as 100k small
-    * rows instead of one 100k-element array inside a single table row
-    * (which is what makes the driver the bottleneck). The db/table/
-    * function datasets stay single-file — they are thousands of rows at
-    * most. */
-  def write(spark: SparkSession, snap: CatalogSnapshot, dir: String): Unit = {
-    import spark.implicits._
-    spark.createDataset(snap.databases).coalesce(1)
-      .write.mode("overwrite").json(s"$dir/databases")
-    spark.createDataset(snap.tables.map(_.copy(partitions = Nil))).coalesce(1)
-      .write.mode("overwrite").json(s"$dir/tables")
-    val partRows = snap.tables.flatMap(t =>
-      t.partitions.map(p =>
-        PartitionRow(t.db, t.name, p.spec, p.location, p.stats)))
-    spark.createDataset(partRows)
-      .write.mode("overwrite").json(s"$dir/partitions")
-    spark.createDataset(snap.functions).coalesce(1)
-      .write.mode("overwrite").json(s"$dir/functions")
-  }
+  /** Persist a snapshot under `dir` (overwrite) as four JSON-lines
+    * sub-dirs, each one `part-00000.json`: `databases`, `tables`
+    * (partitions stripped), `partitions` (one row per partition, so a
+    * 100k-partition table is 100k small lines rather than one
+    * 100k-element array inside a single table row) and `functions`.
+    *
+    * The one snapshot encoder: driver-side json4s over the Hadoop
+    * FileSystem of `dir`, resolved through the session's Hadoop
+    * configuration, so `s3a://` / `hdfs://` dirs work. It schedules no
+    * Spark job: the rows are a driver `Seq` in every caller, and for
+    * catalog metadata a job's scheduling costs far more than its
+    * bytes. */
+  def write(spark: SparkSession, snap: CatalogSnapshot, dir: String): Unit =
+    encode(snap, dir, spark.sessionState.newHadoopConf())
 
-  /** Driver-side snapshot write — same on-disk layout [[read]]
-    * consumes, with zero Spark jobs: a LIVE catalog's per-DDL persist
-    * is a KiB-scale metadata write and must not schedule four write
-    * jobs per statement (measured: the job overhead, not the bytes,
-    * dominated the V2 write keys). The bulk [[write]] stays the Spark
-    * path — exported partition datasets can be genuinely large and
-    * want the parallel writer. */
-  def writeLocal(snap: CatalogSnapshot, dir: String): Unit = {
+  /** [[write]] without a session, for local dirs: the snapshot
+    * catalog's per-DDL persist. */
+  def writeLocal(snap: CatalogSnapshot, dir: String): Unit =
+    encode(snap, dir, localConf)
+
+  /** Load a snapshot persisted by [[write]], or by the Spark JSON
+    * writer of earlier versions (multi-file sub-dirs, `_SUCCESS`,
+    * `.crc` sidecars: files starting with `.` or `_` are skipped).
+    *
+    * The one snapshot decoder, and strict: a missing `databases/` or
+    * `tables/` throws `FileNotFoundException`, because an empty
+    * snapshot read from a mistyped dir would make [[syncApply]] drop
+    * every table. A missing `partitions/` or `functions/` means none:
+    * snapshots from before the partition split and before functions.
+    * Fields absent in older snapshots take the case-class defaults
+    * (json4s applies constructor defaults for missing JSON fields). */
+  def read(spark: SparkSession, dir: String): CatalogSnapshot =
+    decode(dir, spark.sessionState.newHadoopConf())
+
+  /** [[read]] without a session, for local dirs: the snapshot
+    * catalog's revalidation on every publish and re-bootstrap. */
+  def readLocal(dir: String): CatalogSnapshot = decode(dir, localConf)
+
+  private lazy val localConf = new Configuration()
+
+  private val partFile = "part-00000.json"
+
+  /** The FileSystem of `dir`, minus any client-side checksum layer:
+    * the local FileSystem would add a `.crc` sidecar per file, and the
+    * snapshot catalog's revision dirs are hard-linked and GC'd file by
+    * file. */
+  private def fileSystem(dir: String, conf: Configuration): FileSystem =
+    new Path(dir).getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
+  /** A new file at `p`, parent dirs included. Local files are created
+    * through java.nio: without its native library, Hadoop's local
+    * FileSystem forks a `chmod` per created file and dir (about 3 ms
+    * each, paid on every DDL of the snapshot catalog). */
+  private def create(fs: FileSystem, p: Path): java.io.OutputStream =
+    fs match {
+      case local: RawLocalFileSystem if local.getUri.getScheme == "file" =>
+        val f = local.pathToFile(p).toPath
+        java.nio.file.Files.createDirectories(f.getParent)
+        java.nio.file.Files.newOutputStream(f)
+      case _ => fs.create(p, true)
+    }
+
+  private def encode(snap: CatalogSnapshot, dir: String,
+      conf: Configuration): Unit = {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val fs = fileSystem(dir, conf)
     def dump[T <: AnyRef](rows: Seq[T], sub: String): Unit = {
-      val d = new java.io.File(dir, sub)
-      // overwrite semantics, like the Spark writer
-      Option(d.listFiles).foreach(_.foreach { f => f.delete(): Unit })
-      d.mkdirs()
-      val body = rows.map(org.json4s.jackson.Serialization.write(_))
-        .mkString("", "\n", if (rows.isEmpty) "" else "\n")
-      java.nio.file.Files.write(
-        d.toPath.resolve("part-00000.json"),
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+      val d = new Path(dir, sub)
+      // overwrite replaces the whole sub-dir, with whatever an earlier
+      // write left in it (the Spark JSON writer's extra parts,
+      // `_SUCCESS`, `.crc` sidecars); that also moves the mtime of
+      // `dir` itself, by which SnapshotCatalog fingerprints a
+      // bootstrap snapshot
+      fs.delete(d, true)
+      // written under a dot-prefixed name the reader skips, then
+      // renamed into place: a reader never parses a half-written part
+      val tmp = new Path(d, s".$partFile.tmp")
+      val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+        create(fs, tmp), java.nio.charset.StandardCharsets.UTF_8))
+      try rows.foreach { r =>
+        out.write(org.json4s.jackson.Serialization.write(r))
+        out.write('\n')
+      } finally out.close()
+      if (!fs.rename(tmp, new Path(d, partFile)))
+        throw new java.io.IOException(s"could not publish $d/$partFile")
     }
     dump(snap.databases, "databases")
     dump(snap.tables.map(_.copy(partitions = Nil)), "tables")
@@ -341,99 +390,38 @@ object CatalogTransfer {
     dump(snap.functions, "functions")
   }
 
-  /** Load a snapshot previously persisted with [[write]]. */
-  def read(spark: SparkSession, dir: String): CatalogSnapshot = {
-    import spark.implicits._
-    import org.apache.spark.sql.Encoders
-    val dbs = spark.read.schema(Encoders.product[DatabaseInfo].schema)
-      .json(s"$dir/databases").as[DatabaseInfo].collect().toSeq
-      .sortBy(_.name)
-    // tolerate snapshots written before the schema gained bucket /
-    // partition / comment / serde fields: absent JSON fields arrive as
-    // null and would break the typed decode (non-nullable numBuckets)
-    // or NPE downstream — default them to the case-class defaults.
-    import org.apache.spark.sql.functions.{coalesce, col, expr, from_json, lit}
-    val tblSchema = Encoders.product[TableInfo].schema
-    def emptyArr(n: String) =
-      from_json(lit("[]"), tblSchema(n).dataType, Map.empty[String, String])
-    val tables0 = spark.read.schema(tblSchema).json(s"$dir/tables")
-      .withColumn("viewDefaultDb", coalesce(col("viewDefaultDb"), lit("")))
-      .withColumn("numBuckets", coalesce(col("numBuckets"), lit(0)))
-      .withColumn("inputFormat", coalesce(col("inputFormat"), lit("")))
-      .withColumn("outputFormat", coalesce(col("outputFormat"), lit("")))
-      .withColumn("serde", coalesce(col("serde"), lit("")))
-      .withColumn("bucketCols", coalesce(col("bucketCols"), emptyArr("bucketCols")))
-      .withColumn("sortCols", coalesce(col("sortCols"), emptyArr("sortCols")))
-      .withColumn("partitions", coalesce(col("partitions"), emptyArr("partitions")))
-      .withColumn("serdeProps", coalesce(col("serdeProps"), emptyArr("serdeProps")))
-      .withColumn("stats", coalesce(col("stats"), emptyArr("stats")))
-      .withColumn("columns", expr(
-        """transform(columns, c -> struct(
-          |  c.name AS name, c.dataType AS dataType, c.nullable AS nullable,
-          |  c.isPartition AS isPartition,
-          |  ifnull(c.comment, '') AS comment,
-          |  ifnull(c.defaultSql, '') AS defaultSql))""".stripMargin))
-      .as[TableInfo].collect().toSeq
-      .sortBy(t => (t.db, t.name))
-    // partitions dataset (absent in pre-split snapshots, where they are
-    // embedded in the table rows and already decoded above). Collected
-    // here because the import target is a driver-side catalog RPC; a
-    // catalog too large for that would page this dataset with
-    // toLocalIterator instead.
-    val partRows =
-      try {
-        val prSchema = Encoders.product[PartitionRow].schema
-        spark.read.schema(prSchema).json(s"$dir/partitions")
-          // pre-r14 snapshots carry no per-partition stats field
-          .withColumn("stats", coalesce(col("stats"),
-            from_json(lit("[]"), prSchema("stats").dataType,
-              Map.empty[String, String])))
-          .as[PartitionRow].collect().toSeq
-      } catch { case _: org.apache.spark.sql.AnalysisException => Nil }
-    val byTable = partRows.groupBy(r => (r.db, r.table))
-    val tables = tables0.map { t =>
-      val ps = byTable.getOrElse((t.db, t.name), Nil)
-        .map(r => PartitionInfo(r.spec, r.location, r.stats))
-        .sortBy(_.spec.map(kv => s"${kv.key}=${kv.value}").mkString("/"))
-      if (ps.nonEmpty) t.copy(partitions = ps) else t
-    }
-    // functions dir absent in pre-function snapshots → none to restore
-    val functions =
-      try spark.read.schema(Encoders.product[FunctionInfo].schema)
-        .json(s"$dir/functions").as[FunctionInfo].collect().toSeq
-        .sortBy(f => (f.db, f.name))
-      catch { case _: org.apache.spark.sql.AnalysisException => Nil }
-    CatalogSnapshot(dbs, tables, functions)
-  }
-
-  /** Driver-side snapshot read — consumes the same on-disk layout as
-    * [[read]] (whether written by [[write]]'s Spark jobs or
-    * [[writeLocal]]) with ZERO Spark jobs. [[SnapshotCatalog]]'s snap
-    * revalidation re-reads the snapshot on every publish and every
-    * fixture re-bootstrap; at KiB scale the 3-4 collect jobs of
-    * [[read]] (job-scheduling overhead, not bytes) dominated the V2
-    * catalog bench keys once the r15 coherence fix made those re-reads
-    * honest. Schema-drift tolerance matches [[read]]: fields absent in
-    * older snapshots fall back to the case-class defaults (json4s
-    * applies constructor defaults for missing JSON fields). */
-  def readLocal(dir: String): CatalogSnapshot = {
+  private def decode(dir: String, conf: Configuration): CatalogSnapshot = {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    def rows[T: Manifest](sub: String): Seq[T] = {
-      val d = new java.io.File(dir, sub)
-      Option(d.listFiles).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".json") &&
-          !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    val fs = fileSystem(dir, conf)
+    def rows[T: Manifest](sub: String, required: Boolean): Seq[T] = {
+      val d = new Path(dir, sub)
+      val listed =
+        try fs.listStatus(d).toSeq
+        catch {
+          case e: java.io.FileNotFoundException =>
+            if (required) throw new java.io.FileNotFoundException(
+              s"$dir is not a catalog snapshot: $d does not exist")
+              .initCause(e)
+            Nil
+        }
+      listed.map(_.getPath)
+        .filter { p =>
+          val n = p.getName
+          n.endsWith(".json") && !n.startsWith(".") && !n.startsWith("_")
+        }
         .sortBy(_.getName)
-        .flatMap { f =>
-          val src = scala.io.Source.fromFile(f, "UTF-8")
+        .flatMap { p =>
+          val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
           try src.getLines().filter(_.nonEmpty).map(l =>
             org.json4s.jackson.JsonMethods.parse(l).extract[T]).toList
           finally src.close()
         }
     }
-    val dbs = rows[DatabaseInfo]("databases").sortBy(_.name)
-    val tables0 = rows[TableInfo]("tables").sortBy(t => (t.db, t.name))
-    val byTable = rows[PartitionRow]("partitions")
+    val dbs = rows[DatabaseInfo]("databases", required = true)
+      .sortBy(_.name)
+    val tables0 = rows[TableInfo]("tables", required = true)
+      .sortBy(t => (t.db, t.name))
+    val byTable = rows[PartitionRow]("partitions", required = false)
       .groupBy(r => (r.db, r.table))
     val tables = tables0.map { t =>
       val ps = byTable.getOrElse((t.db, t.name), Nil)
@@ -441,7 +429,7 @@ object CatalogTransfer {
         .sortBy(_.spec.map(kv => s"${kv.key}=${kv.value}").mkString("/"))
       if (ps.nonEmpty) t.copy(partitions = ps) else t
     }
-    val functions = rows[FunctionInfo]("functions")
+    val functions = rows[FunctionInfo]("functions", required = false)
       .sortBy(f => (f.db, f.name))
     CatalogSnapshot(dbs, tables, functions)
   }
@@ -456,7 +444,7 @@ object CatalogTransfer {
       spec: Map[String, String]): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     ExternalCatalogUtils.generatePartitionPath(spec, partColOrder,
-      new org.apache.hadoop.fs.Path(tableLocation)).toString
+      new Path(tableLocation)).toString
   }
 
   /** URI equality on (scheme, authority, path) — `file:///x` and
@@ -464,8 +452,8 @@ object CatalogTransfer {
     * absent authority), which would misclassify every recovered
     * partition as custom. */
   private def samePath(a: String, b: String): Boolean = {
-    val ua = new org.apache.hadoop.fs.Path(a).toUri
-    val ub = new org.apache.hadoop.fs.Path(b).toUri
+    val ua = new Path(a).toUri
+    val ub = new Path(b).toUri
     ua.getScheme == ub.getScheme && ua.getPath == ub.getPath &&
       Option(ua.getAuthority).getOrElse("") ==
         Option(ub.getAuthority).getOrElse("")
@@ -584,7 +572,7 @@ object CatalogTransfer {
               "verify the catalog-assigned path matches the data layout")
         CatalogTablePartition(spec, meta.storage.copy(
           locationUri =
-            locOpt.map(l => new org.apache.hadoop.fs.Path(l).toUri)),
+            locOpt.map(l => new Path(l).toUri)),
           // per-partition ANALYZE statistics ride the same restore
           // (stats-less snapshots carry Nil → None, no behavior change)
           stats = kvToStats(p.stats, s"${t.db}.${t.name}",

@@ -68,9 +68,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * one scan to agree on columnar vs row), with file-level partition
   * splitting so CLEAN files at least skip the per-row hash-set probe.
   * Compaction restores the stock vectorized scan everywhere. Like the
-  * rest of the snapshot catalog, file ops use
-  * local-posix java.io (the writeLocal discipline); a DFS deployment
-  * swaps these for the Hadoop FileSystem API.
+  * snapshot catalog's HEAD and revision bookkeeping, these file ops
+  * use local-posix java.io for its hard links and atomic renames; only
+  * the snapshot files themselves go through the Hadoop FileSystem API
+  * ([[CatalogTransfer.write]]), and a DFS deployment swaps these ops
+  * for it too.
   *
   * Reference basis: the provisioned cluster's SQL surface over the
   * shared metastore (yc-data-proc-metadata-import

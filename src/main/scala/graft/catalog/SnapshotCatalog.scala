@@ -120,10 +120,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     val fp = headFingerprint(rev)
     if (snapCache == null || rev != loadedRev || fp != loadedFp) {
       val dir = if (rev == 0) snapshotDir else s"$snapshotDir/revs/$rev"
-      // driver-side parse: a snapshot is KiB of JSON, and this re-read
-      // runs on every publish/re-bootstrap — scheduling Spark collect
-      // jobs here (CatalogTransfer.read) measurably dominated the V2
-      // catalog keys (readLocal/read equivalence is a CatalogSpec law)
+      // driver-side parse (the one snapshot decoder, zero Spark jobs):
+      // a snapshot is KiB of JSON, and this re-read runs on every
+      // publish/re-bootstrap
       snapCache = CatalogTransfer.readLocal(dir)
       loadedRev = rev
       loadedFp = fp

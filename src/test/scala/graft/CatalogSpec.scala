@@ -2862,11 +2862,10 @@ class CatalogSpec extends SparkSpec {
       "zero-match MERGE must hard-link every read-scope partition")
   }
 
-  test("readLocal is bit-equal to the Spark reader on both writers' " +
-      "output (the snap-revalidation fast path serves identical state)") {
-    // rich fixture: stats (histogram blob), a partitioned table with
-    // recovered partitions, table properties, comments — every field
-    // family the wire form carries
+  /** Rich fixture: stats (histogram blob), a partitioned table with
+    * recovered partitions, table properties — every field family the
+    * wire form carries. Returns the `withStats` export. */
+  private def richFixture(): CatalogSnapshot = {
     spark.sql("DROP DATABASE IF EXISTS graft_rleq CASCADE")
     spark.sql("CREATE DATABASE graft_rleq")
     spark.sql(s"""CREATE TABLE graft_rleq.nation_eq
@@ -2887,23 +2886,157 @@ class CatalogSpec extends SparkSpec {
     spark.catalog.recoverPartitions("graft_rleq.li_eq")
     val snap = CatalogTransfer.export(spark, Seq("graft_rleq"),
       withStats = true)
-    val sparkDir = Tables.scratch(sf, "rleq_spark_written")
-    val localDir = Tables.scratch(sf, "rleq_local_written")
-    CatalogTransfer.write(spark, snap, sparkDir)
-    CatalogTransfer.writeLocal(snap, localDir)
-    for (dir <- Seq(sparkDir, localDir)) {
-      val viaSpark = CatalogTransfer.read(spark, dir)
-      val viaLocal = CatalogTransfer.readLocal(dir)
-      assert(viaLocal == viaSpark,
-        s"readLocal diverges from the Spark reader on $dir")
-      assert(viaLocal.tables.exists(t => t.name == "nation_eq" &&
-        t.stats.exists(_.key == "n_nationkey.version") &&
-        t.stats.exists(_.key.endsWith(".histogram"))),
-        "fixture did not exercise the stats/histogram wire fields")
-      assert(viaLocal.tables.exists(t => t.name == "li_eq" &&
-        t.partitions.size == 3),
-        "fixture did not exercise the partitions dataset")
+    assert(snap.tables.exists(t => t.name == "nation_eq" &&
+      t.stats.exists(_.key == "n_nationkey.version") &&
+      t.stats.exists(_.key.endsWith(".histogram"))),
+      "fixture did not exercise the stats/histogram wire fields")
+    assert(snap.tables.exists(t => t.name == "li_eq" &&
+      t.partitions.size == 3),
+      "fixture did not exercise the partitions sub-dir")
+    snap
+  }
+
+  /** `body`'s result and the Spark jobs started on its behalf (by its
+    * thread and the threads Spark runs its work on, which inherit the
+    * thread's local properties), counted by a SparkListener once the
+    * listener bus has delivered a marker job submitted after `body`
+    * returned. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"graft.jobcount.${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("body") => jobs.incrementAndGet(): Unit
+          case Some("drain") => drained.countDown()
+          case _ =>
+        }
     }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(tag, "drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the drain marker")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a snapshot in the Spark JSON writer's layout reads back equal " +
+      "to the export") {
+    val snap = richFixture()
+    // the on-disk layout earlier versions wrote with one Spark JSON
+    // write job per sub-dir: _SUCCESS, .crc sidecars, uuid-named parts
+    // and a multi-file partitions/
+    val ss = spark
+    import ss.implicits._
+    val dir = Tables.scratch(sf, "rleq_spark_layout")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    spark.createDataset(snap.databases).coalesce(1)
+      .write.json(s"$dir/databases")
+    spark.createDataset(snap.tables.map(_.copy(partitions = Nil)))
+      .coalesce(1).write.json(s"$dir/tables")
+    spark.createDataset(snap.tables.flatMap(t => t.partitions.map(p =>
+        PartitionRow(t.db, t.name, p.spec, p.location, p.stats))))
+      .repartition(3).write.json(s"$dir/partitions")
+    spark.createDataset(snap.functions).coalesce(1)
+      .write.json(s"$dir/functions")
+    def names(sub: String): Seq[String] =
+      new java.io.File(dir, sub).list().toSeq
+    assert(names("partitions").count(_.startsWith("part-")) > 1 &&
+      names("tables").contains("_SUCCESS") &&
+      names("tables").exists(_.endsWith(".crc")),
+      s"not the Spark writer's layout: ${names("partitions")}")
+    assert(CatalogTransfer.read(spark, dir) == snap)
+    assert(CatalogTransfer.readLocal(dir) == snap)
+    // overwriting that layout leaves exactly one part per sub-dir
+    CatalogTransfer.writeLocal(snap, dir)
+    for (sub <- Seq("databases", "tables", "partitions", "functions"))
+      assert(names(sub) == Seq("part-00000.json"), s"$sub: ${names(sub)}")
+    assert(CatalogTransfer.readLocal(dir) == snap)
+  }
+
+  test("export -> write -> read -> importInto schedules zero Spark jobs") {
+    richFixture()
+    val dir = Tables.scratch(sf, "rleq_zero_jobs")
+    val (snap, jobs) = withJobCount {
+      val exported = CatalogTransfer.export(spark, Seq("graft_rleq"),
+        withStats = true)
+      CatalogTransfer.write(spark, exported, dir)
+      spark.sql("DROP DATABASE graft_rleq CASCADE")
+      CatalogTransfer.importInto(spark, CatalogTransfer.read(spark, dir))
+      exported
+    }
+    assert(jobs == 0, s"metadata transfer scheduled $jobs Spark jobs")
+    // and the transfer really happened: the import is a fixed point
+    assert(CatalogTransfer.export(spark, Seq("graft_rleq"),
+      withStats = true) == snap)
+    // the counter sees jobs at all
+    assert(withJobCount(spark.table("graft_rleq.li_eq").count())._2 > 0)
+  }
+
+  test("a dir that is not a snapshot reads loudly, so syncApply never " +
+      "runs against an empty source") {
+    fixture()
+    val missing = Tables.scratch(sf, "catalog_no_such_snapshot")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(missing))
+    intercept[java.io.FileNotFoundException] {
+      CatalogTransfer.syncApply(spark,
+        CatalogTransfer.read(spark, missing), Seq("graft_fix"))
+    }
+    assert(spark.catalog.tableExists("graft_fix.nation_fix"),
+      "a failed read must leave the target catalog untouched")
+    // databases/ and tables/ are both required; partitions/ and
+    // functions/ absent just mean none (pre-split, pre-function)
+    val dir = Tables.scratch(sf, "catalog_partial_snapshot")
+    val snap = CatalogTransfer.export(spark, Seq("graft_fix"))
+    for (sub <- Seq("databases", "tables")) {
+      CatalogTransfer.writeLocal(snap, dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir, sub))
+      intercept[java.io.FileNotFoundException](
+        CatalogTransfer.readLocal(dir))
+    }
+    CatalogTransfer.writeLocal(snap, dir)
+    for (sub <- Seq("partitions", "functions"))
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir, sub))
+    assert(CatalogTransfer.readLocal(dir) == snap)
+  }
+
+  test("a stray half-written temp part is never read, and local " +
+      "snapshots carry no checksum sidecars") {
+    fixture()
+    val snap = CatalogTransfer.export(spark, Seq("graft_fix"))
+    val dir = Tables.scratch(sf, "catalog_torn_part")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    CatalogTransfer.write(spark, snap, dir)
+    import scala.jdk.CollectionConverters._
+    val files = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(dir), null, true).asScala
+      .map(_.getName).toSeq
+    assert(files.nonEmpty && files.forall(_ == "part-00000.json"),
+      s"expected only published parts, found $files")
+    for (sub <- Seq("databases", "tables"))
+      java.nio.file.Files.writeString(
+        new java.io.File(dir, s"$sub/.part-00000.json.tmp").toPath,
+        """{"db":"graft_fix","name":"torn","tableType":"EXT""")
+    assert(CatalogTransfer.read(spark, dir) == snap)
+    assert(CatalogTransfer.readLocal(dir) == snap)
+    // an in-place rewrite reaches a catalog attached before it: it
+    // moves the dir's mtime, which fingerprints a bootstrap snapshot
+    val cat = attachWritable("torn_part_chk", dir)
+    def names = cat.listTables(Array("graft_fix")).map(_.name).toSeq
+    assert(names == Seq("nation_fix"))
+    CatalogTransfer.write(spark, snap.copy(tables =
+      snap.tables.map(_.copy(name = "nation_fix2"))), dir)
+    assert(names == Seq("nation_fix2"), "in-place rewrite served stale")
   }
 
   test("merge-on-read DELETE plans delta-based (WriteDelta), keeps " +

@@ -37,11 +37,27 @@ class S3aSmokeSpec extends SparkSpec {
 
   private val bucket = "s3a://graft-test-bucket"
 
-  test("Tables loads and parquet sinks run unchanged on s3a:// URIs") {
+  /** Run `body` with `s3a://` resolving to [[MockS3aFileSystem]]; its
+    * argument is a fresh local dir, reachable as `s3a://<bucket><dir>`. */
+  private def withMockS3a(body: String => Unit): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     val out = java.nio.file.Files.createTempDirectory("graft_s3a").toString
     hc.set("fs.s3a.impl", classOf[MockS3aFileSystem].getName)
-    try {
+    try body(out)
+    finally {
+      // the mock filesystem lives in the shared session's Hadoop config
+      // AND the JVM-wide FileSystem cache — evict both, or any later
+      // suite in this JVM touching an s3a:// URI silently gets the mock
+      val cached = scala.util.Try(
+        org.apache.hadoop.fs.FileSystem.get(new URI(bucket), hc))
+      hc.unset("fs.s3a.impl")
+      cached.foreach(_.close())
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
+  }
+
+  test("Tables loads and parquet sinks run unchanged on s3a:// URIs") {
+    withMockS3a { out =>
       val sfAbs = new java.io.File(sf).getAbsolutePath
       // fixture read THROUGH the s3a scheme — same Tables call sites
       val region = Tables(spark, s"$bucket$sfAbs", "region")
@@ -53,15 +69,34 @@ class S3aSmokeSpec extends SparkSpec {
       region.write.mode("overwrite").parquet(s"$bucket$out/region_rt")
       assert(spark.read.parquet(s"$bucket$out/region_rt").count() == 5,
         "parquet sink round-trip via s3a:// lost rows")
-    } finally {
-      // the mock filesystem lives in the shared session's Hadoop config
-      // AND the JVM-wide FileSystem cache — evict both, or any later
-      // suite in this JVM touching an s3a:// URI silently gets the mock
-      val cached = scala.util.Try(
-        org.apache.hadoop.fs.FileSystem.get(new URI(bucket), hc))
-      hc.unset("fs.s3a.impl")
-      cached.foreach(_.close())
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
+  }
+
+  test("catalog snapshots write and read back unchanged on s3a:// dirs") {
+    import graft.catalog._
+    val snap = CatalogSnapshot(
+      Seq(DatabaseInfo("graft_s3a", "bucket-resident")),
+      Seq(TableInfo(db = "graft_s3a", name = "events_by_day",
+        tableType = "EXTERNAL", provider = "parquet",
+        location = s"$bucket/warehouse/events",
+        columns = Seq(ColumnInfo("id", "BIGINT", false, false, "row id"),
+          ColumnInfo("day", "STRING", true, true)),
+        properties = Seq(PropKV("owner", "etl")), comment = "daily",
+        viewText = "",
+        partitions = Seq(
+          PartitionInfo(Seq(PropKV("day", "2024-01-01")), ""),
+          PartitionInfo(Seq(PropKV("day", "2024-01-02")),
+            s"$bucket/archive/day=2024-01-02",
+            Seq(PropKV("rowCount", "7")))))),
+      Seq(FunctionInfo("graft_s3a", "f", "com.example.F",
+        Seq(PropKV("jar", s"$bucket/jars/f.jar")))))
+    withMockS3a { out =>
+      CatalogTransfer.write(spark, snap, s"$bucket$out/snap")
+      assert(new java.io.File(s"$out/snap/partitions/part-00000.json").isFile,
+        "the snapshot did not land through the s3a scheme")
+      // a second write overwrites through the same scheme
+      CatalogTransfer.write(spark, snap, s"$bucket$out/snap")
+      assert(CatalogTransfer.read(spark, s"$bucket$out/snap") == snap)
     }
   }
 }
