@@ -1,6 +1,8 @@
 package graft.catalog
 
 import graft.{QueryGroup, Tables}
+import graft.catalog.KeyCatalog.keyed
+import org.apache.commons.io.FileUtils.deleteQuietly
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -35,11 +37,6 @@ object DdlQueries extends QueryGroup {
     new String(java.nio.file.Files.readAllBytes(
       new java.io.File(dir, "HEAD").toPath)).trim.split("\\s+")(0).toInt
 
-  private def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteTree))
-    f.delete(): Unit
-  }
-
   /** Stage a deterministic K-class file layout in ONE Spark job
     * (r19 opt, guide §2.6/§6): derive the class, hash-cluster so every
     * class lands whole in one task (⇒ exactly one file per class),
@@ -53,7 +50,7 @@ object DdlQueries extends QueryGroup {
       target: String): Unit = {
     val stage = target + "_stage" +
       java.util.UUID.randomUUID.toString.take(8)
-    deleteTree(new java.io.File(stage))
+    deleteQuietly(new java.io.File(stage))
     // try/finally: a failure in the staged write or the move loop must
     // not leave a UUID-suffixed _stage dir next to the table location
     try {
@@ -70,7 +67,7 @@ object DdlQueries extends QueryGroup {
       } java.nio.file.Files.move(f.toPath,
         new java.io.File(target,
           s"c${cd.getName.stripPrefix("_c=")}-${f.getName}").toPath)
-    } finally deleteTree(new java.io.File(stage))
+    } finally deleteQuietly(new java.io.File(stage))
   }
 
   /** Hive partition dir names of the files the EXECUTING scan plans —
@@ -111,18 +108,15 @@ object DdlQueries extends QueryGroup {
   /** Export the fixture catalog to a snapshot, DROP it from the
     * session, and register a read-only [[SnapshotCatalog]] over the
     * snapshot — the "second cluster attaches to the shared metastore"
-    * setup shared by every meta_v2_* read key. Returns the catalog
-    * name (keyed by fixture dir — Spark caches plugin instances per
-    * name). */
+    * setup shared by every meta_v2_* read key. Returns the name of
+    * `meta_v2_catalog`'s read-only [[KeyCatalog]] attach. */
   private def v2SnapshotCatalog(s: SparkSession, d: String): String = {
     fixtureCatalog(s, d)
-    val dir = Tables.scratch(d, "v2_snapshot")
-    CatalogTransfer.write(s, CatalogTransfer.export(s, Seq("graft_meta")), dir)
+    val kc = KeyCatalog("meta_v2_catalog", d)
+    CatalogTransfer.write(s, CatalogTransfer.export(s, Seq("graft_meta")),
+      kc.dir)
     s.sql("DROP DATABASE graft_meta CASCADE") // gone from the session
-    val cat = "gsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[SnapshotCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-    cat
+    kc.readOnly(s)
   }
 
   val queries: Map[String, Q] = Map(
@@ -844,20 +838,8 @@ object DdlQueries extends QueryGroup {
     // name with zero DDL re-emission. CatalogSpec covers the rest of
     // the mutation surface (drop semantics, namespace lifecycle,
     // overwrite, cross-instance visibility).
-    "meta_v2_write" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_write_snapshot"))
-        .getAbsolutePath
-      // fresh snapshot per run: wipe data + metadata so the CREATE and
-      // the INSERT are exact regardless of prior runs in this JVM (a
-      // cached catalog instance re-persists from its own state, so the
-      // DDL below leaves disk consistent either way)
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gwsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_write") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.nation_w")
       s.sql(s"""CREATE TABLE $cat.corp.nation_w
                |(n_nationkey INT, n_name STRING, n_regionkey INT)
@@ -866,11 +848,9 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.nation_w
                |SELECT n_nationkey, n_name, n_regionkey
                |FROM nation_src_w""".stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.nation_w").orderBy("n_nationkey")
-    }),
+    },
 
     // CHECK CONSTRAINTS through the V2 catalog (SQL:2023 / Spark 4.1
     // connector constraints API): `ALTER TABLE ... ADD CONSTRAINT ...
@@ -885,16 +865,8 @@ object DdlQueries extends QueryGroup {
     // is exactly the admitted rows. At 100 TB the check rides each
     // write task (scan-shaped, no extra pass); ALTER-time validation
     // of existing data is the engine's job, not the catalog's.
-    "meta_v2_constraint" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_ck_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gksnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_constraint") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.orders_ck")
       s.sql(s"""CREATE TABLE $cat.corp.orders_ck
                |(o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -913,16 +885,14 @@ object DdlQueries extends QueryGroup {
         } catch { case _: Throwable => true }
       require(violated,
         "CHECK constraint did not reject the violating insert")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.sql(
         s"""SELECT o_orderstatus, COUNT(*) AS n_orders,
            |  ROUND(SUM(o_totalprice), 4) AS sum_price,
            |  ROUND(MIN(o_totalprice), 4) AS min_price
            |FROM $cat2.corp.orders_ck
            |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
+    },
 
     // COLUMN DEFAULT VALUES through the V2 catalog (the
     // SUPPORT_COLUMN_DEFAULT_VALUE surface): defaults are catalog
@@ -935,16 +905,8 @@ object DdlQueries extends QueryGroup {
     // the defaults to survive the cluster boundary — and refuses the
     // retroactive form (ADD COLUMN ... DEFAULT) loudly because parquet
     // would read NULL where the metadata promises a value.
-    "meta_v2_column_default" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_dft_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gdsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_column_default") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.orders_dft")
       s.sql(s"""CREATE TABLE $cat.corp.orders_dft
                |(o_orderkey BIGINT,
@@ -962,16 +924,14 @@ object DdlQueries extends QueryGroup {
       // the explicit DEFAULT keyword
       s.sql(s"""INSERT INTO $cat.corp.orders_dft
                |VALUES (9999999L, DEFAULT, DEFAULT)""".stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.sql(
         s"""SELECT status, priority, COUNT(*) AS n_rows,
            |  MIN(o_orderkey) AS lo_key
            |FROM $cat2.corp.orders_dft
            |GROUP BY status, priority
            |ORDER BY status, priority""".stripMargin)
-    }),
+    },
 
     // VIEWS through the V2 catalog — the day-two object of a shared
     // metastore (create a view on one cluster, SELECT it by name on
@@ -988,16 +948,8 @@ object DdlQueries extends QueryGroup {
     // pattern engines with V2 view catalogs use). Resolution cost is
     // pure metadata; filters and projections push through the view
     // into the underlying scans exactly as if inlined.
-    "meta_v2_view" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_view_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gvsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_view") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.nation_vv
                |(n_nationkey INT, n_name STRING, n_regionkey INT)
                |USING parquet""".stripMargin)
@@ -1023,13 +975,11 @@ object DdlQueries extends QueryGroup {
         java.util.Collections.emptyMap[String, String]()))
       // the second cluster: a read-only attach resolves the VIEW by
       // name — zero DDL re-emission
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.sql(s"""SELECT n_regionkey, n_nations, lo_key
                |FROM $cat2.corp.nations_per_region
                |ORDER BY n_regionkey""".stripMargin)
-    }),
+    },
 
     // METADATA-ONLY RENAME through the V2 catalog, cross-namespace
     // (ALTER TABLE ... RENAME TO — the archive/promote move every
@@ -1038,16 +988,8 @@ object DdlQueries extends QueryGroup {
     // rename persists as a revision like any DDL, the OLD name stops
     // resolving, and a second attach reads full content by the NEW
     // name — proving the re-point lost nothing. O(1) in data size.
-    "meta_v2_rename" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_rename_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "grsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_rename") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp_archive")
       s.sql(s"""CREATE TABLE $cat.corp.nation_r
                |(n_nationkey INT, n_name STRING, n_regionkey INT)
@@ -1060,11 +1002,9 @@ object DdlQueries extends QueryGroup {
                |RENAME TO corp_archive.nation_2024""".stripMargin)
       require(!s.catalog.tableExists(s"$cat.corp.nation_r"),
         "old name still resolves after RENAME")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp_archive.nation_2024").orderBy("n_nationkey")
-    }),
+    },
 
     // ZERO-COPY SHALLOW CLONE through the V2 catalog (the lakehouse
     // CLONE / register-elsewhere move): the clone is a NEW catalog
@@ -1078,16 +1018,8 @@ object DdlQueries extends QueryGroup {
     // checks clone and source read the same row count, drops the
     // clone, and reads the original back through a second attach —
     // the whole clone lifecycle never touched data.
-    "meta_v2_clone" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_clone_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "glsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_clone") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_cl
                |(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
                |USING parquet""".stripMargin)
@@ -1095,7 +1027,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_cl
                |SELECT o_orderkey, o_custkey, o_totalprice
                |FROM orders_src_cl""".stripMargin)
-      val loc = s"$dir/_warehouse/corp/orders_cl"
+      val loc = s"${kc.dir}/_warehouse/corp/orders_cl"
       def dataFiles: Seq[String] = Option(new java.io.File(loc).list())
         .toSeq.flatten.filter(_.endsWith(".parquet")).sorted
       val before = dataFiles
@@ -1111,14 +1043,12 @@ object DdlQueries extends QueryGroup {
       s.sql(s"DROP TABLE $cat.corp.orders_cl_clone")
       require(dataFiles == before,
         "DROP of the clone must keep the shared files (EXTERNAL)")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_cl")
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // MERGE INTO (upsert) on a shared-catalog table, COPY-ON-WRITE —
     // the row-level operation lakehouse engines implement by rewriting
@@ -1136,16 +1066,8 @@ object DdlQueries extends QueryGroup {
     // copy-on-write atomicity argument. At 100 TB the rewrite is
     // partition-pruned to the partitions the delta touches; this key
     // rewrites the whole (unpartitioned) fixture table.
-    "meta_v2_merge" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_merge_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gusnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_merge") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_t
                |(o_orderkey BIGINT, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1169,17 +1091,15 @@ object DdlQueries extends QueryGroup {
            |FROM $cat.corp.orders_t t
            |LEFT ANTI JOIN upd_m u
            |  ON t.o_orderkey = u.o_orderkey""".stripMargin)
-      val gen2 = s"$dir/gen2"
+      val gen2 = s"${kc.dir}/gen2"
       merged.write.mode("overwrite").parquet(gen2)
       s.sql(s"ALTER TABLE $cat.corp.orders_t SET LOCATION '$gen2'")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_t")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // STOCK row-level DML — the same upsert story as meta_v2_merge,
     // but as the SQL STATEMENTS a user types at the provisioned
@@ -1193,16 +1113,8 @@ object DdlQueries extends QueryGroup {
     // swap-time OCC). The oracle replays the three statements as pure
     // SELECT algebra in DuckDB (update = CASE, delete = filter,
     // merge = left join + anti union) — a MERGE-free recomputation.
-    "meta_v2_rowlevel" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_rowlevel_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gysnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_rowlevel") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_rl
                |(o_orderkey BIGINT, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1230,14 +1142,12 @@ object DdlQueries extends QueryGroup {
                |  o_totalprice = u.o_totalprice
                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       // fresh read-only attach resolves the post-DML generation
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_rl")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // The FULL stock MERGE clause surface in one statement — what
     // distinguishes a real MERGE planner from an upsert shim:
@@ -1249,16 +1159,8 @@ object DdlQueries extends QueryGroup {
     // Same SupportsRowLevelOperations ReplaceData path and COW swap as
     // meta_v2_rowlevel; the oracle replays all five clauses as SELECT
     // algebra with the same clause-precedence semantics.
-    "meta_v2_merge_full" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_mergefull_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gzsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_merge_full") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mf
                |(o_orderkey BIGINT, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1284,14 +1186,12 @@ object DdlQueries extends QueryGroup {
                |  THEN UPDATE SET o_orderstatus = 'S'
                |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey % 8 = 5
                |  THEN DELETE""".stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mf")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // PARTITION-SCOPED stock MERGE — group = hive partition, the
     // scale-correct granularity for row-level DML on a partitioned
@@ -1308,16 +1208,8 @@ object DdlQueries extends QueryGroup {
     // the difference between rewriting a table and rewriting the
     // day's partition. Atomicity/OCC identical to meta_v2_rowlevel
     // (same location-swap publish point).
-    "meta_v2_merge_scoped" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_mscoped_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gqsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_merge_scoped") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_ps
                |(o_orderkey BIGINT, o_totalprice DOUBLE,
                | o_orderstatus STRING)
@@ -1326,7 +1218,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_ps
                |SELECT o_orderkey, o_totalprice, o_orderstatus
                |FROM orders_src_ms""".stripMargin)
-      val loc = s"$dir/_warehouse/corp/orders_ps"
+      val loc = s"${kc.dir}/_warehouse/corp/orders_ps"
       def filesAt(root: String, p: String): Seq[String] =
         Option(new java.io.File(s"$root/o_orderstatus=$p").list())
           .toSeq.flatten
@@ -1355,10 +1247,10 @@ object DdlQueries extends QueryGroup {
       // the swap must have published a FRESH generation whose
       // untouched partitions carry the IDENTICAL file set (hard
       // links, zero churn — the meta_v2_clone discipline)
-      val head = new java.io.File(dir, "HEAD")
+      val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"$dir/revs/$rev").tables
+      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_ps").get.location
       require(loc2 != loc, "merge must publish a fresh generation")
       val afterF = filesAt(loc2, "F")
@@ -1366,16 +1258,13 @@ object DdlQueries extends QueryGroup {
       require(afterF == beforeF && afterO == beforeO,
         "untouched partitions must keep identical file sets " +
           s"(zero churn): F $afterF vs $beforeF")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_ps")
         .select(col("o_orderkey"),
           round(col("o_totalprice"), 4).as("o_totalprice"),
           col("o_orderstatus"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // MERGE-ON-READ stock DELETE — the other half of the lakehouse DML
     // cost model (meta_v2_rowlevel's COW is exact but O(table); this
@@ -1391,16 +1280,8 @@ object DdlQueries extends QueryGroup {
     // keys — fresh files are in no sidecar's applies-to set, so the
     // re-inserts are live while the original rows stay hidden. Full
     // machinery + 100 TB cost model: MorOps.scala.
-    "meta_v2_mor_delete" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_mordel_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmdsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_delete") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mor
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1417,17 +1298,17 @@ object DdlQueries extends QueryGroup {
             !f.getName.startsWith("_"))
           .map(f => f.getName -> java.nio.file.Files
             .getAttribute(f.toPath, "unix:ino")).toMap
-      val loc0 = s"$dir/_warehouse/corp/orders_mor"
+      val loc0 = s"${kc.dir}/_warehouse/corp/orders_mor"
       val before = inodes(loc0)
       require(before.nonEmpty, "fixture landed no data files")
       s.sql(s"DELETE FROM $cat.corp.orders_mor WHERE o_orderkey % 16 = 0")
       s.sql(s"""DELETE FROM $cat.corp.orders_mor
                |WHERE o_orderstatus = 'F' AND o_orderkey % 16 = 5"""
         .stripMargin)
-      val head = new java.io.File(dir, "HEAD")
+      val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"$dir/revs/$rev").tables
+      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_mor").get.location
       require(loc2 != loc0, "each DELETE must publish a fresh generation")
       // the merge-on-read contract: byte-identical data files (same
@@ -1447,15 +1328,12 @@ object DdlQueries extends QueryGroup {
                |FROM orders_src_mor
                |WHERE o_orderkey % 4 < 2 AND o_orderkey % 16 = 0"""
         .stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mor")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // MERGE-ON-READ × PARTITIONED — the composition production fact
     // tables need (they are almost always partitioned): the
@@ -1473,16 +1351,8 @@ object DdlQueries extends QueryGroup {
     // sequence-number rule). Reads apply only each file's partition's
     // sidecars (partition-qualified file identity). Full machinery +
     // cost model: MorOps.scala (MorPartitionedTable).
-    "meta_v2_mor_scoped_delete" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_morsd_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmsdsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_scoped_delete") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_msd
                |(o_orderkey BIGINT NOT NULL, o_totalprice DOUBLE,
                | o_orderstatus STRING)
@@ -1496,8 +1366,8 @@ object DdlQueries extends QueryGroup {
                |FROM orders_src_msd WHERE o_orderkey % 4 < 2"""
         .stripMargin)
       def headLoc(): String = CatalogTransfer.readLocal(
-        s"$dir/revs/${new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(dir, "HEAD").toPath)).trim
+        s"${kc.dir}/revs/${new String(java.nio.file.Files.readAllBytes(
+          new java.io.File(kc.dir, "HEAD").toPath)).trim
           .split("\\s+")(0).toInt}").tables
         .find(_.name == "orders_msd").get.location
       def inodes(root: String): Map[String, Any] =
@@ -1546,16 +1416,13 @@ object DdlQueries extends QueryGroup {
                |FROM orders_src_msd
                |WHERE o_orderkey % 4 < 2 AND o_orderkey % 16 = 0"""
         .stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_msd")
         .select(col("o_orderkey"),
           round(col("o_totalprice"), 4).as("o_totalprice"),
           col("o_orderstatus"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // COW-over-MOR: an UPDATE on a table with OUTSTANDING delete
     // sidecars — the correctness trap of per-command DML modes
@@ -1566,16 +1433,8 @@ object DdlQueries extends QueryGroup {
     // them — and its fresh COW generation materializes the delete
     // vectors (no _deletes dir survives, asserted). The oracle's
     // delete-then-update replay proves no resurrection row-for-row.
-    "meta_v2_mor_update" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_morupd_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmusnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_update") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mu
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1591,23 +1450,20 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""UPDATE $cat.corp.orders_mu
                |SET o_totalprice = o_totalprice * 1.10D
                |WHERE o_orderkey % 4 = 0""".stripMargin)
-      val head = new java.io.File(dir, "HEAD")
+      val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"$dir/revs/$rev").tables
+      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_mu").get.location
       require(!new java.io.File(loc2, "_deletes").exists(),
         "the COW UPDATE must materialize the delete vectors — no " +
           "_deletes dir may survive into its generation")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mu")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // DELTA-based UPDATE (graft.update.mode=merge-on-read) — the last
     // O(table) DML statement killed: the same statement the COW
@@ -1621,16 +1477,8 @@ object DdlQueries extends QueryGroup {
     // file comes through as the SAME inode (hard link, zero rewrite,
     // asserted) and the _deletes dir SURVIVES with the update's new
     // sidecar accumulated next to the delete's.
-    "meta_v2_mor_update_delta" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_morupdd_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmudsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_update_delta") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mud
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1650,8 +1498,8 @@ object DdlQueries extends QueryGroup {
           .map(f => f.getName -> java.nio.file.Files
             .getAttribute(f.toPath, "unix:ino")).toMap
       def headLoc(): String = CatalogTransfer.readLocal(
-        s"$dir/revs/${new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(dir, "HEAD").toPath)).trim
+        s"${kc.dir}/revs/${new String(java.nio.file.Files.readAllBytes(
+          new java.io.File(kc.dir, "HEAD").toPath)).trim
           .split("\\s+")(0).toInt}").tables
         .find(_.name == "orders_mud").get.location
       val loc1 = headLoc()
@@ -1680,15 +1528,12 @@ object DdlQueries extends QueryGroup {
         .count(_.endsWith(".keys"))
       require(sidecars >= 2,
         s"expected the delete's + the update's sidecars, got $sidecars")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mud")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // Sidecar COMPACTION — the maintenance op that BOUNDS what readers
     // pay for merge-on-read (the sidecar probe is the price of O(|Δ|)
@@ -1699,16 +1544,8 @@ object DdlQueries extends QueryGroup {
     // row path (a MorScan wraps the parquet scan); AFTER, the
     // UNWRAPPED stock vectorized scan — merge-on-read costs nothing
     // once compacted. Content invariance is the oracle.
-    "meta_v2_mor_compact" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_morcmp_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmcsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_compact") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mc
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1736,15 +1573,15 @@ object DdlQueries extends QueryGroup {
       // the operational trigger: outstanding sidecar volume is the
       // page-on signal an operator compacts at
       require(Mor.sidecarBytes(CatalogTransfer
-        .readLocal(s"$dir/revs/${new String(java.nio.file.Files
-          .readAllBytes(new java.io.File(dir, "HEAD").toPath))
+        .readLocal(s"${kc.dir}/revs/${new String(java.nio.file.Files
+          .readAllBytes(new java.io.File(kc.dir, "HEAD").toPath))
           .trim.split("\\s+")(0).toInt}").tables
         .find(_.name == "orders_mc").get.location) > 0L,
         "sidecarBytes must report the outstanding delete volume")
-      val head = new java.io.File(dir, "HEAD")
+      val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"$dir/revs/$rev").tables
+      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_mc").get.location
       // the compaction: merged rows → clean generation (gc-recognized
       // `_rl` naming), atomic swap — same primitive as meta_v2_compact
@@ -1760,15 +1597,12 @@ object DdlQueries extends QueryGroup {
         "compaction must clear the sidecars")
       require(post.count() == nPre,
         "compaction changed the table's content")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mc")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // AUTO-COMPACTION policy — the consumer of Mor.sidecarBytes, the
     // signal the sidecar design documents as the compaction page-on:
@@ -1785,17 +1619,9 @@ object DdlQueries extends QueryGroup {
     // report's decision columns and post-state are deterministic; the
     // measured byte signals are engine-asserted (non-vacuous) but not
     // returned — they vary with task layout.
-    "meta_v2_mor_autocompact" -> ((s, d) => {
+    keyed("meta_v2_mor_autocompact") { (s, d, kc) =>
       import s.implicits._
-      val dir = new java.io.File(Tables.scratch(d, "v2_morac_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmacsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+      val cat = kc.fresh(s)
       Tables(s, d, "orders").createOrReplaceTempView("orders_src_mac")
       for (t <- Seq("orders_ac1", "orders_ac2")) {
         s.sql(s"""CREATE TABLE $cat.corp.$t
@@ -1815,7 +1641,7 @@ object DdlQueries extends QueryGroup {
         .stripMargin)
       // one key lives in one file -> exactly one single-task sidecar
       s.sql(s"DELETE FROM $cat.corp.orders_ac2 WHERE o_orderkey = 1")
-      val report = MorMaintenance.autoCompact(s, cat, dir,
+      val report = MorMaintenance.autoCompact(s, cat, kc.dir,
         maxSidecars = 2, maxSidecarBytes = Long.MaxValue)
       require(report.map(_.table) == Seq("orders_ac1", "orders_ac2"),
         s"report must cover both MOR tables: $report")
@@ -1840,7 +1666,7 @@ object DdlQueries extends QueryGroup {
         .toDF("tbl", "compacted", "sidecars_after", "scan_before",
           "scan_after", "n_rows")
         .orderBy("tbl")
-    }),
+    },
 
     // MERGE-ON-READ stock MERGE — the capstone that makes the MOR
     // family complete (DELETE + MERGE both O(delta)): with
@@ -1855,16 +1681,8 @@ object DdlQueries extends QueryGroup {
     // delta. A three-clause MERGE (conditional matched update, matched
     // delete fallthrough, not-matched insert) exercises all writer
     // paths in one statement; the oracle replays the clause algebra.
-    "meta_v2_mor_merge" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_mormrg_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmmsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_mor_merge") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_mm
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1882,7 +1700,7 @@ object DdlQueries extends QueryGroup {
             !f.getName.startsWith("_"))
           .map(f => f.getName -> java.nio.file.Files
             .getAttribute(f.toPath, "unix:ino")).toMap
-      val loc0 = s"$dir/_warehouse/corp/orders_mm"
+      val loc0 = s"${kc.dir}/_warehouse/corp/orders_mm"
       val before = inodes(loc0)
       require(before.nonEmpty, "fixture landed no data files")
       // delta: even keys updated (+5%) unless tiny — those delete;
@@ -1903,10 +1721,10 @@ object DdlQueries extends QueryGroup {
                |WHEN NOT MATCHED THEN INSERT
                |  (o_orderkey, o_orderstatus, o_totalprice)
                |  VALUES (u.o_orderkey, 'N', u.o_totalprice)""".stripMargin)
-      val head = new java.io.File(dir, "HEAD")
+      val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"$dir/revs/$rev").tables
+      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_mm").get.location
       require(loc2 != loc0, "merge must publish a fresh generation")
       val after = inodes(loc2)
@@ -1919,15 +1737,12 @@ object DdlQueries extends QueryGroup {
       require(Option(new java.io.File(loc2, "_deletes").list()).toSeq
         .flatten.exists(_.endsWith(".keys")),
         "MOR merge landed no delete sidecar")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.orders_mm")
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // CHANGE DATA FEED from the merge-on-read artifacts — the CDC read
     // the sidecar design gives away for free (the lakehouse CDF
@@ -1943,16 +1758,8 @@ object DdlQueries extends QueryGroup {
     // (update + insert clauses), and a plain INSERT INTO append — and
     // the feed nets them into delete / update_preimage /
     // update_postimage / insert rows, all four proven non-vacuous.
-    "meta_v2_changefeed" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_morcdf_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gcfsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_changefeed") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_cf
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -1964,9 +1771,9 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_cf
                |SELECT o_orderkey, o_orderstatus, o_totalprice
                |FROM orders_src_cf WHERE o_orderkey % 4 < 2""".stripMargin)
-      def headRev(): Int = headRevAt(dir)
+      def headRev(): Int = headRevAt(kc.dir)
       def locAt(rev: Int): String = CatalogTransfer
-        .readLocal(s"$dir/revs/$rev").tables
+        .readLocal(s"${kc.dir}/revs/$rev").tables
         .find(_.name == "orders_cf").get.location
       val revA = headRev()
       val locA = locAt(revA)
@@ -1991,10 +1798,7 @@ object DdlQueries extends QueryGroup {
                |FROM orders_src_cf WHERE o_orderkey % 16 = 9""".stripMargin)
       val revB = headRev()
       val locB = locAt(revB)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val stateA = s.sql(
         s"SELECT * FROM $cat2.corp.orders_cf VERSION AS OF '$revA'")
       val feed = MorChangeFeed.between(s, stateA, locA, locB,
@@ -2006,7 +1810,7 @@ object DdlQueries extends QueryGroup {
       feed.select(col("op"), col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey", "op")
-    }),
+    },
 
     // CROSS-TABLE ATOMIC PUBLISH — the namespace-cutover form of the
     // reference's migration (README_en.md:3): N tables re-point at
@@ -2020,16 +1824,8 @@ object DdlQueries extends QueryGroup {
     // consistent at both surrounding revisions (old+old via VERSION AS
     // OF, new+new at head); a stale-staged retry fails all-or-nothing.
     // The oracle replays both phases of both tables.
-    "meta_v2_txn_publish" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_txnpub_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gtxsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_txn_publish") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_tp
                |(o_orderkey BIGINT, o_totalprice DOUBLE)
                |USING parquet""".stripMargin)
@@ -2044,9 +1840,9 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.cust_tp
                |SELECT c_custkey, c_acctbal FROM cust_src_tp
                |WHERE c_custkey % 4 = 0""".stripMargin)
-      def headRev(): Int = headRevAt(dir)
+      def headRev(): Int = headRevAt(kc.dir)
       val revA = headRev()
-      val snapA = CatalogTransfer.readLocal(s"$dir/revs/$revA")
+      val snapA = CatalogTransfer.readLocal(s"${kc.dir}/revs/$revA")
       val tiO = snapA.tables.find(_.name == "orders_tp").get
       val tiC = snapA.tables.find(_.name == "cust_tp").get
       def norm(l: String): String =
@@ -2065,7 +1861,7 @@ object DdlQueries extends QueryGroup {
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_txn",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", dir)))
+          java.util.Map.of("path", kc.dir)))
       plug.publishAll(Seq(tiO -> genO, tiC -> genC))
       val revB = headRev()
       require(revB == revA + 1,
@@ -2082,10 +1878,7 @@ object DdlQueries extends QueryGroup {
       require(stale, "a stale-staged publish must fail loudly")
       require(headRev() == revB,
         "a refused publish must not land a revision")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       // the pair is consistent at BOTH revisions: old+old, new+new
       def phase(rev: Int, tag: String): org.apache.spark.sql.DataFrame =
         s.sql(s"""SELECT * FROM $cat2.corp.orders_tp
@@ -2101,7 +1894,7 @@ object DdlQueries extends QueryGroup {
                 round(col("c_acctbal"), 4).as("val")))
       phase(revA, "pre").unionByName(phase(revB, "post"))
         .orderBy("phase", "tbl", "k")
-    }),
+    },
 
     // CHANGE DATA FEED for PARTITION-SCOPED COW tables
     // ([[PartitionCowChangeFeed]]) — CDC derived from artifacts the
@@ -2147,16 +1940,8 @@ object DdlQueries extends QueryGroup {
     // four revisions' row-level diffs relationally. Batches stage
     // their range to parquet before serving — an exactly-once sink
     // replaying a batch after vacuum still reads it byte-identical.
-    "stream_changefeed_source" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_scfsrc_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gscfsrc_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("stream_changefeed_source") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_cs
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -2168,7 +1953,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_cs
                |SELECT o_orderkey, o_orderstatus, o_totalprice
                |FROM orders_src_cs WHERE o_orderkey % 4 < 2""".stripMargin)
-      val revBase = headRevAt(dir)
+      val revBase = headRevAt(kc.dir)
       // three delta revisions: delete, merge (update + insert), insert
       s.sql(s"DELETE FROM $cat.corp.orders_cs WHERE o_orderkey % 16 = 0")
       s.sql(
@@ -2197,17 +1982,17 @@ object DdlQueries extends QueryGroup {
                |WHEN MATCHED THEN UPDATE SET
                |  o_totalprice = u.o_totalprice * 0.90D,
                |  o_orderstatus = 'V'""".stripMargin)
-      require(headRevAt(dir) == revBase + 3,
+      require(headRevAt(kc.dir) == revBase + 3,
         s"expected 3 delta revisions past $revBase")
       val out = Tables.scratch(d, "stream_cs_out")
       val cp = Tables.scratch(d, "stream_cs_cp")
-      deleteTree(new java.io.File(out))
-      deleteTree(new java.io.File(cp))
+      deleteQuietly(new java.io.File(out))
+      deleteQuietly(new java.io.File(cp))
       val batchRevs =
         new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
       def run(): Unit = {
         val q = s.readStream.format("graft-changefeed")
-          .option("snapshot", dir).option("db", "corp")
+          .option("snapshot", kc.dir).option("db", "corp")
           .option("table", "orders_cs").option("key", "o_orderkey")
           .option("startRevision", revBase.toString)
           .option("maxRevisionsPerTrigger", "1")
@@ -2250,18 +2035,10 @@ object DdlQueries extends QueryGroup {
           round(col("o_totalprice"), 4).as("o_totalprice"),
           (col("_rev") - lit(revBase)).cast("int").as("rev_seq"))
         .orderBy("rev_seq", "o_orderkey", "op")
-    }),
+    },
 
-    "stream_changefeed_upsert" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_scf_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gscf_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("stream_changefeed_upsert") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_scf
                |(o_orderkey BIGINT NOT NULL, o_orderstatus STRING,
                | o_totalprice DOUBLE)
@@ -2273,20 +2050,17 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_scf
                |SELECT o_orderkey, o_orderstatus, o_totalprice
                |FROM orders_src_scf WHERE o_orderkey % 4 < 2""".stripMargin)
-      val revBase = headRevAt(dir)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val revBase = headRevAt(kc.dir)
+      val cat2 = kc.readOnly(s)
       def stateAt(ss: SparkSession)(r: Int) = ss.sql(
         s"SELECT * FROM $cat2.corp.orders_scf VERSION AS OF '$r'")
       val out = Tables.scratch(d, "stream_scf_state")
       if (java.nio.file.Files.isSymbolicLink( // generation symlink
           java.nio.file.Paths.get(out)))
         java.nio.file.Files.delete(java.nio.file.Paths.get(out))
-      deleteTree(new java.io.File(out))
-      deleteTree(new java.io.File(out + "_applied"))
-      deleteTree(new java.io.File(out + "_gen"))
+      deleteQuietly(new java.io.File(out))
+      deleteQuietly(new java.io.File(out + "_applied"))
+      deleteQuietly(new java.io.File(out + "_gen"))
       ChangeFeedStream.bootstrap(out, revBase, stateAt(s)(revBase))
       // three delta commits — each publishes one revision
       s.sql(s"DELETE FROM $cat.corp.orders_scf WHERE o_orderkey % 16 = 0")
@@ -2320,18 +2094,18 @@ object DdlQueries extends QueryGroup {
                |WHEN NOT MATCHED THEN INSERT
                |  (o_orderkey, o_orderstatus, o_totalprice)
                |  VALUES (u.o_orderkey, 'M', u.o_totalprice)""".stripMargin)
-      val revHead = headRevAt(dir)
+      val revHead = headRevAt(kc.dir)
       require(revHead == revBase + 3,
         s"expected 3 delta revisions, got $revBase -> $revHead")
       // one marker per revision into the stream source
       val src = Tables.scratch(d, "stream_scf_marks")
-      deleteTree(new java.io.File(src))
+      deleteQuietly(new java.io.File(src))
       new java.io.File(src).mkdirs()
       for (r <- (revBase + 1) to revHead)
         java.nio.file.Files.writeString(
           new java.io.File(src, f"r$r%05d.txt").toPath, r.toString)
       val cp = Tables.scratch(d, "stream_scf_cp")
-      deleteTree(new java.io.File(cp))
+      deleteQuietly(new java.io.File(cp))
       val q = s.readStream.format("text")
         .option("maxFilesPerTrigger", 1).load(src)
         .writeStream
@@ -2340,7 +2114,7 @@ object DdlQueries extends QueryGroup {
           val ss = batch.sparkSession
           val upTo = batch.agg(max(col("value").cast("int"))).head()
           if (!upTo.isNullAt(0))
-            ChangeFeedStream.applyUpTo(ss, dir, "corp", "orders_scf",
+            ChangeFeedStream.applyUpTo(ss, kc.dir, "corp", "orders_scf",
               "o_orderkey", out, upTo.getInt(0), stateAt(ss)): Unit
         }
         .option("checkpointLocation", cp)
@@ -2359,19 +2133,11 @@ object DdlQueries extends QueryGroup {
       mat.select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // partitioned complement of meta_v2_changefeed's commit-time CDC.
-    "meta_v2_cdf_scoped" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_cdfsc_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gcdfsc_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_cdf_scoped") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_pc
                |(o_orderkey BIGINT, o_totalprice DOUBLE,
                | o_orderstatus STRING)
@@ -2380,7 +2146,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_pc
                |SELECT o_orderkey, o_totalprice, o_orderstatus
                |FROM orders_src_pc""".stripMargin)
-      val locA = s"$dir/_warehouse/corp/orders_pc"
+      val locA = s"${kc.dir}/_warehouse/corp/orders_pc"
       // statement 1: MERGE confined to partition P (evens re-priced,
       // odd keys re-inserted under new ids)
       s.sql(
@@ -2402,8 +2168,8 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""DELETE FROM $cat.corp.orders_pc
                |WHERE o_orderstatus = 'P' AND o_orderkey % 16 = 3
                |""".stripMargin)
-      def headRev(): Int = headRevAt(dir)
-      val locB = CatalogTransfer.readLocal(s"$dir/revs/${headRev()}")
+      def headRev(): Int = headRevAt(kc.dir)
+      val locB = CatalogTransfer.readLocal(s"${kc.dir}/revs/${headRev()}")
         .tables.find(_.name == "orders_pc").get.location
       // the inode proof: exactly P touched, F and O byte-identical
       val pd = PartitionCowChangeFeed.diff(locA, locB)
@@ -2421,7 +2187,7 @@ object DdlQueries extends QueryGroup {
       feed.select(col("op"), col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey", "op")
-    }),
+    },
 
     // CLUSTERED COMPACTION × AUTO STATS — the lifecycle composition
     // that makes file skipping pay at 100 TB. Phase 1 is the honest
@@ -2438,17 +2204,9 @@ object DdlQueries extends QueryGroup {
     // 8-of-8 interleaved, 1-of-8 clustered — same data, same stats
     // machinery, layout is the lever. The oracle replays the data
     // aggregate over raw parquet.
-    "meta_v2_cluster_stats" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_clstat_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gclsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_cl"
+    keyed("meta_v2_cluster_stats") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_cl"
       s.sql(s"""CREATE TABLE $cat.corp.orders_cl
                |(o_orderkey BIGINT, o_totalprice DOUBLE)
                |USING parquet LOCATION '$loc'
@@ -2483,7 +2241,7 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("files_read_interleaved", lit(readsInterleaved.toLong))
         .withColumn("files_read_clustered", lit(readsClustered.toLong))
-    }),
+    },
 
     // WRITE-AUDIT-PUBLISH over catalog BRANCHES
     // ([[WritableSnapshotCatalog.createBranch]]/`fastForward`) — the
@@ -2500,16 +2258,8 @@ object DdlQueries extends QueryGroup {
     // the migration cutover discipline the reference's transfer story
     // needs: stage, validate against real reads, then one pointer swap
     // — a reader never sees an unaudited row.
-    "meta_v2_branch_wap" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_wap_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gwapsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_branch_wap") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_wap
                |(o_orderkey BIGINT, o_orderstatus STRING,
                | o_totalprice DOUBLE) USING parquet""".stripMargin)
@@ -2517,7 +2267,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.orders_wap
                |SELECT o_orderkey, o_orderstatus, o_totalprice
                |FROM orders_src_wap WHERE o_orderkey % 8 = 2""".stripMargin)
-      def headRev(): Int = headRevAt(dir)
+      def headRev(): Int = headRevAt(kc.dir)
       val revA = headRev()
       val preSum = s.table(s"$cat.corp.orders_wap")
         .agg(round(sum("o_totalprice"), 2)).head.getDouble(0)
@@ -2525,14 +2275,13 @@ object DdlQueries extends QueryGroup {
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_wap",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", dir)))
+          java.util.Map.of("path", kc.dir)))
       require(plug.createBranch("audit") == revA,
         "branch must fork at the current head")
       // WRITE: the staged mutation runs on the BRANCH attach
       val bcat = cat + "_br"
-      s.conf.set(s"spark.sql.catalog.$bcat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$bcat.path", plug.branchDir("audit"))
+      KeyCatalog.attach(s, bcat, classOf[WritableSnapshotCatalog],
+        plug.branchDir("audit"))
       s.sql(s"""UPDATE $bcat.corp.orders_wap
                |SET o_totalprice = o_totalprice * 1.05
                |WHERE o_orderstatus = 'F'""".stripMargin)
@@ -2565,10 +2314,7 @@ object DdlQueries extends QueryGroup {
       require(revB == revA + 1,
         s"publish must be ONE revision, got $revA -> $revB")
       plug.dropBranch("audit"): Unit
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       def ph(tag: String, df: org.apache.spark.sql.DataFrame) =
         df.select(lit(tag).as("phase"), col("o_orderkey").as("k"),
           col("o_orderstatus").as("status"),
@@ -2577,7 +2323,7 @@ object DdlQueries extends QueryGroup {
           s"SELECT * FROM $cat2.corp.orders_wap VERSION AS OF '$revA'"))
         .unionByName(ph("post", s.table(s"$cat2.corp.orders_wap")))
         .orderBy("phase", "k")
-    }),
+    },
 
     // BRANCH REBASE ([[WritableSnapshotCatalog.rebaseBranch]]) — the
     // divergence recourse write-audit-publish needs: main advances on
@@ -2590,16 +2336,8 @@ object DdlQueries extends QueryGroup {
     // refuses loudly naming the object — engine-required on a second
     // branch. At 100 TB all of this is KiB metadata arithmetic; the
     // audit's staged data generations ride along untouched.
-    "meta_v2_branch_rebase" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_rebase_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "grbase_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_branch_rebase") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.nation_rbb
                |(n_nationkey INT, n_name STRING, n_regionkey INT)
                |USING parquet""".stripMargin)
@@ -2610,12 +2348,11 @@ object DdlQueries extends QueryGroup {
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_rb",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", dir)))
+          java.util.Map.of("path", kc.dir)))
       plug.createBranch("audit"): Unit
       val bcat = cat + "_br"
-      s.conf.set(s"spark.sql.catalog.$bcat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$bcat.path", plug.branchDir("audit"))
+      KeyCatalog.attach(s, bcat, classOf[WritableSnapshotCatalog],
+        plug.branchDir("audit"))
       // the audit stages its mutation on the branch...
       s.sql(s"""UPDATE $bcat.corp.nation_rbb SET n_name = lower(n_name)
                |WHERE n_regionkey = 2""".stripMargin)
@@ -2630,7 +2367,7 @@ object DdlQueries extends QueryGroup {
       require(ff.isFailure, "diverged fastForward must refuse")
       // REBASE: three-way merge, new fork = main's head; then publish
       val newBase = plug.rebaseBranch("audit")
-      require(newBase == headRevAt(dir),
+      require(newBase == headRevAt(kc.dir),
         s"rebase must advance the fork to main's head")
       val pubRev = plug.fastForward("audit")
       require(pubRev == newBase + 1,
@@ -2640,9 +2377,8 @@ object DdlQueries extends QueryGroup {
       // table differently — rebase must refuse naming the object
       plug.createBranch("audit2"): Unit
       val b2 = cat + "_br2"
-      s.conf.set(s"spark.sql.catalog.$b2",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$b2.path", plug.branchDir("audit2"))
+      KeyCatalog.attach(s, b2, classOf[WritableSnapshotCatalog],
+        plug.branchDir("audit2"))
       s.sql(s"ALTER TABLE $b2.corp.region_rbb ADD COLUMN note STRING")
       s.sql(s"ALTER TABLE $cat.corp.region_rbb ADD COLUMN audit STRING")
       val c = scala.util.Try(plug.rebaseBranch("audit2"))
@@ -2651,10 +2387,7 @@ object DdlQueries extends QueryGroup {
       plug.dropBranch("audit2"): Unit
       // published state through a read-only attach: branch's UPDATE
       // and main's new table BOTH present
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.nation_rbb")
         .select(lit("nation").as("src"), col("n_nationkey").as("k"),
           col("n_name").as("name"))
@@ -2662,7 +2395,7 @@ object DdlQueries extends QueryGroup {
           .select(lit("region").as("src"), col("r_regionkey").as("k"),
             col("r_name").as("name")))
         .orderBy("src", "k")
-    }),
+    },
 
     // CATALOG ROLLBACK ([[WritableSnapshotCatalog.rollback]]) — undo
     // as a FORWARD commit: rolling back to revision A publishes a new
@@ -2679,16 +2412,8 @@ object DdlQueries extends QueryGroup {
     // 100 TB the whole operation is the usual KiB metadata publish —
     // cost independent of table size, the entire point of undo-by-
     // repointing over undo-by-rewriting.
-    "meta_v2_rollback" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_rollback_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "grbsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_rollback") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.nation_rb")
       s.sql(s"""CREATE TABLE $cat.corp.nation_rb
                |(n_nationkey INT, n_name STRING, n_regionkey INT)
@@ -2697,7 +2422,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"""INSERT INTO $cat.corp.nation_rb
                |SELECT n_nationkey, n_name, n_regionkey
                |FROM nation_src_rb""".stripMargin)
-      def headRev(): Int = headRevAt(dir)
+      def headRev(): Int = headRevAt(kc.dir)
       val revA = headRev()
       // the mutation to undo: a COW UPDATE (new generation, rev B)
       s.sql(s"UPDATE $cat.corp.nation_rb SET n_name = lower(n_name)")
@@ -2707,14 +2432,11 @@ object DdlQueries extends QueryGroup {
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_rb",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", dir)))
+          java.util.Map.of("path", kc.dir)))
       val revC = plug.rollback(revA)
       require(revC == revB + 1,
         s"rollback must be ONE forward revision, got $revB -> $revC")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       def ph(tag: String, df: org.apache.spark.sql.DataFrame) =
         df.select(lit(tag).as("phase"), col("n_nationkey").as("k"),
           col("n_name").as("name"))
@@ -2723,7 +2445,7 @@ object DdlQueries extends QueryGroup {
         .unionByName(ph("pre_rollback", s.sql(
           s"SELECT * FROM $cat2.corp.nation_rb VERSION AS OF '$revB'")))
         .orderBy("phase", "k")
-    }),
+    },
 
     // FILE-LEVEL MIN/MAX SKIPPING ([[FileSkipping]]) — the zone-map
     // half of a lakehouse manifest, catalog-side: analyze() persists
@@ -2742,17 +2464,9 @@ object DdlQueries extends QueryGroup {
     // query over a clustered table touches only files that can match
     // (the Iceberg-manifest / Delta-add-file-stats design, re-expressed
     // over this catalog's KiB-per-table driver metadata).
-    "meta_v2_file_skipping" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_skip_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gskip_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_skip"
+    keyed("meta_v2_file_skipping") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_skip"
       s.sql(s"""CREATE TABLE $cat.corp.orders_skip
                |(o_orderkey BIGINT, o_orderstatus STRING,
                | o_totalprice DOUBLE, o_orderdate DATE)
@@ -2775,10 +2489,7 @@ object DdlQueries extends QueryGroup {
         s"expected exactly 8 stats-covered files, got $covered")
       // the filtered read — served through a SECOND read-only attach,
       // so pruning rides the plain serving path, not a writer cache
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val q = s.table(s"$cat2.corp.orders_skip")
         .filter(col("o_orderkey") < step)
       // pruning evidence from the EXECUTING scan's plan: the pruned
@@ -2792,7 +2503,7 @@ object DdlQueries extends QueryGroup {
             .as("max_date"))
         .withColumn("files_total", lit(covered.toLong))
         .withColumn("files_read", lit(filesRead.toLong))
-    }),
+    },
 
     // INCREMENTAL SHARDED STATS HARVEST ([[FileSkipping.analyze]] v2)
     // — the manifest maintenance leg of file skipping at manifest
@@ -2808,17 +2519,9 @@ object DdlQueries extends QueryGroup {
     // At 100 TB (~10⁵–10⁶ files) this is the difference between a
     // per-swap driver stall re-footering the world and a KiB-sized
     // job over the delta — the Iceberg manifest-list shape.
-    "meta_v2_stats_incremental" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_incstats_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gincst_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_inc"
+    keyed("meta_v2_stats_incremental") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_inc"
       s.sql(s"""CREATE TABLE $cat.corp.orders_inc
                |(o_orderkey BIGINT, o_totalprice DOUBLE)
                |USING parquet LOCATION '$loc'""".stripMargin)
@@ -2842,10 +2545,7 @@ object DdlQueries extends QueryGroup {
       require(r2 == FileSkipping.AnalyzeResult(8, 4, 4),
         s"incremental analyze must harvest ONLY the 4 appended " +
           s"files and reuse the first shard, got $r2")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val q = s.table(s"$cat2.corp.orders_inc")
         .filter(col("o_orderkey") >= 6 * step &&
           col("o_orderkey") < 7 * step)
@@ -2856,7 +2556,7 @@ object DdlQueries extends QueryGroup {
         .withColumn("files_read", lit(filesRead.toLong))
         .withColumn("harvested_2nd", lit(r2.harvested.toLong))
         .withColumn("reused_2nd", lit(r2.reused.toLong))
-    }),
+    },
 
     // STORAGE-PARTITIONED JOIN between two co-partitioned shared-
     // catalog tables — the shuffle-elimination feature of a catalog at
@@ -2876,16 +2576,8 @@ object DdlQueries extends QueryGroup {
     // (localCheckpoint) so the plan that ran IS the plan asserted. At
     // 100 TB this is bucketed-layout maintenance paying for itself:
     // the join reads both sides in place, no exchange of either.
-    "join_spj_copartitioned" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_spj_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gjsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("join_spj_copartitioned") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.fact_o
                |(o_custkey BIGINT, o_totalprice DOUBLE, ob INT)
                |USING parquet PARTITIONED BY (ob)""".stripMargin)
@@ -2902,9 +2594,7 @@ object DdlQueries extends QueryGroup {
                |SELECT c_custkey, c_acctbal,
                |  CAST(c_custkey % 8 AS INT) AS cb
                |FROM customer_spj""".stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       graft.operators.ScaleOps.withConfs(s, Seq(
         "spark.sql.graft.spj.enabled" -> "true",
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
@@ -2925,7 +2615,7 @@ object DdlQueries extends QueryGroup {
         // the one that executes (8 aggregate rows checkpointed)
         agg.localCheckpoint().orderBy("ob")
       }
-    }),
+    },
 
     // PARTITION MANAGEMENT through the V2 catalog (SHOW PARTITIONS —
     // the HMS partition-service read surface the reference provisions;
@@ -2935,16 +2625,8 @@ object DdlQueries extends QueryGroup {
     // SHOW PARTITIONS is a driver-side directory listing — O(|dirs|),
     // independent of data size. The oracle re-derives the expected
     // partition set from the data: layout and content must agree.
-    "meta_v2_partition_mgmt" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pmgmt_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gmsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_partition_mgmt") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.orders_m
                |(o_orderkey BIGINT, o_orderstatus STRING)
                |USING parquet PARTITIONED BY (o_orderstatus)""".stripMargin)
@@ -2954,7 +2636,7 @@ object DdlQueries extends QueryGroup {
         .stripMargin)
       s.sql(s"SHOW PARTITIONS $cat.corp.orders_m")
         .orderBy("partition")
-    }),
+    },
 
     // PERMANENT FUNCTIONS through the V2 catalog — the last metastore
     // object family (HMS CREATE FUNCTION ... AS 'class'): the writable
@@ -2967,23 +2649,13 @@ object DdlQueries extends QueryGroup {
     // the magic-method ScalarFunction binds with codegen. The oracle
     // replays the haversine formula in SQL: the class's arithmetic
     // must match the engine-independent math.
-    "meta_v2_function" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_fn_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gfsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_function") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sessionState.catalogManager.catalog(cat)
         .asInstanceOf[WritableSnapshotCatalog]
         .registerFunction("corp", "hav_km",
           classOf[graft.functions.HaversineKm].getName)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       Tables(s, d, "nation").createOrReplaceTempView("nation_src_f")
       s.sql(s"""SELECT n_nationkey, n_name,
                |  ROUND($cat2.corp.hav_km(
@@ -2991,7 +2663,7 @@ object DdlQueries extends QueryGroup {
                |    CAST(n_nationkey * 13 % 360 AS DOUBLE) - 180 + 0.5,
                |    48.85D, 2.35D), 4) AS dist_km
                |FROM nation_src_f ORDER BY n_nationkey""".stripMargin)
-    }),
+    },
 
     // PARTITIONED CREATE through the writable catalog — the
     // metastore's core object (HMS partition service,
@@ -3018,17 +2690,9 @@ object DdlQueries extends QueryGroup {
     // DML rewrites 1/N of the bytes, and no user query ever mentions
     // the derived column. Bucket fn = pmod (oracle-replayable; murmur
     // would drop in behind the same PartDeriver seam).
-    "meta_v2_part_bucket" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pbkt_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpbkt_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pb"
+    keyed("meta_v2_part_bucket") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pb"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pb
                |(o_orderkey BIGINT, o_custkey BIGINT,
                | o_totalprice DOUBLE)
@@ -3044,10 +2708,7 @@ object DdlQueries extends QueryGroup {
         .filter(_.startsWith("o_custkey_bucket=")).sorted
       require(dirs == (0 to 3).map(i => s"o_custkey_bucket=$i"),
         s"bucket layout missing: $dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       require(!s.table(s"$cat2.corp.orders_pb").columns
           .contains("o_custkey_bucket"),
         "derived bucket column must stay hidden")
@@ -3075,7 +2736,7 @@ object DdlQueries extends QueryGroup {
       require(inodes0.nonEmpty, "bucket 0 empty before the delete")
       s.sql(s"DELETE FROM $cat.corp.orders_pb WHERE o_custkey % 4 = 1")
       val newLoc = CatalogTransfer.readLocal(
-          s"$dir/revs/${headRevAt(dir)}").tables
+          s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_pb").get.location
       require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
         "scoped DELETE must publish a fresh generation")
@@ -3092,7 +2753,7 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("probe_dirs", lit(probeDirs.size.toLong))
         .orderBy("bucket")
-    }),
+    },
 
     // MURMUR3 BUCKET — PARTITIONED BY (bucket_hash(8, key)): Iceberg's
     // production bucket function ((murmur3_x86_32(LE64(v)) & max) % N,
@@ -3107,20 +2768,12 @@ object DdlQueries extends QueryGroup {
     // exactly 1 of the N dirs; scoped DML rewrites one bucket and
     // hard-links the rest. The SQL-replayable CONTENT (post-delete
     // rows) still oracles in DuckDB.
-    "meta_v2_part_bucket_hash" -> ((s, d) => {
+    keyed("meta_v2_part_bucket_hash") { (s, d, kc) =>
       require(BucketHashDeriver.hash(34L) == 2017239379,
         "murmur3-32 bucket hash diverges from Iceberg's published " +
           s"vector: hash(34L) = ${BucketHashDeriver.hash(34L)}")
-      val dir = new java.io.File(Tables.scratch(d, "v2_pbh_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpbh_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_ph"
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_ph"
       s.sql(s"""CREATE TABLE $cat.corp.orders_ph
                |(o_orderkey BIGINT, o_custkey BIGINT,
                | o_totalprice DOUBLE)
@@ -3143,10 +2796,7 @@ object DdlQueries extends QueryGroup {
         .filter(_.startsWith("o_custkey_bhash=")).toSet
       require(dirs == expected.map(b => s"o_custkey_bhash=$b"),
         s"layout diverges from the deriver image: $dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       // POINT-PROBE LAW: 1 of the N dirs
       val probeKey = s.sql(
         "SELECT min(o_custkey) FROM orders_src_ph").head.getLong(0)
@@ -3173,7 +2823,7 @@ object DdlQueries extends QueryGroup {
       s.sql(s"DELETE FROM $cat.corp.orders_ph " +
         s"WHERE o_custkey = $probeKey")
       val newLoc = CatalogTransfer.readLocal(
-          s"$dir/revs/${headRevAt(dir)}").tables
+          s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_ph").get.location
       require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
         "scoped DELETE must publish a fresh generation")
@@ -3194,7 +2844,7 @@ object DdlQueries extends QueryGroup {
         .withColumn("deleted_left", lit(s.table(s"$cat2.corp.orders_ph")
           .filter(col("o_custkey") === probeKey).count()))
         .orderBy("o_orderkey")
-    }),
+    },
 
     // HIDDEN TIME PARTITIONING — PARTITIONED BY (days(o_orderdate)):
     // the catalog lands `o_orderdate_day=yyyy-MM-dd` directories
@@ -3206,17 +2856,9 @@ object DdlQueries extends QueryGroup {
     // time-series fact tables at 100 TB (every retention sweep, every
     // backfill, every dashboard window is a directory subset), with
     // no user-written derived column anywhere.
-    "meta_v2_part_days" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pday_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpday_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pd"
+    keyed("meta_v2_part_days") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pd"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pd
                |(o_orderkey BIGINT, o_orderdate TIMESTAMP,
                | o_totalprice DOUBLE)
@@ -3235,10 +2877,7 @@ object DdlQueries extends QueryGroup {
       val allDirs = Option(new java.io.File(loc).list()).toSeq.flatten
         .count(_.startsWith("o_orderdate_day="))
       require(allDirs > 30, s"day layout missing: $allDirs dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val lo = "1995-03-01"
       val hi = "1995-03-08" // exclusive
       val q = s.table(s"$cat2.corp.orders_pd")
@@ -3257,7 +2896,7 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("dirs_planned", lit(probeDirs.size.toLong))
         .orderBy("day")
-    }),
+    },
 
     // MONTH GRANULARITY — the same [[TimeDeriver]] seam at calendar-
     // month resolution (`o_orderdate_month=yyyy-MM` dirs; years(ts)
@@ -3268,17 +2907,9 @@ object DdlQueries extends QueryGroup {
     // table's months (engine-asserted below, incl. the tight `<` at
     // an exact month boundary). DML composes through the identical
     // deriver-generalized partition-scoped COW as bucket/days.
-    "meta_v2_part_months" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pmon_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpmon_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pm"
+    keyed("meta_v2_part_months") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pm"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pm
                |(o_orderkey BIGINT, o_orderdate TIMESTAMP,
                | o_totalprice DOUBLE)
@@ -3292,10 +2923,7 @@ object DdlQueries extends QueryGroup {
       val allDirs = Option(new java.io.File(loc).list()).toSeq.flatten
         .count(_.startsWith("o_orderdate_month="))
       require(allDirs > 24, s"month layout missing: $allDirs dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val q = s.table(s"$cat2.corp.orders_pm")
         .filter(col("o_orderdate") >=
             to_timestamp(lit("1995-04-01 00:00:00")) &&
@@ -3309,7 +2937,7 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("dirs_planned", lit(probeDirs.size.toLong))
         .orderBy("month")
-    }),
+    },
 
     // COMPOSITE HIDDEN PARTITIONING — PARTITIONED BY (days(ts),
     // bucket(4, key)): the canonical 100 TB fact-table layout, time
@@ -3324,17 +2952,9 @@ object DdlQueries extends QueryGroup {
     // other day carry over BY INODE. At scale: a daily retention sweep
     // or GDPR key purge touches days x 1 bucket of directories, never
     // the table.
-    "meta_v2_part_multi" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pmul_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpmul_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_px"
+    keyed("meta_v2_part_multi") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_px"
       s.sql(s"""CREATE TABLE $cat.corp.orders_px
                |(o_orderkey BIGINT, o_custkey BIGINT,
                | o_orderdate TIMESTAMP, o_totalprice DOUBLE)
@@ -3375,10 +2995,7 @@ object DdlQueries extends QueryGroup {
       require(dayDirs.forall(dd => Option(dd.list()).toSeq.flatten
           .exists(_.startsWith("o_custkey_bucket="))),
         "bucket dirs missing under day dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       require(!s.table(s"$cat2.corp.orders_px").columns.exists(c =>
           c == "o_orderdate_day" || c == "o_custkey_bucket"),
         "derived columns must stay hidden")
@@ -3461,7 +3078,7 @@ object DdlQueries extends QueryGroup {
                |  AND o_custkey % 4 = $tBucket AND o_orderkey % 2 = 0"""
         .stripMargin)
       val newLoc = CatalogTransfer.readLocal(
-          s"$dir/revs/${headRevAt(dir)}").tables
+          s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_px").get.location
       require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
         "cell-scoped DELETE must publish a fresh generation")
@@ -3489,7 +3106,7 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("probe_cells", lit(probeCells.size.toLong))
         .orderBy("day", "bucket")
-    }),
+    },
 
     // TRANSFORM-AWARE COMPACTION ([[TransformCompaction]]) — the
     // small-file story for hidden-partitioned tables: each clustered
@@ -3503,17 +3120,9 @@ object DdlQueries extends QueryGroup {
     // harvested == compacted cells, reused == linked files). The
     // daily-append maintenance loop at 100 TB: O(small cells) work,
     // never a table rewrite.
-    "meta_v2_part_compact" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pcmp_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpcmp_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pc"
+    keyed("meta_v2_part_compact") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pc"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pc
                |(o_orderkey BIGINT, o_orderdate TIMESTAMP,
                | o_totalprice DOUBLE)
@@ -3556,8 +3165,8 @@ object DdlQueries extends QueryGroup {
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_pc",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", dir)))
-      val ti = CatalogTransfer.readLocal(s"$dir/revs/${headRevAt(dir)}")
+          java.util.Map.of("path", kc.dir)))
+      val ti = CatalogTransfer.readLocal(s"${kc.dir}/revs/${headRevAt(kc.dir)}")
         .tables.find(_.name == "orders_pc").get
       val res = TransformCompaction.compact(s, plug, ti, minFiles = 2)
       require(res.compacted.toSet == multi &&
@@ -3592,7 +3201,7 @@ object DdlQueries extends QueryGroup {
         .withColumn("cells_compacted", lit(multi.size.toLong))
         .withColumn("cells_linked", lit(single.size.toLong))
         .orderBy("day")
-    }),
+    },
 
     // PARTITION SPEC EVOLUTION — ALTER TABLE ... SET TBLPROPERTIES(
     // 'graft.part.evolve'='months(ts)'): a days(ts) table ages into
@@ -3607,17 +3216,9 @@ object DdlQueries extends QueryGroup {
     // This is the Iceberg spec-id idea at generation granularity —
     // the year-two problem (day dirs forever) solved as one metadata
     // revision.
-    "meta_v2_part_evolve" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_pevo_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpevo_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pe"
+    keyed("meta_v2_part_evolve") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pe"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pe
                |(o_orderkey BIGINT, o_orderdate TIMESTAMP,
                | o_totalprice DOUBLE)
@@ -3652,10 +3253,7 @@ object DdlQueries extends QueryGroup {
       require(dirsIn(loc + "_spec1") ==
           Seq("o_orderdate_month=1995-02", "o_orderdate_month=1995-03"),
         s"months leg layout broken: ${dirsIn(loc + "_spec1")}")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       require(!s.table(s"$cat2.corp.orders_pe").columns.exists(c =>
           c == "o_orderdate_day" || c == "o_orderdate_month"),
         "derived columns must stay hidden across the evolution")
@@ -3701,7 +3299,7 @@ object DdlQueries extends QueryGroup {
         .withColumn("probe_b_days", lit(lb(0).size.toLong))
         .withColumn("probe_b_months", lit(lb(1).size.toLong))
         .orderBy("month")
-    }),
+    },
 
     // STRING-PREFIX PARTITIONING — truncate(W, str), the last member
     // of the lakehouse transform set (identity/bucket/days/months/
@@ -3711,17 +3309,9 @@ object DdlQueries extends QueryGroup {
     // probe (1 of 5 dirs) and range predicates translate into stock
     // partition pruning. The layout a URL/tenant/category-keyed 100 TB
     // corpus uses when the key's prefix is its natural shard.
-    "meta_v2_part_truncate" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_ptrc_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gptrc_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
-      val loc = s"$dir/_data/orders_pt"
+    keyed("meta_v2_part_truncate") { (s, d, kc) =>
+      val cat = kc.fresh(s)
+      val loc = s"${kc.dir}/_data/orders_pt"
       s.sql(s"""CREATE TABLE $cat.corp.orders_pt
                |(o_orderkey BIGINT, o_orderpriority STRING,
                | o_totalprice DOUBLE)
@@ -3735,10 +3325,7 @@ object DdlQueries extends QueryGroup {
       val dirs = Option(new java.io.File(loc).list()).toSeq.flatten
         .filter(_.startsWith("o_orderpriority_trunc=")).sorted
       require(dirs.size == 5, s"prefix layout missing: $dirs")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       require(!s.table(s"$cat2.corp.orders_pt").columns
           .contains("o_orderpriority_trunc"),
         "derived prefix column must stay hidden")
@@ -3763,18 +3350,10 @@ object DdlQueries extends QueryGroup {
           round(sum(col("o_totalprice")), 4).as("sum_price"))
         .withColumn("probe_dirs", lit(probeDirs.size.toLong))
         .orderBy("pfx")
-    }),
+    },
 
-    "meta_v2_partitioned" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_part_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_partitioned") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.orders_p")
       s.sql(s"""CREATE TABLE $cat.corp.orders_p
                |(o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -3787,19 +3366,17 @@ object DdlQueries extends QueryGroup {
       // the layout must be REAL partition directories, not a metadata
       // fiction — this is exactly what the V2 write path gets wrong
       val partDirs = Option(new java.io.File(
-          s"$dir/_warehouse/corp/orders_p").list()).toSeq.flatten
+          s"${kc.dir}/_warehouse/corp/orders_p").list()).toSeq.flatten
         .filter(_.startsWith("o_orderstatus="))
       require(partDirs.nonEmpty,
         "INSERT laid out no o_orderstatus=* partition directories")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2", classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.sql(s"""SELECT o_orderstatus, COUNT(*) AS n_orders,
                |  ROUND(SUM(o_totalprice), 4) AS sum_price
                |FROM $cat2.corp.orders_p
                |WHERE o_orderstatus <> 'P'
                |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
+    },
 
     // METADATA TIME TRAVEL: every metadata mutation through the
     // writable catalog appends an immutable numbered revision, and
@@ -3815,16 +3392,8 @@ object DdlQueries extends QueryGroup {
     // the bootstrap snapshot (SnapshotCatalog.snap), so fresh and
     // cached instances alike pin CREATE NAMESPACE at rev 1 and CREATE
     // TABLE at rev 2.
-    "meta_v2_timetravel" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_tt_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gtsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp") // fresh: rev 1
+    keyed("meta_v2_timetravel") { (s, d, kc) =>
+      val cat = kc.fresh(s) // fresh: rev 1
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.tt")        // cached: rev 1
       s.sql(s"""CREATE TABLE $cat.corp.tt
                |(n_nationkey INT, n_name STRING) USING parquet"""
@@ -3845,7 +3414,7 @@ object DdlQueries extends QueryGroup {
           .select(lit("head").as("rev"),
             lit(head.columns.length).as("n_cols"), col("n_rows")))
         .orderBy("rev")
-    }),
+    },
 
     // The REVISION LOG as a queryable table (the DESCRIBE HISTORY
     // counterpart of meta_v2_timetravel — how a user discovers which
@@ -3855,17 +3424,9 @@ object DdlQueries extends QueryGroup {
     // a cached instance reloads the bootstrap snapshot on its next
     // resolution): the DDL sequence below yields rev→(dbs, tables) =
     // 1→(1,0), 2→(1,1), 3→(1,2), 4→(1,1) on every run.
-    "meta_v2_history" -> ((s, d) => {
+    keyed("meta_v2_history") { (s, d, kc) =>
       import s.implicits._
-      val dir = new java.io.File(Tables.scratch(d, "v2_hist_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "ghsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.hist_a")
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.hist_b")
       s.sql(s"CREATE TABLE $cat.corp.hist_a (x INT) USING parquet")
@@ -3873,13 +3434,13 @@ object DdlQueries extends QueryGroup {
       s.sql(s"DROP TABLE $cat.corp.hist_a")
       // read the history straight off the snapshot files — public
       // composition, no plugin-internal access
-      val revs = Option(new java.io.File(s"$dir/revs").list())
+      val revs = Option(new java.io.File(s"${kc.dir}/revs").list())
         .map(_.flatMap(_.toIntOption).sorted.toSeq).getOrElse(Nil)
       revs.map { r =>
-        val snap = CatalogTransfer.read(s, s"$dir/revs/$r")
+        val snap = CatalogTransfer.read(s, s"${kc.dir}/revs/$r")
         (r, snap.databases.length, snap.tables.length)
       }.toDF("rev", "n_dbs", "n_tables").orderBy("rev")
-    }),
+    },
 
     // Small-file COMPACTION on a shared-catalog table, by atomic
     // location swap (the OPTIMIZE maintenance op every append-heavy
@@ -3893,16 +3454,8 @@ object DdlQueries extends QueryGroup {
     // the rewrite is a parallel executor job (here coalesce(1) — the
     // fixture fits one target file); the METADATA swap is O(1)
     // regardless of data size.
-    "meta_v2_compact" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_compact_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gcsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_compact") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.nation_c")
       s.sql(s"""CREATE TABLE $cat.corp.nation_c
                |(n_nationkey INT, n_name STRING) USING parquet""".stripMargin)
@@ -3916,18 +3469,18 @@ object DdlQueries extends QueryGroup {
       def parquetFiles(p: String): Int =
         Option(new java.io.File(p).listFiles)
           .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
-      val oldLoc = s"$dir/_warehouse/corp/nation_c"
+      val oldLoc = s"${kc.dir}/_warehouse/corp/nation_c"
       val before = parquetFiles(oldLoc)
       require(before >= 4, s"expected >=4 pre-compaction files, got $before")
       // rewrite into a fresh generation at target file count
-      val gen2 = s"$dir/_warehouse/corp/nation_c_gen2"
+      val gen2 = s"${kc.dir}/_warehouse/corp/nation_c_gen2"
       s.table(s"$cat.corp.nation_c").coalesce(1)
         .write.mode("overwrite").parquet(gen2)
       s.sql(s"ALTER TABLE $cat.corp.nation_c SET LOCATION '$gen2'")
       require(parquetFiles(gen2) < before,
         s"compaction did not reduce files: ${parquetFiles(gen2)} >= $before")
       s.table(s"$cat.corp.nation_c").orderBy("n_nationkey")
-    }),
+    },
 
     // Revision retention VACUUM — the maintenance op that completes
     // the metadata lifecycle (write → history → time travel → compact
@@ -3943,21 +3496,9 @@ object DdlQueries extends QueryGroup {
     // Revision numbering is deterministic per run (the dir-wipe reset,
     // cf. meta_v2_timetravel), so the report is a cross-engine
     // constant: 5 revisions before, retain 2, head 5.
-    "meta_v2_vacuum" -> ((s, d) => {
+    keyed("meta_v2_vacuum") { (s, d, kc) =>
       import s.implicits._
-      val dir = new java.io.File(Tables.scratch(d, "v2_vacuum_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      // unique per-key prefix: catalog plugin instances are CACHED BY
-      // NAME (the instance pins the path it was constructed with), so
-      // sharing a name with another key silently redirects that key's
-      // DDL into this snapshot dir
-      val cat = "gxsnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")       // rev 1
+      val cat = kc.fresh(s)                                    // rev 1
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.vac_t")           // no-op (1st run)
       s.sql(s"""CREATE TABLE $cat.corp.vac_t
                |(n_nationkey INT, n_name STRING) USING parquet"""
@@ -3987,7 +3528,7 @@ object DdlQueries extends QueryGroup {
         ("revs_before", dropped.length + kept.length),
         ("vacuumed_probe_fails", vacFails))
         .toDF("item", "value").orderBy("item")
-    }),
+    },
 
     // CROSS-CATALOG federation: one SQL statement resolving tables
     // from TWO catalogs by qualified name — the snapshot catalog (the
@@ -4023,16 +3564,14 @@ object DdlQueries extends QueryGroup {
     // fixture-keyed (plugin instances cache construction-time options
     // by name). 100 TB note: the remote side stays dim-sized; the join
     // broadcasts the JDBC side, facts never cross the connector.
-    "meta_jdbc_catalog" -> ((s, d) => {
+    keyed("meta_jdbc_catalog") { (s, d, kc) =>
       System.setProperty("derby.stream.error.file",
         Tables.scratch(d, "derby.log"))
-      val db = new java.io.File(Tables.scratch(d, "jdbc_cat_db"))
-        .getAbsolutePath
-      val cat = "gjdbccat_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val cat = kc.cat
       s.conf.set(s"spark.sql.catalog.$cat",
         "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.url",
-        s"jdbc:derby:;databaseName=$db;create=true")
+        s"jdbc:derby:;databaseName=${kc.dir};create=true")
       s.conf.set(s"spark.sql.catalog.$cat.driver",
         "org.apache.derby.iapi.jdbc.AutoloadedDriver")
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.gmeta")
@@ -4048,7 +3587,7 @@ object DdlQueries extends QueryGroup {
            |FROM $cat.gmeta.nation_dim n
            |JOIN supplier_src_jc sp ON sp.s_nationkey = n.n_nationkey
            |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin)
-    }),
+    },
 
     // COMPUTE pushdown across the federation boundary (r13): with
     // pushDownAggregate/pushDownLimit the V2 JDBC connector compiles
@@ -4058,16 +3597,14 @@ object DdlQueries extends QueryGroup {
     // HashAggregate — asserted in PlanSpec, with TopN pushdown
     // beside it). This is the 100 TB federation contract: the remote
     // side ships one row per group over the wire, never the table.
-    "meta_jdbc_pushdown" -> ((s, d) => {
+    keyed("meta_jdbc_pushdown") { (s, d, kc) =>
       System.setProperty("derby.stream.error.file",
         Tables.scratch(d, "derby.log"))
-      val db = new java.io.File(Tables.scratch(d, "jdbc_pd_db"))
-        .getAbsolutePath
-      val cat = "gjdbcpd_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val cat = kc.cat
       s.conf.set(s"spark.sql.catalog.$cat",
         "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.url",
-        s"jdbc:derby:;databaseName=$db;create=true")
+        s"jdbc:derby:;databaseName=${kc.dir};create=true")
       s.conf.set(s"spark.sql.catalog.$cat.driver",
         "org.apache.derby.iapi.jdbc.AutoloadedDriver")
       s.conf.set(s"spark.sql.catalog.$cat.pushDownAggregate", "true")
@@ -4083,7 +3620,7 @@ object DdlQueries extends QueryGroup {
            |  ROUND(SUM(s_acctbal), 4) AS sum_acctbal
            |FROM $cat.gpd.supp_pd
            |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin)
-    }),
+    },
 
     // USE CATALOG / USE NAMESPACE — the session-state half of the
     // multi-catalog story (meta_v2_federation resolves by THREE-part
@@ -4114,7 +3651,7 @@ object DdlQueries extends QueryGroup {
     // join operator remains (asserted in PlanSpec). The 100 TB
     // federation contract completed: the remote side ships the join
     // RESULT over the wire, never either input table.
-    "meta_jdbc_join_pushdown" -> ((s, d) => {
+    keyed("meta_jdbc_join_pushdown") { (s, d, kc) =>
       System.setProperty("derby.stream.error.file",
         Tables.scratch(d, "derby.log"))
       DerbyJoinDialect.ensureRegistered()
@@ -4125,13 +3662,11 @@ object DdlQueries extends QueryGroup {
       // additionally requires the per-catalog pushDownJoin=true opt-in,
       // which only this key's catalog sets.
       s.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
-      val db = new java.io.File(Tables.scratch(d, "jdbc_jp_db"))
-        .getAbsolutePath
-      val cat = "gjdbcjp_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val cat = kc.cat
       s.conf.set(s"spark.sql.catalog.$cat",
         "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.url",
-        s"jdbc:derby:;databaseName=$db;create=true")
+        s"jdbc:derby:;databaseName=${kc.dir};create=true")
       s.conf.set(s"spark.sql.catalog.$cat.driver",
         "org.apache.derby.iapi.jdbc.AutoloadedDriver")
       s.conf.set(s"spark.sql.catalog.$cat.pushDownJoin", "true")
@@ -4152,7 +3687,7 @@ object DdlQueries extends QueryGroup {
            |JOIN $cat.gjp.nat_jp n ON sp.s_nationkey = n.n_nationkey
            |WHERE sp.s_acctbal > 5000.0
            |ORDER BY sp.s_suppkey""".stripMargin)
-    }),
+    },
 
     // HMS-style schema evolution through the writable catalog,
     // metadata-only (no file rewrite): fill a table, ADD a nullable
@@ -4163,16 +3698,8 @@ object DdlQueries extends QueryGroup {
     // generations coexist under one evolved schema. Own snapshot dir:
     // meta_v2_write wipes ITS dir per run, and verify key order is
     // arbitrary.
-    "meta_v2_alter" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_alter_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gasnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_alter") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.alter_t")
       s.sql(s"""CREATE TABLE $cat.corp.alter_t
                |(n_nationkey INT, n_name STRING) USING parquet""".stripMargin)
@@ -4191,7 +3718,7 @@ object DdlQueries extends QueryGroup {
           min("n_nationkey").as("lo_key"),
           max("n_nationkey").as("hi_key"))
         .orderBy("src")
-    }),
+    },
 
     // TYPE-WIDENING SCHEMA EVOLUTION (ALTER COLUMN ... TYPE BIGINT /
     // DOUBLE) — the metadata-only promotion long-lived tables need:
@@ -4205,16 +3732,8 @@ object DdlQueries extends QueryGroup {
     // generations under the widened schema; a second read-only attach
     // serves it, so the evolution is metastore state, not session
     // state. At 100 TB: zero bytes rewritten — the entire point.
-    "meta_v2_alter_widen" -> ((s, d) => {
-      val dir = new java.io.File(Tables.scratch(d, "v2_widen_snapshot"))
-        .getAbsolutePath
-      deleteTree(new java.io.File(dir))
-      CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gwiden_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+    keyed("meta_v2_alter_widen") { (s, d, kc) =>
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.widen_t
                |(n_nationkey INT, n_name STRING, bal FLOAT)
                |USING parquet""".stripMargin)
@@ -4239,10 +3758,7 @@ object DdlQueries extends QueryGroup {
                |SELECT CAST(n_nationkey + 5000000000 AS BIGINT), n_name,
                |  CAST(n_regionkey AS DOUBLE) + 0.25D
                |FROM nation_src_w""".stripMargin)
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       val t = s.table(s"$cat2.corp.widen_t")
       require(t.schema("n_nationkey").dataType ==
           org.apache.spark.sql.types.LongType &&
@@ -4255,7 +3771,7 @@ object DdlQueries extends QueryGroup {
           sum(col("n_nationkey")).as("key_sum"),
           round(sum(col("bal")), 4).as("bal_sum"))
         .orderBy("gen")
-    }),
+    },
 
     // SQL-over-the-wire: the reference's other service surface — a
     // BI tool / beeline client speaking the HiveServer2 protocol to a

@@ -13,7 +13,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.{CatalogTransfer, MorChangeFeed, SnapshotCatalog}
+import graft.catalog.{CatalogTransfer, KeyCatalog, MorChangeFeed, SnapshotCatalog}
 
 /** DSv2 STREAMING SOURCE for the catalog's change feed — the
   * production composition the `foreachBatch` pager
@@ -162,9 +162,7 @@ private[graft] class ChangeFeedMicroBatchStream(snapDir: String,
     * schema template). */
   private def stateAt(rev: Int): org.apache.spark.sql.DataFrame = {
     val cat = "gcfsrc_" + Integer.toHexString(snapDir.hashCode)
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[SnapshotCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.path", snapDir)
+    KeyCatalog.attach(spark, cat, classOf[SnapshotCatalog], snapDir)
     spark.sql(s"SELECT * FROM $cat.$db.$table VERSION AS OF '$rev'")
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryGroup, Tables}
+import graft.catalog.KeyCatalog.keyed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -656,19 +657,10 @@ object StreamOps extends QueryGroup {
     // producer. AvailableNow drains the backlog exactly-once; the
     // read-back re-aggregates the landed rows, so the oracle is the
     // plain batch aggregate over events.
-    "stream_v2_sink" -> ((s, d) => {
-      val dir = new java.io.File(
-        graft.Tables.scratch(d, "v2_stream_snapshot")).getAbsolutePath
+    keyed("stream_v2_sink") { (s, d, kc) =>
       val cp = graft.Tables.scratch(d, "v2_stream_cp")
-      for (p <- Seq(dir, cp))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      graft.catalog.CatalogTransfer.writeLocal(
-        graft.catalog.CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gssnap_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.catalog.WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
+      val cat = kc.fresh(s)
       s.sql(s"DROP TABLE IF EXISTS $cat.corp.events_sink")
       s.sql(s"""CREATE TABLE $cat.corp.events_sink
                |(event_id BIGINT, event_type STRING, value DOUBLE)
@@ -683,17 +675,14 @@ object StreamOps extends QueryGroup {
         }
         .start()
       q.awaitTermination()
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[graft.catalog.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.events_sink")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_distinct"),
           round(sum(col("value")), 4).as("sum_value"))
         .orderBy("event_type")
-    }),
+    },
 
     // STREAM → PARTITIONED SHARED-CATALOG TABLE: the production shape
     // for landing a stream in a metastore-registered PARTITIONED table
@@ -707,19 +696,10 @@ object StreamOps extends QueryGroup {
     // partition writers are the same executor-parallel machinery as
     // batch `partitionBy`; compaction of the resulting small files is
     // meta_v2_compact's job.
-    "stream_v2_partitioned_sink" -> ((s, d) => {
-      val dir = new java.io.File(
-        graft.Tables.scratch(d, "v2_pstream_snapshot")).getAbsolutePath
+    keyed("stream_v2_partitioned_sink") { (s, d, kc) =>
       val cp = graft.Tables.scratch(d, "v2_pstream_cp")
-      for (p <- Seq(dir, cp))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      graft.catalog.CatalogTransfer.writeLocal(
-        graft.catalog.CatalogSnapshot(Nil, Nil), dir)
-      val cat = "gpsstr_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.catalog.WritableSnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.path", dir)
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corp")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
+      val cat = kc.fresh(s)
       s.sql(s"""CREATE TABLE $cat.corp.events_psink
                |(event_id BIGINT, value DOUBLE, event_type STRING)
                |USING parquet PARTITIONED BY (event_type)""".stripMargin)
@@ -735,14 +715,11 @@ object StreamOps extends QueryGroup {
       q.awaitTermination()
       // the stream must have laid out REAL partition directories
       val partDirs = Option(new java.io.File(
-          s"$dir/_warehouse/corp/events_psink").list()).toSeq.flatten
+          s"${kc.dir}/_warehouse/corp/events_psink").list()).toSeq.flatten
         .filter(_.startsWith("event_type="))
       require(partDirs.size >= 2,
         s"stream laid out no partition dirs: ${partDirs.mkString(",")}")
-      val cat2 = cat + "_ro"
-      s.conf.set(s"spark.sql.catalog.$cat2",
-        classOf[graft.catalog.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat2.path", dir)
+      val cat2 = kc.readOnly(s)
       s.table(s"$cat2.corp.events_psink")
         .filter(col("event_type") =!= "click") // prunes whole directories
         .groupBy("event_type")
@@ -750,7 +727,7 @@ object StreamOps extends QueryGroup {
           countDistinct(col("event_id")).as("n_distinct"),
           round(sum(col("value")), 4).as("sum_value"))
         .orderBy("event_type")
-    })
+    }
   )
 
   val oracles: Map[String, String] = Map(

@@ -453,7 +453,7 @@ class CatalogSpec extends SparkSpec {
   private def v2Cat: String = {
     // registers the V2 plugin + snapshot for this fixture (idempotent)
     SparkEntry.queries("meta_v2_catalog")(spark, sf).count()
-    "gsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    KeyCatalog("meta_v2_catalog", sf).roCat
   }
 
   test("V2 snapshot catalog serves exported tables with no import step") {
@@ -511,7 +511,7 @@ class CatalogSpec extends SparkSpec {
       .select("n_nationkey", "n_name", "n_regionkey")
       .orderBy("n_nationkey").collect().toSeq
     assert(viaRo == direct, "write-path roundtrip drifted from source")
-    val cat = "gwsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_v2_write", sf).cat
     val n = direct.length
     // INSERT INTO is an APPEND (stock DSv2 file write)
     spark.sql(s"""INSERT INTO $cat.corp.nation_w
@@ -526,8 +526,7 @@ class CatalogSpec extends SparkSpec {
     // a FRESH plugin instance (new catalog name, same dir) resolves the
     // table purely from the persisted snapshot files — cross-"cluster"
     // visibility without sharing any JVM state
-    val dir = new java.io.File(Tables.scratch(sf, "v2_write_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_write", sf).dir
     val cat3 = cat + "_spec"
     spark.conf.set(s"spark.sql.catalog.$cat3",
       classOf[graft.catalog.SnapshotCatalog].getName)
@@ -555,6 +554,40 @@ class CatalogSpec extends SparkSpec {
       .listNamespaces().isEmpty)
   }
 
+  test("key-owned catalogs stay apart across interleaved same-session runs") {
+    // the collision the name derivation rules out: were two keys to
+    // share a catalog name, the cached plugin instance would serve the
+    // second key's DDL into the first key's snapshot dir
+    def run(key: String) = SparkEntry.queries(key)(spark, sf).collect().toSeq
+    val write1 = run("meta_v2_write")
+    val ck1 = run("meta_v2_constraint")
+    val write2 = run("meta_v2_write")
+    assert(write2 == write1, "meta_v2_write drifted after meta_v2_constraint")
+    assert(write1 == Tables(spark, sf, "nation")
+      .select("n_nationkey", "n_name", "n_regionkey")
+      .orderBy("n_nationkey").collect().toSeq)
+    assert(ck1.map(_.getAs[Long]("n_orders")).sum ==
+      Tables(spark, sf, "orders").filter(col("o_orderkey") <= 2000).count())
+    val w = KeyCatalog("meta_v2_write", sf)
+    val ck = KeyCatalog("meta_v2_constraint", sf)
+    for ((kc, table) <- Seq(w -> "nation_w", ck -> "orders_ck")) {
+      val fresh = kc.cat + "_collide"
+      KeyCatalog.attach(spark, fresh,
+        classOf[graft.catalog.SnapshotCatalog], kc.dir)
+      // through SQL, which resolves the new catalog in `spark`'s own
+      // conf (a direct catalogManager lookup reads the thread's active
+      // session, which an earlier suite may have switched)
+      val listed = spark.sql(s"SHOW TABLES IN $fresh.corp")
+        .collect().map(_.getAs[String]("tableName")).toSeq
+      assert(listed == Seq(table), s"${kc.key}'s dir lists $listed")
+    }
+    assert(w.cat != ck.cat && w.dir != ck.dir)
+    assert(spark.catalog.tableExists(s"${w.cat}.corp.nation_w"))
+    assert(spark.catalog.tableExists(s"${ck.cat}.corp.orders_ck"))
+    assert(!spark.catalog.tableExists(s"${ck.cat}.corp.nation_w"),
+      "meta_v2_write's table resolves through meta_v2_constraint's catalog")
+  }
+
   test("writable V2 catalog: alter surface (evolve, drop col, rename)") {
     // the key: create + fill, ADD COLUMN, property, second generation
     val agg = SparkEntry.queries("meta_v2_alter")(spark, sf).collect()
@@ -565,10 +598,9 @@ class CatalogSpec extends SparkSpec {
       s"pre-alter generation drifted: ${agg.get("<pre-alter>")}")
     assert(agg("v2") == ((n, 100, 124)),
       s"post-alter generation drifted: ${agg.get("v2")}")
-    val cat = "gasnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_v2_alter", sf).cat
     // the property landed and survives a FRESH attach (snapshot files)
-    val dir = new java.io.File(Tables.scratch(sf, "v2_alter_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_alter", sf).dir
     val cat2 = cat + "_spec"
     spark.conf.set(s"spark.sql.catalog.$cat2",
       classOf[graft.catalog.SnapshotCatalog].getName)
@@ -609,14 +641,13 @@ class CatalogSpec extends SparkSpec {
 
   test("V2 catalog time travel serves revision schemas; unknown rev loud") {
     SparkEntry.queries("meta_v2_timetravel")(spark, sf).count()
-    val cat = "gtsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_v2_timetravel", sf).cat
     assert(spark.sql(s"SELECT * FROM $cat.corp.tt VERSION AS OF '2'")
       .columns.length == 2)
     assert(spark.table(s"$cat.corp.tt").columns.length == 3)
     // a read-only attach over the same dir time-travels too — history
     // is in the snapshot files, not the writing instance
-    val dir = new java.io.File(Tables.scratch(sf, "v2_tt_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_timetravel", sf).dir
     val cat2 = cat + "_spec"
     spark.conf.set(s"spark.sql.catalog.$cat2",
       classOf[graft.catalog.SnapshotCatalog].getName)
@@ -644,8 +675,7 @@ class CatalogSpec extends SparkSpec {
 
   test("compaction swaps location atomically; old generation survives") {
     SparkEntry.queries("meta_v2_compact")(spark, sf).count()
-    val dir = new java.io.File(Tables.scratch(sf, "v2_compact_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_compact", sf).dir
     // the old generation's files still exist — an in-flight reader
     // holding the pre-swap location keeps a consistent view
     val old = new java.io.File(s"$dir/_warehouse/corp/nation_c")
@@ -653,7 +683,7 @@ class CatalogSpec extends SparkSpec {
         _.getName.endsWith(".parquet"))),
       "compaction deleted the old generation under readers")
     // a FRESH attach resolves the compacted generation
-    val cat2 = "gcsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_") + "_spec"
+    val cat2 = KeyCatalog("meta_v2_compact", sf).cat + "_spec"
     spark.conf.set(s"spark.sql.catalog.$cat2",
       classOf[graft.catalog.SnapshotCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat2.path", dir)
@@ -666,11 +696,10 @@ class CatalogSpec extends SparkSpec {
     // through a second (read-only) attach
     assert(SparkEntry.queries("meta_v2_partitioned")(spark, sf)
       .collect().nonEmpty)
-    val wcat = "gpsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
-    val rcat = wcat + "_ro"
+    val wcat = KeyCatalog("meta_v2_partitioned", sf).cat
+    val rcat = KeyCatalog("meta_v2_partitioned", sf).roCat
     // the INSERT laid out real hive-style directories
-    val dir = new java.io.File(Tables.scratch(sf, "v2_part_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_partitioned", sf).dir
     val partDirs = Option(new java.io.File(s"$dir/_warehouse/corp/orders_p")
       .list()).toSeq.flatten.filter(_.startsWith("o_orderstatus="))
     assert(partDirs.size >= 2,
@@ -715,7 +744,7 @@ class CatalogSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(mgmt.nonEmpty && mgmt.forall(_.startsWith("o_orderstatus=")),
       s"unexpected SHOW PARTITIONS rows: $mgmt")
-    val mcat = "gmsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val mcat = KeyCatalog("meta_v2_partition_mgmt", sf).cat
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val mtable = spark.sessionState.catalogManager.catalog(mcat)
@@ -2136,7 +2165,7 @@ class CatalogSpec extends SparkSpec {
     // rule must re-qualify snapshot-table refs INSIDE both, while
     // leaving the CTE alias to CTESubstitution (qualifying it would
     // break the WITH clause)
-    val wcat0 = "gvsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val wcat0 = KeyCatalog("meta_v2_view", sf).cat
     import org.apache.spark.sql.connector.catalog.{Identifier => VIdent, ViewCatalog, ViewInfo}
     val vplugin = spark.sessionState.catalogManager.catalog(wcat0)
       .asInstanceOf[ViewCatalog]
@@ -2163,7 +2192,7 @@ class CatalogSpec extends SparkSpec {
     // (DROP TABLE refuses), dropView removes it and persists, and a
     // pushed-down filter still reaches the underlying scan THROUGH
     // the view (the rule inlines the body — no optimization barrier)
-    val wcat = "gvsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val wcat = KeyCatalog("meta_v2_view", sf).cat
     intercept[Exception] {
       spark.sql(s"DROP TABLE $wcat.corp.nations_per_region")
     }
@@ -2195,7 +2224,7 @@ class CatalogSpec extends SparkSpec {
     val d0 = rows.find(_.getAs[Int]("n_nationkey") == 0)
       .get.getAs[Double]("dist_km")
     assert(d0 > 0 && d0 < 20015, s"implausible haversine distance $d0")
-    val wcat = "gfsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val wcat = KeyCatalog("meta_v2_function", sf).cat
     import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier}
     val plugin = spark.sessionState.catalogManager.catalog(wcat)
       .asInstanceOf[graft.catalog.WritableSnapshotCatalog]
@@ -2215,8 +2244,7 @@ class CatalogSpec extends SparkSpec {
     assert(plugin.dropFunction("corp", "bad_fn"))
     // dropped functions stop resolving on a FRESH attach (persisted)
     assert(plugin.dropFunction("corp", "hav_km"))
-    val dir = new java.io.File(Tables.scratch(sf, "v2_fn_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_function", sf).dir
     val cat3 = wcat + "_spec"
     spark.conf.set(s"spark.sql.catalog.$cat3",
       classOf[graft.catalog.SnapshotCatalog].getName)
@@ -2669,8 +2697,7 @@ class CatalogSpec extends SparkSpec {
     // the spec pins the METADATA contract: clone + drop are exactly one
     // revision each, and the final head serves only the original
     SparkEntry.queries("meta_v2_clone")(spark, sf).count()
-    val dir = new java.io.File(Tables.scratch(sf, "v2_clone_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_clone", sf).dir
     // bootstrap rev 1 = CREATE NAMESPACE, 2 = CREATE TABLE,
     // 3 = CREATE clone, 4 = DROP clone — INSERT moves data, not metadata
     val revs = Option(new java.io.File(s"$dir/revs").list()).toSeq.flatten
@@ -2693,7 +2720,7 @@ class CatalogSpec extends SparkSpec {
     // zero-exchange plan); 8 buckets out
     assert(SparkEntry.queries("join_spj_copartitioned")(spark, sf)
       .count() == 8)
-    val cat2 = "gjsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_") + "_ro"
+    val cat2 = KeyCatalog("join_spj_copartitioned", sf).roCat
     def joinPlan: String = spark.sql(
       s"""SELECT f.ob, f.o_custkey, c.c_acctbal
          |FROM $cat2.corp.fact_o f JOIN $cat2.corp.dim_c c
@@ -2722,7 +2749,7 @@ class CatalogSpec extends SparkSpec {
 
   test("merge copy-on-write broadcasts the delta, never the target") {
     SparkEntry.queries("meta_v2_merge")(spark, sf).count()
-    val cat = "gusnap_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_v2_merge", sf).cat
     // the rewrite's join shape: anti join with the DELTA broadcast —
     // the 100 TB target side must not shuffle
     val plan = spark.sql(
@@ -2735,8 +2762,7 @@ class CatalogSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"merge anti-join must broadcast the delta:\n$plan")
     // the swap re-pointed the table at the merged generation
-    val dir = new java.io.File(Tables.scratch(sf, "v2_merge_snapshot"))
-      .getAbsolutePath
+    val dir = KeyCatalog("meta_v2_merge", sf).dir
     // head = rev 3: CREATE NAMESPACE, CREATE TABLE, SET LOCATION
     val head = CatalogTransfer.read(spark, s"$dir/revs/3")
     assert(head.tables.head.location.endsWith("/gen2"),
@@ -2745,7 +2771,7 @@ class CatalogSpec extends SparkSpec {
 
   test("meta_jdbc_catalog: DDL lands in the external RDBMS for real") {
     SparkEntry.queries("meta_jdbc_catalog")(spark, sf).count()
-    val cat = "gjdbccat_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_jdbc_catalog", sf).cat
     // the connector's metadata surface lists the table by namespace
     val listed = spark.sql(s"SHOW TABLES IN $cat.gmeta")
       .select("tableName").collect().map(_.getString(0))
@@ -2753,8 +2779,7 @@ class CatalogSpec extends SparkSpec {
     // bypass Spark entirely: a direct embedded-JDBC session against the
     // same Derby database must see the CTAS rows — the dim physically
     // lives in the RDBMS, not in any Spark-side shim
-    val db = new java.io.File(Tables.scratch(sf, "jdbc_cat_db"))
-      .getAbsolutePath
+    val db = KeyCatalog("meta_jdbc_catalog", sf).dir
     val conn = java.sql.DriverManager.getConnection(
       s"jdbc:derby:;databaseName=$db")
     try {

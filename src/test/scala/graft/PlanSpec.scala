@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.KeyCatalog
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the 100 TB design checks from
@@ -65,7 +66,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.FilePartition
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     SparkEntry.queries("meta_v2_partitioned")(spark, sf).count()
-    val rcat = "gpsnap_" + sf.replaceAll("[^A-Za-z0-9]", "_") + "_ro"
+    val rcat = KeyCatalog("meta_v2_partitioned", sf).roCat
     def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.queryExecution.executedPlan
         .collect { case b: BatchScanExec => b }
@@ -474,7 +475,7 @@ class PlanSpec extends SparkSpec {
       s"residual Spark-side join — pushdown was partial:\n$plan")
     // the stock-dialect behaviors must survive the dialect swap: the
     // same mount still serves a plain filtered scan with pushdown
-    val cat = "gjdbcjp_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_jdbc_join_pushdown", sf).cat
     val single = spark.sql(
       s"""SELECT s_suppkey FROM $cat.gjp.supp_jp
          |WHERE s_acctbal > 5000.0""".stripMargin)
@@ -495,7 +496,7 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("HashAggregate"),
       s"residual Spark-side aggregation — pushdown was partial:\n$plan")
     // order-by-limit compiles to remote TopN on the same mount
-    val cat = "gjdbcpd_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    val cat = KeyCatalog("meta_jdbc_pushdown", sf).cat
     val topn = spark.sql(
       s"""SELECT s_suppkey FROM $cat.gpd.supp_pd
          |ORDER BY s_suppkey LIMIT 5""".stripMargin)

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import graft.catalog.KeyCatalog
 import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -203,7 +204,7 @@ class StreamingSpec extends SparkSpec {
         s"stream had $nEvents events")
     // the sink table is a real shared-catalog object: a fresh read-only
     // attach resolves it by name with the appended micro-batch files
-    val cat2 = "gssnap_" + sf.replaceAll("[^A-Za-z0-9]", "_") + "_ro"
+    val cat2 = KeyCatalog("stream_v2_sink", sf).roCat
     assert(spark.table(s"$cat2.corp.events_sink").count() == nEvents)
   }
 
@@ -211,7 +212,7 @@ class StreamingSpec extends SparkSpec {
     assert(SparkEntry.queries("stream_v2_partitioned_sink")(spark, sf)
       .collect().nonEmpty)
     // the pruned read-back must push the partition filter into the scan
-    val cat2 = "gpsstr_" + sf.replaceAll("[^A-Za-z0-9]", "_") + "_ro"
+    val cat2 = KeyCatalog("stream_v2_partitioned_sink", sf).roCat
     val df = spark.table(s"$cat2.corp.events_psink")
       .filter(org.apache.spark.sql.functions.col("event_type") === "view")
     val plan = df.queryExecution.executedPlan.toString
@@ -463,5 +464,16 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(streamed.nonEmpty && streamed == scratch,
       "streamed ingest diverges from the from-scratch assignment")
+  }
+
+  test("stream_changefeed_upsert reruns to the same rows in one session") {
+    // its state dir is a symlink into `<state>_gen`: a rerun that left
+    // either behind would re-apply revisions onto stale state
+    def run() = SparkEntry.queries("stream_changefeed_upsert")(spark, sf)
+      .collect().toSeq
+    val first = run()
+    val second = run()
+    assert(first.nonEmpty && second == first,
+      s"rerun drifted: ${first.size} vs ${second.size} rows")
   }
 }
