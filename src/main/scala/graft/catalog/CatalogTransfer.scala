@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Portable catalog snapshot — the Spark-native rendering of the
@@ -345,19 +345,6 @@ object CatalogTransfer {
       case fs => fs
     }
 
-  /** A new file at `p`, parent dirs included. Local files are created
-    * through java.nio: without its native library, Hadoop's local
-    * FileSystem forks a `chmod` per created file and dir (about 3 ms
-    * each, paid on every DDL of the snapshot catalog). */
-  private def create(fs: FileSystem, p: Path): java.io.OutputStream =
-    fs match {
-      case local: RawLocalFileSystem if local.getUri.getScheme == "file" =>
-        val f = local.pathToFile(p).toPath
-        java.nio.file.Files.createDirectories(f.getParent)
-        java.nio.file.Files.newOutputStream(f)
-      case _ => fs.create(p, true)
-    }
-
   private def encode(snap: CatalogSnapshot, dir: String,
       conf: Configuration): Unit = {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
@@ -374,7 +361,7 @@ object CatalogTransfer {
       // renamed into place: a reader never parses a half-written part
       val tmp = new Path(d, s".$partFile.tmp")
       val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        create(fs, tmp), java.nio.charset.StandardCharsets.UTF_8))
+        fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
       try rows.foreach { r =>
         out.write(org.json4s.jackson.Serialization.write(r))
         out.write('\n')
