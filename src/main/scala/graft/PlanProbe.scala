@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: execute one query key and print exchange/scan/stage counts
-  * of its final adaptive plan plus the full plan on request. Run with
+  * of its final adaptive plan, the generated classes its timed runs
+  * compiled (`COMPILES`: 0 when every class came from Spark's codegen
+  * cache), plus the full plan on request. Run with
   *   sbt "runMain graft.PlanProbe <key> [sfDir] [full]"
   */
 object PlanProbe {
@@ -48,6 +51,7 @@ object PlanProbe {
       args.collectFirst { case a if a.startsWith("runs=") =>
         a.stripPrefix("runs=").toInt }.getOrElse(1))
     var df: org.apache.spark.sql.DataFrame = null
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val times = Seq.fill(runs) {
       RunCaches.reset()
       spark.catalog.clearCache()
@@ -56,6 +60,7 @@ object PlanProbe {
       df.collect()
       (System.nanoTime() - t0) / 1e9
     }.sorted
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val secs = times(runs / 2)
     val p = df.queryExecution.executedPlan.toString
     println(f"KEY=$key SECS=$secs%.2f RUNS=${times.map(t => f"$t%.2f").mkString(",")}")
@@ -63,6 +68,7 @@ object PlanProbe {
     println("REUSED=" + "ReusedExchange".r.findAllIn(p).length)
     println("SCANS=" + "FileScan parquet".r.findAllIn(p).length)
     println("AQE_STAGES=" + "ShuffleQueryStage".r.findAllIn(p).length)
+    println(s"COMPILES=$compiles")
     if (args.contains("full")) println(p)
     spark.stop()
   }

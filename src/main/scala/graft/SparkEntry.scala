@@ -49,7 +49,9 @@ object SparkEntry {
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each is a
+    * [[Query]], so it runs its key with the session's artifact isolation
+    * off. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     groups.flatMap(_.queries).toMap
 

@@ -53,6 +53,6 @@ private[graft] object KeyCatalog {
   /** A query-map entry whose body gets the catalog its key owns. */
   def keyed(key: String)(
       f: (SparkSession, String, KeyCatalog) => DataFrame)
-      : (String, (SparkSession, String) => DataFrame) =
+      : (String, graft.Query) =
     key -> ((s, d) => f(s, d, KeyCatalog(key, d)))
 }

@@ -53,18 +53,21 @@ object StreamOps extends QueryGroup {
     * the RocksDB provider once per-partition state outgrows executor
     * heap (large dedup indexes, wide transformWithState maps —
     * changelog-checkpointed, spill-to-disk). At fixture scale these keys
-    * cost a fixed ~1 s of micro-batch machinery, not data work, which
+    * cost a fixed ~0.9 s of micro-batch machinery, not data work, which
     * amortizes to noise at production batch sizes. Measured on
     * `stream_tumbling` (perfbench `catalog_ingest`, traced, sf0.01,
-    * local[4] on a 4-core VM; one micro-batch), its ~0.9 s splits as:
-    * the trigger ~0.58 s, nearly all `addBatch` (~0.52 s: the
-    * aggregation, its 8 state-store delta-file commits and the sink
+    * local[4] on a 4-core VM; one micro-batch; median of 3), its ~0.88 s
+    * splits as: the trigger ~0.50 s, nearly all `addBatch` (~0.43 s:
+    * the aggregation, its 8 state-store delta-file commits and the sink
     * write); `walCommit` and `commitOffsets`, the offset- and commit-log
-    * writes, ~2 ms each; the rest of the build (schema read, query start
-    * and stop) ~0.14 s; reading the sink back ~0.17 s. With Hadoop's
-    * stock local FileSystem, which forks a process per checkpoint file
-    * (see `graft.fs.NioLocalFileSystem`), the key took ~1.4–1.7 s:
-    * `addBatch` ~0.75–0.90 s and the two log writes 30–46 ms each. */
+    * writes, ~3–4 ms each; the rest of the build (schema read, query
+    * start and stop) ~0.18 s; reading the sink back ~0.13 s. With
+    * Spark's session artifact isolation on (see `graft.Query`), each
+    * run in a fresh session recompiled every generated class: the key
+    * took ~1.35 s, `addBatch` ~0.78 s. Before that, with Hadoop's stock
+    * local FileSystem, which forks a process per checkpoint file (see
+    * `graft.fs.NioLocalFileSystem`), it took ~1.4–1.7 s: `addBatch`
+    * ~0.75–0.90 s and the two log writes 30–46 ms each. */
   def runToTable(df: DataFrame, name: String, mode: String,
       availableNow: Boolean = false): DataFrame = {
     val s = df.sparkSession
