@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central loader for the driver-generated fixture tables.
   *
@@ -13,9 +20,20 @@ import org.apache.spark.sql.functions._
   * (yc-data-proc-metadata-import `metastore-import.tf:165-179`); paths are
   * parameterized so s3a://bucket/... is a config change, not a code change.
   *
-  * Scale note (100 TB): reads are plain `spark.read.parquet` — no caching,
-  * no collect — so predicate pushdown / column pruning / partition pruning
-  * reach the scan unimpeded and the same code runs unchanged on a cluster.
+  * Schema rule: a load hands the reader the schema [[schema]] reads from
+  * the fixture file's parquet footer on the driver. A bare
+  * `spark.read.parquet` infers it instead, and in Spark 4.1 inference is
+  * one Spark job per load in every fresh session, even for a single
+  * file: 9 of them per `analytics` pass. The reference keeps schemas in
+  * the metastore for the same reason, so a cluster can query a table
+  * without reading its files to discover it (`metastore-import.tf:181-278`).
+  * Read fixtures only through here. The footer is read again on every
+  * load (a few ms), so runs stay cache-cold.
+  *
+  * Scale note (100 TB): no caching, no collect — predicate pushdown /
+  * column pruning / partition pruning reach the scan unimpeded and the
+  * same code runs unchanged on a cluster. The footer read touches one
+  * file's tail, through the session's Hadoop conf.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,27 +41,40 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Load one fixture table from `sfDir`, normalized. */
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    name match {
-      case "events" =>
-        // `ts` has shipped in two physical encodings across fixture
-        // generations: INT64 TIMESTAMP(NANOS) (unreadable natively by
-        // Spark 4.1.2 — read as raw nanos under nanosAsLong, truncate to
-        // µs) and plain timestamp[us] (reads as TIMESTAMP_NTZ). Dispatch
-        // on the type actually read so either generation normalizes to
-        // the same session-TZ TimestampType the oracle's
-        // CAST(ts AS TIMESTAMP) produces. `div` = integer division; `/`
-        // would go through double and lose µs precision at 1.7e18 ns.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
-        normalizeTs(raw)
-      case n =>
-        spark.read.parquet(s"$sfDir/$n.parquet")
-    }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val raw = spark.read.schema(schema(spark, sfDir, name))
+      .parquet(s"$sfDir/$name.parquet")
+    if (name == "events") normalizeTs(raw) else raw
+  }
+
+  /** Fixture `name`'s schema as `spark.read.parquet` infers it, read from
+    * its footer on the driver with no Spark job: Spark's own converter
+    * under the session's parquet settings (`nanosAsLong`,
+    * `binaryAsString`, `inferTimestampNTZ`), and the Spark schema a
+    * Spark-written file carries in its metadata wins, as in inference.
+    *
+    * `events.ts` has shipped in two physical encodings across fixture
+    * generations: INT64 TIMESTAMP(NANOS) (unreadable natively by Spark
+    * 4.1.2, so read as raw nanos under nanosAsLong, which this sets on
+    * the session) and plain timestamp[us] (reads as TIMESTAMP_NTZ);
+    * [[normalizeTs]] maps either to TimestampType. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType = {
+    if (name == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = new Path(s"$sfDir/$name.parquet")
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(path, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Normalize an events-shaped frame's `ts` to TimestampType whatever
     * the physical parquet encoding delivered (LongType raw nanos,
-    * TIMESTAMP_NTZ from timestamp[us]/[ms], or already TimestampType). */
+    * TIMESTAMP_NTZ from timestamp[us]/[ms], or already TimestampType):
+    * the session-TZ TimestampType the oracle's CAST(ts AS TIMESTAMP)
+    * produces. `div` = integer division; `/` would go through double and
+    * lose µs precision at 1.7e18 ns. */
   def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

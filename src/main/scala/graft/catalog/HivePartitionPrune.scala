@@ -65,7 +65,7 @@ object HivePartitionPrune {
     // Hive-partitioned external layout: o_year=YYYY directories, the
     // shared-bucket shape the reference's clusters write.
     val dataDir = s"$scratch/orders_part_data"
-    spark.read.parquet(s"$sfDir/orders.parquet")
+    graft.Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"),
         year(col("o_orderdate")).cast("string").as("o_year"))

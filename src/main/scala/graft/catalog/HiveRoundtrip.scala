@@ -60,7 +60,7 @@ object HiveRoundtrip {
     // hive-SerDe table: headerless CSV + LazySimpleSerDe, external so the
     // text files survive the catalog drop (shared-bucket semantics).
     val textDir = s"$scratch/nation_text_data"
-    spark.read.parquet(s"$sfDir/nation.parquet")
+    graft.Tables(spark, sfDir, "nation")
       .write.mode("overwrite").option("header", "false").csv(textDir)
     spark.sql(s"""CREATE EXTERNAL TABLE hive_src.nation_text (
                  |  n_nationkey INT, n_name STRING, n_regionkey INT)

@@ -142,7 +142,7 @@ object ThriftRoundtrip {
     // exactly 2 partition objects; the disabled control must fetch all.
     import org.apache.spark.sql.functions.{col, year}
     val partData = s"$scratch/orders_part_data"
-    spark.read.parquet(s"$sfDir/orders.parquet")
+    graft.Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         year(col("o_orderdate")).cast("string").as("o_year"))
       .write.partitionBy("o_year").mode("overwrite").parquet(partData)

@@ -237,8 +237,11 @@ object ScaleOps extends QueryGroup {
     "join_bloom_runtime" -> ((s, d) => {
       // isolated child session: same SparkContext, own SQLConf — the
       // bloom thresholds and broadcast opt-out apply to THIS query only
-      // and cannot leak into sibling queries sharing the session.
+      // and cannot leak into sibling queries sharing the session. A new
+      // session does not inherit the handed one's conf, so it turns off
+      // artifact isolation itself, or every run recompiles its codegen.
       val s2 = s.newSession()
+      s2.conf.set(graft.Query.ArtifactIsolation, false)
       s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       // local fixtures sit far below the 10 GiB production floor for the
       // application side; drop it so the mechanism runs at test scale

@@ -424,7 +424,7 @@ object Scans extends QueryGroup {
     // (scan_merge_schema proves the multi-vintage union; this proves a
     // single old file under the new schema).
     "scan_schema_projection" -> ((s, d) => {
-      val base = s.read.parquet(s"$d/nation.parquet").schema
+      val base = Tables.schema(s, d, "nation")
       val widened = org.apache.spark.sql.types.StructType(
         base.fields :+ org.apache.spark.sql.types.StructField(
           "n_comment", org.apache.spark.sql.types.StringType))
@@ -472,7 +472,7 @@ object Scans extends QueryGroup {
     // LOCATION never reaches the oracle (SURVEY §5.2), and the laws
     // are exactly what an incremental-repair job relies on.
     "scan_metadata_cols" -> ((s, d) => {
-      s.read.parquet(s"$d/orders.parquet")
+      Tables(s, d, "orders")
         .select(expr("_metadata.row_index").as("ri"),
           expr("_metadata.file_name").as("fn"))
         .agg(count(lit(1)).as("n_rows"),

@@ -28,11 +28,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps extends QueryGroup {
 
-  /** Streaming view of the events table (same ns-timestamp
-    * normalization as Tables — file sources need an explicit schema). */
+  /** Streaming view of the events table: a file source needs an
+    * explicit schema, so it takes the footer schema of
+    * [[Tables.schema]] and the same `ts` normalization as `Tables`. */
   def eventsStream(s: SparkSession, sfDir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$sfDir/events.parquet").schema
+    val raw = Tables.schema(s, sfDir, "events")
     // the file stream source wants a directory — replay the sf dir
     // filtered down to the events file.
     Tables.normalizeTs(
@@ -339,7 +339,7 @@ object StreamOps extends QueryGroup {
         .select(sha2(col("text"), 256).as("h")).distinct()
       // one file-source instance feeds both branches (a self-union of
       // the same stream is fine); the footer schema is read once
-      val raw = s.read.parquet(s"$d/documents.parquet").schema
+      val raw = Tables.schema(s, d, "documents")
       val docStream = s.readStream.schema(raw)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
       val batch = docStream.filter(col("doc_id") >= 300)

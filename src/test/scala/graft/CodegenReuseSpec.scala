@@ -7,7 +7,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * the second run compiles none. With Spark's default session artifact
   * isolation each session's tasks get their own classloader, and the
   * second run recompiled every generated class (9 for
-  * `agg_hash_group`, 17 for `stream_tumbling`, at sf0.001). */
+  * `agg_hash_group`, 17 for `stream_tumbling`, at sf0.001).
+  * `join_bloom_runtime` runs in a session of its own, which must turn
+  * isolation off too. */
 class CodegenReuseSpec extends SparkSpec {
 
   /** Generated classes compiled while `key` runs once, cache-cold, in
@@ -21,7 +23,8 @@ class CodegenReuseSpec extends SparkSpec {
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, rows)
   }
 
-  for (key <- Seq("agg_hash_group", "stream_tumbling"))
+  for (key <- Seq("agg_hash_group", "stream_tumbling",
+      "join_bloom_runtime"))
     test(s"$key rerun in a fresh session compiles no generated class") {
       val (_, rows1) = run(key)
       val (compiles, rows2) = run(key)

@@ -1,14 +1,20 @@
 package graft
 
 import java.io.{File, FileNotFoundException}
+import java.lang.ref.{PhantomReference, ReferenceQueue}
 import java.net.URI
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.fs.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem,
   Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 /** The engine's `file:` FileSystem against Hadoop's stock
   * `RawLocalFileSystem`: the same status for every kind of path, the
@@ -126,24 +132,74 @@ class LocalFsSpec extends SparkSpec {
     stat.substring(stat.lastIndexOf(')') + 2).split(" ")(8).toLong
   }
 
+  /** True when no reference cleanup is queued or running: the JVM's
+    * reference handler waits for the next collection, and every
+    * `java.lang.ref.Cleaner` thread, the one of Spark's
+    * `ArtifactManager` among them, waits on an empty queue. */
+  private def cleanersIdle(): Boolean =
+    Thread.getAllStackTraces.asScala.forall { case (t, stack) =>
+      val frames =
+        stack.toSeq.map(f => s"${f.getClassName}.${f.getMethodName}")
+      if (t.getName == "Reference Handler")
+        frames.headOption.contains(
+          "java.lang.ref.Reference.waitForReferencePendingList")
+      else !frames.contains("jdk.internal.ref.CleanerImpl.run") ||
+        t.getState == Thread.State.TIMED_WAITING &&
+          frames.contains("java.lang.ref.ReferenceQueue.remove")
+    }
+
+  /** A full collection, then the cleanups of everything it collected:
+    * returns once a canary it collected has been handed to its queue and
+    * the reference handler and every Cleaner thread have been idle on
+    * two looks 20 ms apart. */
+  private def collectAndClean(): Unit = {
+    val canaries = new ReferenceQueue[AnyRef]
+    val canary = new PhantomReference(new Object, canaries)
+    System.gc()
+    assert(canaries.remove(120000) eq canary, "no collection ran")
+    var (idle, looks) = (0, 0)
+    while (idle < 2) {
+      assert(looks < 6000, "reference cleanup never finished")
+      Thread.sleep(20)
+      looks += 1
+      idle = if (cleanersIdle()) idle + 1 else 0
+    }
+  }
+
   /** [[childFaults]] once Spark's own background children have run.
     * Spark starts two outside the file system: `getconf PAGESIZE`, once
     * per JVM on the first executor heartbeat (forced here by loading the
     * class that runs it), and `rm -rf` of a garbage-collected session's
-    * artifact dir (each streaming query clones its session). Collecting
-    * garbage until the count holds still runs the second ones now, not
-    * inside the measured calls. */
+    * artifact dir, run by the Cleaner of its `ArtifactManager` (each
+    * streaming query clones its session). Collections run until one,
+    * with its cleanups finished, has started no child, so none is owed
+    * to a session that died before the measured calls. */
   private def settledChildFaults(): Long = {
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     var (last, now, polls) = (-1L, childFaults(), 0)
     while (now != last && polls < 20) {
-      System.gc()
-      Thread.sleep(500)
+      collectAndClean()
       last = now
       now = childFaults()
       polls += 1
     }
     now
+  }
+
+  /** `body`, with every streaming query that starts inside it held
+    * reachable until it returns: the session each query clones cannot
+    * be collected, and its `rm -rf` run, inside `body`. */
+  private def holdingStreams[T](body: => T): T = {
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
+    val hold = new StreamingQueryListener {
+      // called on the query's own thread before start() returns
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        held.add(spark.streams.get(e.id)): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(hold)
+    try body finally spark.streams.removeListener(hold)
   }
 
   test("local checkpoint, commit and listing calls and a streaming " +
@@ -155,7 +211,7 @@ class LocalFsSpec extends SparkSpec {
       /** The child-fault count across the local write calls and one
         * stream_tumbling run (its micro-batch offset, commit and
         * state-store files), read as soon as the stream has stopped. */
-      def childFaultsAcross(round: Int): Long = {
+      def childFaultsAcross(round: Int): Long = holdingStreams {
         val before = settledChildFaults()
         // a streaming checkpoint commit: mkdir, temp file, rename over
         val ckpt = new Path(s"file:$d/fc$round/offsets")
