@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: execute one query key and print exchange/scan/stage counts
   * of its final adaptive plan, the generated classes its timed runs
   * compiled (`COMPILES`: 0 when every class came from Spark's codegen
-  * cache), plus the full plan on request. Run with
+  * cache), the Spark jobs started while its timed runs built their
+  * DataFrames (`BUILD_JOBS`: schema inference, staging writes), plus
+  * the full plan on request. Run with
   *   sbt "runMain graft.PlanProbe <key> [sfDir] [full]"
   */
 object PlanProbe {
@@ -51,16 +54,38 @@ object PlanProbe {
       args.collectFirst { case a if a.startsWith("runs=") =>
         a.stripPrefix("runs=").toInt }.getOrElse(1))
     var df: org.apache.spark.sql.DataFrame = null
+    // jobs tagged "build" (Spark's own work threads inherit the probe
+    // thread's local properties); the "drain" marker job after the runs
+    // shows the listener bus has delivered every earlier job
+    val sc = spark.sparkContext
+    val tag = "graft.planprobe"
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("build") => buildJobs.incrementAndGet(): Unit
+          case Some("drain") => drained.countDown()
+          case _ =>
+        }
+    })
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val times = Seq.fill(runs) {
       RunCaches.reset()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      df = SparkEntry.queries(key)(spark, sfDir)
+      sc.setLocalProperty(tag, "build")
+      try df = SparkEntry.queries(key)(spark, sfDir)
+      finally sc.setLocalProperty(tag, null)
       df.collect()
       (System.nanoTime() - t0) / 1e9
     }.sorted
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    sc.setLocalProperty(tag, "drain")
+    sc.parallelize(Seq(1), 1).count()
+    sc.setLocalProperty(tag, null)
+    require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "listener bus never delivered the drain marker")
     val secs = times(runs / 2)
     val p = df.queryExecution.executedPlan.toString
     println(f"KEY=$key SECS=$secs%.2f RUNS=${times.map(t => f"$t%.2f").mkString(",")}")
@@ -69,6 +94,7 @@ object PlanProbe {
     println("SCANS=" + "FileScan parquet".r.findAllIn(p).length)
     println("AQE_STAGES=" + "ShuffleQueryStage".r.findAllIn(p).length)
     println(s"COMPILES=$compiles")
+    println(s"BUILD_JOBS=${buildJobs.get}")
     if (args.contains("full")) println(p)
     spark.stop()
   }

@@ -13,12 +13,12 @@ import org.apache.spark.sql.types.StructType
 /** Central loader for the driver-generated fixture tables.
   *
   * Every query in the engine goes through here so that the one genuinely
-  * table-specific normalization — the `events.ts` nanosecond timestamp
-  * (Spark 4.1.2 cannot read INT64 TIMESTAMP(NANOS) parquet natively; see
-  * SURVEY.md §1.3) — happens in exactly one place. Reference basis: the
-  * reference system stores table data as files in object storage
-  * (yc-data-proc-metadata-import `metastore-import.tf:165-179`); paths are
-  * parameterized so s3a://bucket/... is a config change, not a code change.
+  * table-specific normalization — `events.ts`, stored as timestamp[us]
+  * and read as TIMESTAMP_NTZ — happens in exactly one place. Reference
+  * basis: the reference system stores table data as files in object
+  * storage (yc-data-proc-metadata-import `metastore-import.tf:165-179`);
+  * paths are parameterized so s3a://bucket/... is a config change, not a
+  * code change.
   *
   * Schema rule: a load hands the reader the schema [[schema]] reads from
   * the fixture file's parquet footer on the driver. A bare
@@ -27,8 +27,14 @@ import org.apache.spark.sql.types.StructType
   * file: 9 of them per `analytics` pass. The reference keeps schemas in
   * the metastore for the same reason, so a cluster can query a table
   * without reading its files to discover it (`metastore-import.tf:181-278`).
-  * Read fixtures only through here. The footer is read again on every
-  * load (a few ms), so runs stay cache-cold.
+  * The rule holds for every way a fixture reaches Spark:
+  *  - a frame: read fixtures only through here;
+  *  - DDL: a `CREATE TABLE` over a fixture declares its columns with
+  *    [[ddl]] (a column-less one infers them with a job);
+  *  - a read-back of a dir the engine wrote from a fixture frame: read
+  *    it with that frame's schema, not by inference.
+  * The footer is read again on every load (a few ms), so runs stay
+  * cache-cold.
   *
   * Scale note (100 TB): no caching, no collect — predicate pushdown /
   * column pruning / partition pruning reach the scan unimpeded and the
@@ -49,18 +55,10 @@ object Tables {
 
   /** Fixture `name`'s schema as `spark.read.parquet` infers it, read from
     * its footer on the driver with no Spark job: Spark's own converter
-    * under the session's parquet settings (`nanosAsLong`,
-    * `binaryAsString`, `inferTimestampNTZ`), and the Spark schema a
-    * Spark-written file carries in its metadata wins, as in inference.
-    *
-    * `events.ts` has shipped in two physical encodings across fixture
-    * generations: INT64 TIMESTAMP(NANOS) (unreadable natively by Spark
-    * 4.1.2, so read as raw nanos under nanosAsLong, which this sets on
-    * the session) and plain timestamp[us] (reads as TIMESTAMP_NTZ);
-    * [[normalizeTs]] maps either to TimestampType. */
+    * under the session's parquet settings (`binaryAsString`,
+    * `inferTimestampNTZ`), and the Spark schema a Spark-written file
+    * carries in its metadata wins, as in inference. */
   def schema(spark: SparkSession, sfDir: String, name: String): StructType = {
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = new Path(s"$sfDir/$name.parquet")
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromPath(path, spark.sessionState.newHadoopConf()),
@@ -69,16 +67,18 @@ object Tables {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
-  /** Normalize an events-shaped frame's `ts` to TimestampType whatever
-    * the physical parquet encoding delivered (LongType raw nanos,
-    * TIMESTAMP_NTZ from timestamp[us]/[ms], or already TimestampType):
-    * the session-TZ TimestampType the oracle's CAST(ts AS TIMESTAMP)
-    * produces. `div` = integer division; `/` would go through double and
-    * lose µs precision at 1.7e18 ns. */
+  /** The `(<columns>) USING parquet LOCATION '<fixture>'` tail of a
+    * `CREATE TABLE` over fixture `name`, its columns from [[schema]], so
+    * creating the table infers nothing. */
+  def ddl(spark: SparkSession, sfDir: String, name: String): String =
+    s"(${schema(spark, sfDir, name).toDDL}) " +
+      s"USING parquet LOCATION '$sfDir/$name.parquet'"
+
+  /** Normalize an events-shaped frame's `ts` to TimestampType: the
+    * timestamp[us] column reads as TIMESTAMP_NTZ, and the oracle's
+    * CAST(ts AS TIMESTAMP) is the session-TZ TimestampType. */
   def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampType => raw
       case _ => // TIMESTAMP_NTZ — session TZ reinterpretation (UTC here)
         raw.withColumn("ts",

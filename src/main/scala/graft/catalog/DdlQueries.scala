@@ -162,8 +162,7 @@ object DdlQueries extends QueryGroup {
     "ddl_describe_show" -> ((s, d) => {
       freshDb(s, "graft_ext")
       s.sql("DROP TABLE IF EXISTS graft_ext.nation_desc")
-      s.sql(s"""CREATE TABLE graft_ext.nation_desc
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_ext.nation_desc " + Tables.ddl(s, d, "nation"))
       val described = s.sql("DESCRIBE TABLE graft_ext.nation_desc")
         .select(col("col_name"), col("data_type"))
       val shown = s.sql("SHOW TABLES IN graft_ext")
@@ -177,8 +176,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       freshDb(s, "graft_ext")
       s.sql("DROP TABLE IF EXISTS graft_ext.alter_probe")
-      s.sql(s"""CREATE TABLE graft_ext.alter_probe
-               |USING parquet LOCATION '$d/region.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_ext.alter_probe " + Tables.ddl(s, d, "region"))
       s.sql("""ALTER TABLE graft_ext.alter_probe
               |SET TBLPROPERTIES ('graft.note' = 'v1')""".stripMargin)
       val note = s.sessionState.catalog
@@ -197,8 +195,7 @@ object DdlQueries extends QueryGroup {
       freshDb(s, "graft_ext")
       s.sql("DROP VIEW IF EXISTS graft_ext.spend_view")
       s.sql("DROP TABLE IF EXISTS graft_ext.orders_ext")
-      s.sql(s"""CREATE TABLE graft_ext.orders_ext
-               |USING parquet LOCATION '$d/orders.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_ext.orders_ext " + Tables.ddl(s, d, "orders"))
       // permanent views may only reference permanent catalog objects
       s.sql(
         """CREATE VIEW graft_ext.spend_view AS
@@ -240,8 +237,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       freshDb(s, "graft_ext")
       s.sql("DROP TABLE IF EXISTS graft_ext.nation_stats")
-      s.sql(s"""CREATE TABLE graft_ext.nation_stats
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_ext.nation_stats " + Tables.ddl(s, d, "nation"))
       s.sql("ANALYZE TABLE graft_ext.nation_stats COMPUTE STATISTICS")
       val stats = s.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
@@ -264,8 +260,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       freshDb(s, "graft_ext")
       s.sql("DROP TABLE IF EXISTS graft_ext.region_doc")
-      s.sql(s"""CREATE TABLE graft_ext.region_doc
-               |USING parquet LOCATION '$d/region.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_ext.region_doc " + Tables.ddl(s, d, "region"))
       s.sql("COMMENT ON TABLE graft_ext.region_doc IS 'regions dim'")
       s.sql("""ALTER TABLE graft_ext.region_doc SET TBLPROPERTIES (
               |  'graft.owner' = 'pipeline', 'graft.sla' = 'daily')"""
@@ -429,10 +424,8 @@ object DdlQueries extends QueryGroup {
     "meta_sync_apply" -> ((s, d) => {
       s.sql("DROP DATABASE IF EXISTS graft_sync CASCADE")
       s.sql("CREATE DATABASE graft_sync")
-      s.sql(s"""CREATE TABLE graft_sync.nation_s
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
-      s.sql(s"""CREATE TABLE graft_sync.region_s
-               |USING parquet LOCATION '$d/region.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_sync.nation_s " + Tables.ddl(s, d, "nation"))
+      s.sql("CREATE TABLE graft_sync.region_s " + Tables.ddl(s, d, "region"))
       s.sql("""ALTER TABLE graft_sync.nation_s
               |SET TBLPROPERTIES ('graft.rev' = 'v1')""".stripMargin)
       val src = CatalogTransfer.export(s, Seq("graft_sync"))
@@ -440,8 +433,7 @@ object DdlQueries extends QueryGroup {
       s.sql("""ALTER TABLE graft_sync.nation_s
               |SET TBLPROPERTIES ('graft.rev' = 'v2-drifted')""".stripMargin)
       s.sql("DROP TABLE graft_sync.region_s")
-      s.sql(s"""CREATE TABLE graft_sync.extra_t
-               |USING parquet LOCATION '$d/supplier.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_sync.extra_t " + Tables.ddl(s, d, "supplier"))
       val actions = CatalogTransfer.syncApply(s, src, Seq("graft_sync"))
       require(actions == Seq(
         ("table", "graft_sync.extra_t", "drop"),
@@ -462,8 +454,7 @@ object DdlQueries extends QueryGroup {
     "meta_roundtrip" -> ((s, d) => {
       s.sql("DROP DATABASE IF EXISTS graft_src CASCADE")
       s.sql("CREATE DATABASE graft_src")
-      s.sql(s"""CREATE TABLE graft_src.nation_rt
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_src.nation_rt " + Tables.ddl(s, d, "nation"))
       val dir = Tables.scratch(d, "meta_roundtrip_snapshot")
       CatalogTransfer.write(s, CatalogTransfer.export(s, Seq("graft_src")), dir)
       s.sql("DROP DATABASE graft_src CASCADE")
@@ -492,8 +483,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       s.sql("DROP DATABASE IF EXISTS graft_stx CASCADE")
       s.sql("CREATE DATABASE graft_stx")
-      s.sql(s"""CREATE TABLE graft_stx.orders_st
-               |USING parquet LOCATION '$d/orders.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_stx.orders_st " + Tables.ddl(s, d, "orders"))
       s.sql("ANALYZE TABLE graft_stx.orders_st COMPUTE STATISTICS " +
         "FOR COLUMNS o_custkey")
       val dir = Tables.scratch(d, "meta_stats_snapshot")
@@ -588,8 +578,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       s.sql("DROP DATABASE IF EXISTS graft_sth CASCADE")
       s.sql("CREATE DATABASE graft_sth")
-      s.sql(s"""CREATE TABLE graft_sth.li_h
-               |USING parquet LOCATION '$d/lineitem.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_sth.li_h " + Tables.ddl(s, d, "lineitem"))
       graft.operators.ScaleOps.withConfs(s, Seq(
         "spark.sql.statistics.histogram.enabled" -> "true",
         "spark.sql.statistics.histogram.numBins" -> "7")) {
@@ -640,8 +629,7 @@ object DdlQueries extends QueryGroup {
       s.sql("DROP DATABASE IF EXISTS graft_mig CASCADE")
       s.sql("DROP DATABASE IF EXISTS graft_mig_prod CASCADE")
       s.sql("CREATE DATABASE graft_mig")
-      s.sql(s"""CREATE TABLE graft_mig.region_m
-               |USING parquet LOCATION '$d/region.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_mig.region_m " + Tables.ddl(s, d, "region"))
       s.sql("""CREATE VIEW graft_mig.region_v AS
               |SELECT r_regionkey, r_name FROM graft_mig.region_m""".stripMargin)
       val snap = CatalogTransfer.export(s, Seq("graft_mig"))
@@ -684,9 +672,8 @@ object DdlQueries extends QueryGroup {
       s.sql("DROP DATABASE IF EXISTS graft_val CASCADE")
       s.sql("DROP DATABASE IF EXISTS graft_val_tgt CASCADE")
       s.sql("CREATE DATABASE graft_val")
-      tables.foreach(t => s.sql(
-        s"""CREATE TABLE graft_val.${t}_src
-           |USING parquet LOCATION '$d/$t.parquet'""".stripMargin))
+      tables.foreach(t =>
+        s.sql(s"CREATE TABLE graft_val.${t}_src " + Tables.ddl(s, d, t)))
       val snap = CatalogTransfer.export(s, Seq("graft_val"))
       CatalogTransfer.importInto(s, CatalogTransfer.remap(snap,
         dbRenames = Map("graft_val" -> "graft_val_tgt"),
@@ -3542,8 +3529,7 @@ object DdlQueries extends QueryGroup {
       val cat = v2SnapshotCatalog(s, d)
       freshDb(s, "graft_fed")
       s.sql("DROP TABLE IF EXISTS graft_fed.region_fed")
-      s.sql(s"""CREATE TABLE graft_fed.region_fed
-               |USING parquet LOCATION '$d/region.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_fed.region_fed " + Tables.ddl(s, d, "region"))
       s.sql(
         s"""SELECT r.r_name, COUNT(*) AS n_nations,
            |  MIN(n.n_nationkey) AS lo_key
@@ -3788,8 +3774,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       freshDb(s, "graft_jdbc")
       s.sql("DROP TABLE IF EXISTS graft_jdbc.nation_j")
-      s.sql(s"""CREATE TABLE graft_jdbc.nation_j
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_jdbc.nation_j " + Tables.ddl(s, d, "nation"))
       val port = SqlEndpoint.ensureStarted(s)
       val (cols, rows) = SqlEndpoint.jdbcQuery(port,
         """SELECT n_nationkey, n_name, n_regionkey
@@ -3817,8 +3802,7 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       freshDb(s, "graft_conn")
       s.sql("DROP TABLE IF EXISTS graft_conn.nation_c")
-      s.sql(s"""CREATE TABLE graft_conn.nation_c
-               |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+      s.sql("CREATE TABLE graft_conn.nation_c " + Tables.ddl(s, d, "nation"))
       val (cols, rows) = ConnectEndpoint.withServer(s)(port =>
         ConnectEndpoint.query(port,
           """SELECT n_regionkey, COUNT(*) AS n_nations,
@@ -3867,8 +3851,7 @@ object DdlQueries extends QueryGroup {
   private def fixtureCatalog(s: SparkSession, d: String): Unit = {
     s.sql("DROP DATABASE IF EXISTS graft_meta CASCADE")
     s.sql("CREATE DATABASE graft_meta")
-    s.sql(s"""CREATE TABLE graft_meta.nation_meta
-             |USING parquet LOCATION '$d/nation.parquet'""".stripMargin)
+    s.sql("CREATE TABLE graft_meta.nation_meta " + Tables.ddl(s, d, "nation"))
     val partDir = Tables.scratch(d, "lineitem_by_flag")
     // reuse the partitioned rewrite if current; (re)create it if not
     if (!Tables.scratchCurrent(d, "lineitem", partDir)) {

@@ -53,8 +53,8 @@ object HiveRoundtrip {
       "hive support not active")
 
     spark.sql("CREATE DATABASE hive_src")
-    spark.sql(s"""CREATE TABLE hive_src.nation_h
-                 |USING parquet LOCATION '$sfDir/nation.parquet'""".stripMargin)
+    spark.sql("CREATE TABLE hive_src.nation_h " +
+      graft.Tables.ddl(spark, sfDir, "nation"))
     spark.sql("""ALTER TABLE hive_src.nation_h
                 |SET TBLPROPERTIES ('graft.via' = 'hms')""".stripMargin)
     // hive-SerDe table: headerless CSV + LazySimpleSerDe, external so the

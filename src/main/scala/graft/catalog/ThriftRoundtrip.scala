@@ -105,8 +105,8 @@ object ThriftRoundtrip {
       "session is not talking to the Thrift endpoint")
 
     spark.sql("CREATE DATABASE thrift_src")
-    spark.sql(s"""CREATE TABLE thrift_src.nation_t
-                 |USING parquet LOCATION '$sfDir/nation.parquet'""".stripMargin)
+    spark.sql("CREATE TABLE thrift_src.nation_t " +
+      graft.Tables.ddl(spark, sfDir, "nation"))
     spark.sql("""ALTER TABLE thrift_src.nation_t
                 |SET TBLPROPERTIES ('graft.via' = 'thrift')""".stripMargin)
     spark.sql("""CREATE FUNCTION thrift_src.thrift_pi

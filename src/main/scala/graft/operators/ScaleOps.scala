@@ -405,8 +405,7 @@ object ScaleOps extends QueryGroup {
         "orders" -> "o_custkey, o_totalprice")
       for (t <- Seq("nation", "customer", "orders")) {
         s.sql(s"DROP TABLE IF EXISTS graft_cbo.${t}_cbo")
-        s.sql(s"""CREATE TABLE graft_cbo.${t}_cbo
-                 |USING parquet LOCATION '$d/$t.parquet'""".stripMargin)
+        s.sql(s"CREATE TABLE graft_cbo.${t}_cbo " + Tables.ddl(s, d, t))
         s.sql(s"ANALYZE TABLE graft_cbo.${t}_cbo COMPUTE STATISTICS " +
           s"FOR COLUMNS ${cbCols(t)}")
       }

@@ -31,9 +31,13 @@ object TpchQueries extends QueryGroup {
 
   private val dec = DecimalType(18, 6)
 
-  /** Exact decimal sum of a double expression, rounded at output. */
+  /** Exact decimal sum of a double expression, rounded at output. The
+    * DECIMAL is rounded before the cast to DOUBLE, so an exact `.xx5`
+    * tie rounds half-up in both engines. Rounding the double instead
+    * splits them: Spark rounds its shortest decimal string (…791.215
+    * gives .22), DuckDB the binary value (…791.21499997 gives .21). */
   private def dsum(e: org.apache.spark.sql.Column, scale: Int) =
-    round(sum(e.cast(dec)).cast("double"), scale)
+    round(sum(e.cast(dec)), scale).cast("double")
 
   private def view(s: SparkSession, d: String, t: String): Unit =
     Tables(s, d, t).createOrReplaceTempView(s"tq_$t")
@@ -344,9 +348,9 @@ object TpchQueries extends QueryGroup {
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_base_price,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_disc_price,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_charge,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_base_price,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
         |  ROUND(CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / COUNT(*), 4) AS avg_qty,
         |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 4) AS avg_price,
         |  COUNT(*) AS count_order
@@ -383,7 +387,7 @@ object TpchQueries extends QueryGroup {
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
 
     "q6_forecast_revenue" ->
-      """SELECT ROUND(CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+      """SELECT CAST(ROUND(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
         |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
@@ -488,7 +492,7 @@ object TpchQueries extends QueryGroup {
         |    WHERE l2.l_partkey = p.p_partkey)""".stripMargin,
 
     "q19_disjunctive" ->
-      """SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+      """SELECT CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
         |FROM lineitem l, part p
         |WHERE p.p_partkey = l.l_partkey AND (
         |  (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 1 AND 21)

@@ -394,23 +394,25 @@ object Scans extends QueryGroup {
     // (content must be byte-identical up to row order). repartition, not
     // coalesce: coalesce(2) propagates upstream and collapses the READ
     // to 2 tasks; repartition keeps the scan parallel (64 read tasks)
-    // and pays one shuffle to land exactly 2 output files.
+    // and pays one shuffle to land exactly 2 output files. Both dirs
+    // hold the orders frame's rows, so both read back with its schema
+    // (loading the frame runs no job) instead of inferring it.
     "sink_compact" -> ((s, d) => {
       val frag = Tables.scratch(d, "orders_fragmented")
       val compact = Tables.scratch(d, "orders_compacted")
+      val orders = Tables(s, d, "orders")
       if (!Tables.scratchCurrent(d, "orders", frag)) {
-        Tables(s, d, "orders").repartition(64)
-          .write.mode("overwrite").parquet(frag)
+        orders.repartition(64).write.mode("overwrite").parquet(frag)
         Tables.stampScratch(d, "orders", frag)
       }
-      s.read.parquet(frag).repartition(2)
+      s.read.schema(orders.schema).parquet(frag).repartition(2)
         .write.mode("overwrite").parquet(compact)
       val outPath = new org.apache.hadoop.fs.Path(compact)
       val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val nFiles = fs.globStatus(new org.apache.hadoop.fs.Path(
         compact, "*.parquet")).length
       require(nFiles <= 2, s"compaction left $nFiles files")
-      s.read.parquet(compact)
+      s.read.schema(orders.schema).parquet(compact)
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice"), 4).as("o_totalprice"))
         .orderBy("o_orderkey")

@@ -41,8 +41,10 @@ object StreamOps extends QueryGroup {
   }
 
   /** Run a streaming DataFrame to completion into a memory sink and
-    * return the sink's content. State-store instances scale with
-    * shuffle partitions; for a single-file local replay 8 is plenty.
+    * return the sink's content. A stateful query keeps one state-store
+    * instance per shuffle partition, so it takes the session's
+    * `spark.sql.shuffle.partitions`: every harness sets that to its core
+    * count, one store per core, as the sizing note below asks.
     *
     * 100 TB sizing note: a real deployment sizes
     * `spark.sql.shuffle.partitions` ≈ total executor cores (each
@@ -53,39 +55,30 @@ object StreamOps extends QueryGroup {
     * the RocksDB provider once per-partition state outgrows executor
     * heap (large dedup indexes, wide transformWithState maps —
     * changelog-checkpointed, spill-to-disk). At fixture scale these keys
-    * cost a fixed ~0.9 s of micro-batch machinery, not data work, which
+    * cost a fixed ~0.5 s of micro-batch machinery, not data work, which
     * amortizes to noise at production batch sizes. Measured on
     * `stream_tumbling` (perfbench `catalog_ingest`, traced, sf0.01,
-    * local[4] on a 4-core VM; one micro-batch; median of 3), its ~0.88 s
-    * splits as: the trigger ~0.50 s, nearly all `addBatch` (~0.43 s:
-    * the aggregation, its 8 state-store delta-file commits and the sink
-    * write); `walCommit` and `commitOffsets`, the offset- and commit-log
-    * writes, ~3–4 ms each; the rest of the build (schema read, query
-    * start and stop) ~0.18 s; reading the sink back ~0.13 s. With
-    * Spark's session artifact isolation on (see `graft.Query`), each
-    * run in a fresh session recompiled every generated class: the key
-    * took ~1.35 s, `addBatch` ~0.78 s. Before that, with Hadoop's stock
-    * local FileSystem, which forks a process per checkpoint file (see
-    * `graft.fs.NioLocalFileSystem`), it took ~1.4–1.7 s: `addBatch`
-    * ~0.75–0.90 s and the two log writes 30–46 ms each. */
+    * local[4] on a 4-core VM; one micro-batch; median of 4), its build
+    * of ~0.40 s splits as: the trigger ~0.34 s, most of it `addBatch`
+    * (~0.28 s: the aggregation, its 4 state-store delta-file commits and
+    * the sink write); `walCommit` and `commitOffsets`, the offset- and
+    * commit-log writes, ~2–4 ms each; the rest (schema read, query start
+    * and stop) ~0.07 s. Reading the sink back takes ~0.12 s. With 8
+    * state partitions on 4 cores the build took ~0.50 s and `addBatch`
+    * ~0.36 s: two waves of state-store tasks. */
   def runToTable(df: DataFrame, name: String, mode: String,
       availableNow: Boolean = false): DataFrame = {
-    val s = df.sparkSession
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      var w = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-      // AvailableNow: the production catch-up trigger — process the
-      // whole backlog in rate-limited batches, then STOP on its own
-      // (awaitTermination, not processAllAvailable+stop)
-      if (availableNow)
-        w = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val q = w.start()
-      try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    var w = df.writeStream.outputMode(mode)
+      .format("memory").queryName(name)
+    // AvailableNow: the production catch-up trigger — process the
+    // whole backlog in rate-limited batches, then STOP on its own
+    // (awaitTermination, not processAllAvailable+stop)
+    if (availableNow)
+      w = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    val q = w.start()
+    try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
+    finally q.stop()
+    df.sparkSession.table(name)
   }
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -167,18 +160,13 @@ object StreamOps extends QueryGroup {
         .select(col("value").as("seq"),
           (col("value") % 250).as("pos_in_batch"),
           unix_millis(col("timestamp")).as("ts_ms"))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val q = bounded.writeStream.outputMode("append")
         .format("memory").queryName("graft_stream_rate").start()
       try {
         val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
         while (s.table("graft_stream_rate").count() < 1000
             && System.nanoTime < deadline) Thread.sleep(50)
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-      }
+      } finally q.stop()
       s.table("graft_stream_rate").orderBy("seq")
     }),
 

@@ -20,6 +20,33 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("q1 rounds its exact DECIMAL sums half-up at a .xx5 tie") {
+    // discounted prices 50.05 + 0.165: the exact sum is the tie 50.215,
+    // the double sum 50.214999999999996. Rounding the DECIMAL gives
+    // .22, in Spark and in the DuckDB oracle alike.
+    val d = java.nio.file.Files.createTempDirectory("graft_q1_tie").toString
+    try {
+      val ts = java.sql.Timestamp.valueOf("1998-01-01 00:00:00")
+      spark.createDataFrame(Seq(
+          (1.0, 100.1, 0.5, 0.0, "N", "O", ts),
+          (2.0, 0.33, 0.5, 0.0, "N", "O", ts)))
+        .toDF("l_quantity", "l_extendedprice", "l_discount", "l_tax",
+          "l_returnflag", "l_linestatus", "l_shipdate")
+        .coalesce(1).write.parquet(s"$d/out")
+      // Tables reads a fixture as one parquet file
+      val part = new java.io.File(s"$d/out").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(s"$d/lineitem.parquet"))
+      val r = SparkEntry.queries("q1_pricing_summary")(spark, d).collect()
+      assert(r.length == 1)
+      assert(r(0).getAs[Double]("sum_base_price") == 100.43)
+      assert(r(0).getAs[Double]("sum_disc_price") == 50.22)
+      assert(r(0).getAs[Double]("sum_charge") == 50.22)
+      assert(r(0).getAs[Long]("count_order") == 2L)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+  }
+
   test("weighted percentile boundaries bracket the weighted median " +
       "per group, over identical totals") {
     // both keys collapse through the same (flag, quantity) rollup —

@@ -5,6 +5,9 @@ import graft.catalog.KeyCatalog
 import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 /** Multi-batch streaming semantics that single-replay queries can't
   * observe: watermark late-drop in append mode, cross-batch keyed state,
@@ -170,6 +173,28 @@ class StreamingSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_events"))
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "stream and batch tumbling aggregation differ")
+  }
+
+  test("stream_tumbling keeps one state store per session shuffle " +
+      "partition") {
+    val ss = spark.newSession()
+    val stateParts = new java.util.concurrent.LinkedBlockingQueue[Int]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == "graft_stream_tumbling")
+          e.progress.stateOperators.headOption
+            .foreach(op => stateParts.put(op.numShufflePartitions.toInt))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    ss.streams.addListener(listener)
+    try {
+      assert(SparkEntry.queries("stream_tumbling")(ss, sf).collect()
+        .nonEmpty)
+      val got = stateParts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(got == ss.conf.get("spark.sql.shuffle.partitions").toInt,
+        s"the aggregation kept $got state partitions")
+    } finally ss.streams.removeListener(listener)
   }
 
   test("incremental CDC upsert equals the batch changelog compaction") {
