@@ -46,13 +46,7 @@ object Bench {
     val missing = headline.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty,
       s"headline keys missing from queries: ${missing.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // absorb one-time JVM/codegen/file-listing warmup outside the timings
     SparkEntry.queries.get("agg_hash_group")

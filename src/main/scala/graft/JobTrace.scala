@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization rounds): run one query key and print every
   * Spark job's wall time + description/callsite, so multi-statement
@@ -15,11 +14,7 @@ object JobTrace {
     val sfDir = positional.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = args.collectFirst { case a if a.startsWith("cpus=") =>
       a.stripPrefix("cpus=") }.getOrElse("32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -76,14 +76,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder(
       s"""# Physical plans of flagship queries (generated: `sbt "runMain graft.PlanDump"`, $sfDir, local[4])

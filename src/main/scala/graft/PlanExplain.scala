@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence tool: write `.explain("formatted")` of one
   * or more query keys to plans/r20/<key>_<tag>.txt. Run with
@@ -18,13 +17,7 @@ object PlanExplain {
     require(keys.nonEmpty, "usage: PlanExplain <tag> <key> [key ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get("plans/r20"))
     for (key <- keys) {

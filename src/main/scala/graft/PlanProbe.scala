@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: execute one query key and print exchange/scan/stage counts
   * of its final adaptive plan, the generated classes its timed runs
@@ -26,20 +25,14 @@ object PlanProbe {
     // cpus=N reproduces the bench's local[N] / N-shuffle-partition config
     val cpus = args.collectFirst { case a if a.startsWith("cpus=") =>
       a.stripPrefix("cpus=") }.getOrElse("8")
-    var b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // conf:key=value — ad-hoc session conf for optimization experiments
-    args.filter(_.startsWith("conf:")).foreach { a =>
+    val spark = Session(cpus, args.filter(_.startsWith("conf:")).map { a =>
       a.stripPrefix("conf:").split("=", 2) match {
-        case Array(k, v) => b = b.config(k, v)
+        case Array(k, v) => k -> v
         case _ => sys.error(
           s"bad conf flag '$a' — expected conf:<key>=<value>")
       }
-    }
-    val spark = b.getOrCreate()
+    }.toIndexedSeq: _*)
     spark.sparkContext.setLogLevel("ERROR")
     // warm: run once first so SECS measures steady-state, not JVM/codegen
     if (args.contains("warm"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale-growth evidence for the iterative/index-backed heavies: run a
   * key at successive fixture scales (sf0.01 → sf0.1 = 10× data) and
@@ -191,13 +190,7 @@ object ScaleCurves {
     val missing = keys.map(_._1).filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown keys: ${missing.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Micro-batch attribution for streaming keys: a replayed file stream
     // whose cost is N near-empty triggers has a very different 100 TB

@@ -86,9 +86,10 @@ object Tables {
     }
 
   /** Scratch directory for derived fixtures (CSV/JSON round-trips,
-    * partitioned rewrites, catalog warehouses). Keyed by sf dir so
-    * concurrent runs at different scale factors never collide.
-    * Never inside /root/testdata (read-only).
+    * catalog warehouses, per-run outputs). Keyed by sf dir so
+    * concurrent runs at different scale factors never collide, and
+    * never inside the read-only fixture dir. A dir reused across runs
+    * is an [[Artifact]], which derives its dir from here.
     */
   def scratch(sfDir: String, tag: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -96,32 +97,4 @@ object Tables {
     new java.io.File(dir).getParentFile.mkdirs()
     dir
   }
-
-  private def fingerprint(sfDir: String, table: String): String = {
-    val src = new java.io.File(sfDir, s"$table.parquet")
-    s"${src.length}:${src.lastModified}"
-  }
-
-  /** True when `dir` holds a completed derived rewrite of `sfDir/table`
-    * AND the source fixture hasn't changed since (length+mtime marker).
-    * A bare _SUCCESS guard would serve stale derived data after the
-    * fixtures are regenerated in place. `ver` names the write RECIPE:
-    * bump it when the writer's options change semantically (e.g. bloom
-    * filters enabled) so pre-change scratch dirs re-materialize instead
-    * of silently serving the old layout. */
-  def scratchCurrent(sfDir: String, table: String, dir: String,
-      ver: String = ""): Boolean = {
-    val marker = new java.io.File(dir, "_GRAFT_SRC")
-    new java.io.File(dir, "_SUCCESS").exists() && marker.exists() && {
-      val s = scala.io.Source.fromFile(marker)
-      try s.mkString == fingerprint(sfDir, table) + ver finally s.close()
-    }
-  }
-
-  /** Record the source fingerprint after a successful derived write. */
-  def stampScratch(sfDir: String, table: String, dir: String,
-      ver: String = ""): Unit =
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "_GRAFT_SRC").toPath,
-      fingerprint(sfDir, table) + ver)
 }

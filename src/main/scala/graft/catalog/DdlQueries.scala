@@ -1,6 +1,7 @@
 package graft.catalog
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
+import graft.sources.Scans
 import graft.catalog.KeyCatalog.keyed
 import org.apache.commons.io.FileUtils.deleteQuietly
 import org.apache.spark.sql.SparkSession
@@ -209,13 +210,7 @@ object DdlQueries extends QueryGroup {
     // the metastore's bread-and-butter objects (SHOW PARTITIONS view).
     "ddl_partition_mgmt" -> ((s, d) => {
       freshDb(s, "graft_ext")
-      val partDir = Tables.scratch(d, "lineitem_by_flag")
-      if (!Tables.scratchCurrent(d, "lineitem", partDir)) {
-        Tables(s, d, "lineitem").write.mode("overwrite")
-          .partitionBy("l_returnflag").parquet(partDir)
-        Tables.stampScratch(d, "lineitem", partDir)
-      }
-      val abs = new java.io.File(partDir).getAbsolutePath
+      val abs = Scans.lineitemByFlagDir(s, d)
       s.sql("DROP TABLE IF EXISTS graft_ext.li_pm")
       s.sql(CatalogTransfer.externalPartitionedDdl(s,
         "graft_ext.li_pm", abs, Seq("l_returnflag")))
@@ -522,15 +517,8 @@ object DdlQueries extends QueryGroup {
       import s.implicits._
       s.sql("DROP DATABASE IF EXISTS graft_stp CASCADE")
       s.sql("CREATE DATABASE graft_stp")
-      val partDir = Tables.scratch(d, "lineitem_by_flag")
-      if (!Tables.scratchCurrent(d, "lineitem", partDir)) {
-        Tables(s, d, "lineitem").write.mode("overwrite")
-          .partitionBy("l_returnflag").parquet(partDir)
-        Tables.stampScratch(d, "lineitem", partDir)
-      }
       s.sql(CatalogTransfer.externalPartitionedDdl(s,
-        "graft_stp.li_sp",
-        new java.io.File(partDir).getAbsolutePath, Seq("l_returnflag")))
+        "graft_stp.li_sp", Scans.lineitemByFlagDir(s, d), Seq("l_returnflag")))
       s.catalog.recoverPartitions("graft_stp.li_sp")
       for (f <- Seq("A", "N", "R"))
         s.sql(s"ANALYZE TABLE graft_stp.li_sp " +
@@ -613,18 +601,13 @@ object DdlQueries extends QueryGroup {
     // location; the view must re-resolve inside the renamed db. The
     // oracle selects the source parquet — relocation must be lossless.
     "meta_import_remap" -> ((s, d) => {
-      val reloc = Tables.scratch(d, "remap_reloc")
       // relocate a copy of region.parquet (file copy, not engine
       // rewrite: a migration moves bytes, the snapshot moves metadata)
-      if (!Tables.scratchCurrent(d, "region", reloc)) {
-        val src = new java.io.File(s"$d/region.parquet")
-        val dst = new java.io.File(reloc, "region.parquet")
+      val reloc = remapReloc.get(d) { out =>
+        val dst = new java.io.File(out, "region.parquet")
         dst.getParentFile.mkdirs()
-        java.nio.file.Files.copy(src.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.writeString(
-          new java.io.File(reloc, "_SUCCESS").toPath, "")
-        Tables.stampScratch(d, "region", reloc)
+        java.nio.file.Files.copy(new java.io.File(s"$d/region.parquet").toPath,
+          dst.toPath)
       }
       s.sql("DROP DATABASE IF EXISTS graft_mig CASCADE")
       s.sql("DROP DATABASE IF EXISTS graft_mig_prod CASCADE")
@@ -699,28 +682,11 @@ object DdlQueries extends QueryGroup {
     // in its own JVM: HiveRoundtrip creates datasource + Hive-SerDe
     // tables, exports, drops the database from HMS, imports, asserts
     // fidelity, and dumps the round-tripped table as parquet for the
-    // oracle diff. Idempotent per input dir (_SUCCESS guard) — the
-    // subprocess runs once, later invocations just read the dump.
+    // oracle diff. The dump is an artefact: the subprocess runs once per
+    // fixture, later invocations just read it.
     "meta_hive_roundtrip" -> ((s, d) => {
-      val out = new java.io.File(Tables.scratch(d, "hive_roundtrip_out"))
-        .getAbsolutePath
-      if (!Tables.scratchCurrent(d, "nation", out)) {
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val cmd = Seq(javaBin) ++ HiveRoundtrip.jdkOpens ++ Seq(
-          "-Xmx2g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.catalog.HiveRoundtrip", d, out)
-        val log = new java.io.PrintWriter("target/hive_roundtrip_sub.log")
-        import scala.sys.process._
-        val rc = try Process(cmd).!(ProcessLogger(log.println, log.println))
-        finally log.close()
-        require(rc == 0,
-          s"HiveRoundtrip subprocess rc=$rc (target/hive_roundtrip_sub.log)")
-        Tables.stampScratch(d, "nation", out)
-      }
-      s.read.parquet(out).orderBy("n_nationkey")
+      s.read.parquet(forkedBuild(hiveRoundtripOut,
+        "graft.catalog.HiveRoundtrip", d)).orderBy("n_nationkey")
     }),
 
     // HMS-side partition pruning PROVEN on the real Hive path (r13):
@@ -733,28 +699,10 @@ object DdlQueries extends QueryGroup {
     // pruning-disabled control fetched ALL partitions. The oracled
     // result is the pruned aggregate itself, so a wrong-partition scan
     // fails the DuckDB diff too. Subprocess JVM for the same
-    // fixed-catalog reason as meta_hive_roundtrip; idempotent per input
-    // dir via the scratch fingerprint.
+    // fixed-catalog reason as meta_hive_roundtrip; an artefact as well.
     "meta_hive_partition_prune" -> ((s, d) => {
-      val out = new java.io.File(Tables.scratch(d, "hive_pprune_out"))
-        .getAbsolutePath
-      if (!Tables.scratchCurrent(d, "orders", out)) {
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val cmd = Seq(javaBin) ++ HiveRoundtrip.jdkOpens ++ Seq(
-          "-Xmx2g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.catalog.HivePartitionPrune", d, out)
-        val logPath = s"$out.sub.log"
-        val log = new java.io.PrintWriter(logPath)
-        import scala.sys.process._
-        val rc = try Process(cmd).!(ProcessLogger(log.println, log.println))
-        finally log.close()
-        require(rc == 0, s"HivePartitionPrune subprocess rc=$rc ($logPath)")
-        Tables.stampScratch(d, "orders", out)
-      }
-      s.read.parquet(out).orderBy("o_year")
+      s.read.parquet(forkedBuild(hivePpruneOut,
+        "graft.catalog.HivePartitionPrune", d)).orderBy("o_year")
     }),
 
     // the reference's ACTUAL transport: the same export→drop→import
@@ -762,32 +710,10 @@ object DdlQueries extends QueryGroup {
     // (HiveMetaStore server thread + a hive.metastore.uris session —
     // the managed-HMS boundary at metastore-import.tf:112-117), not an
     // embedded direct-JDBC catalog. Subprocess JVM for the same
-    // fixed-catalog reason as meta_hive_roundtrip; idempotent per input
-    // dir via the scratch fingerprint.
+    // fixed-catalog reason as meta_hive_roundtrip; an artefact as well.
     "meta_thrift_roundtrip" -> ((s, d) => {
-      val out = new java.io.File(Tables.scratch(d, "thrift_roundtrip_out"))
-        .getAbsolutePath
-      if (!Tables.scratchCurrent(d, "nation", out)) {
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val cmd = Seq(javaBin) ++ HiveRoundtrip.jdkOpens ++ Seq(
-          "-Xmx2g", "-Dspark.ui.enabled=false",
-          "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.catalog.ThriftRoundtrip", d, out)
-        // log next to the scratch artifacts (whose parent scratch()
-        // already created) — a bare relative "target/…" path throws in
-        // the PrintWriter constructor when the driver's cwd isn't the
-        // build root, failing the op before the subprocess even starts
-        val logPath = s"$out.sub.log"
-        val log = new java.io.PrintWriter(logPath)
-        import scala.sys.process._
-        val rc = try Process(cmd).!(ProcessLogger(log.println, log.println))
-        finally log.close()
-        require(rc == 0, s"ThriftRoundtrip subprocess rc=$rc ($logPath)")
-        Tables.stampScratch(d, "nation", out)
-      }
-      s.read.parquet(out).orderBy("n_nationkey")
+      s.read.parquet(forkedBuild(thriftRoundtripOut,
+        "graft.catalog.ThriftRoundtrip", d)).orderBy("n_nationkey")
     }),
 
     // the shared-metastore semantics LIVE: export the fixture catalog,
@@ -3845,6 +3771,30 @@ object DdlQueries extends QueryGroup {
       .orderBy("stmt_order")
   }
 
+  val remapReloc = Artifact("remap_reloc", "region")
+  val hiveRoundtripOut = Artifact("hive_roundtrip_out", "nation")
+  val hivePpruneOut = Artifact("hive_pprune_out", "orders")
+  val thriftRoundtripOut = Artifact("thrift_roundtrip_out", "nation")
+
+  /** `art`'s dir, built by `main <sfDir> <outDir>` in its own JVM (the
+    * catalog implementation is fixed per SparkContext). The child's log
+    * goes next to the dir: the parent that [[Tables.scratch]] created,
+    * an absolute path whatever the JVM's working dir. */
+  private def forkedBuild(art: Artifact, main: String, d: String): String =
+    art.get(d) { out =>
+      val cmd = Seq(java.nio.file.Paths.get(
+          System.getProperty("java.home"), "bin", "java").toString) ++
+        HiveRoundtrip.jdkOpens ++ Seq("-Xmx2g", "-Dspark.ui.enabled=false",
+          "-Dspark.sql.session.timeZone=UTC",
+          "-cp", System.getProperty("java.class.path"), main, d, out)
+      val logPath = s"${art.dir(d)}.sub.log"
+      val log = new java.io.PrintWriter(logPath)
+      import scala.sys.process._
+      val rc = try Process(cmd).!(ProcessLogger(log.println, log.println))
+      finally log.close()
+      require(rc == 0, s"$main subprocess rc=$rc ($logPath)")
+    }
+
   /** Fixture catalog for export/import probes: one plain external table,
     * one partitioned external table (partitions are the metastore's core
     * object — SURVEY.md §2 group A basis). */
@@ -3852,16 +3802,9 @@ object DdlQueries extends QueryGroup {
     s.sql("DROP DATABASE IF EXISTS graft_meta CASCADE")
     s.sql("CREATE DATABASE graft_meta")
     s.sql("CREATE TABLE graft_meta.nation_meta " + Tables.ddl(s, d, "nation"))
-    val partDir = Tables.scratch(d, "lineitem_by_flag")
-    // reuse the partitioned rewrite if current; (re)create it if not
-    if (!Tables.scratchCurrent(d, "lineitem", partDir)) {
-      Tables(s, d, "lineitem").write.mode("overwrite")
-        .partitionBy("l_returnflag").parquet(partDir)
-      Tables.stampScratch(d, "lineitem", partDir)
-    }
     s.sql(CatalogTransfer.externalPartitionedDdl(s,
-      "graft_meta.lineitem_part",
-      new java.io.File(partDir).getAbsolutePath, Seq("l_returnflag")))
+      "graft_meta.lineitem_part", Scans.lineitemByFlagDir(s, d),
+      Seq("l_returnflag")))
     s.catalog.recoverPartitions("graft_meta.lineitem_part")
   }
 

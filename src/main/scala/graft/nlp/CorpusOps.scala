@@ -1,6 +1,6 @@
 package graft.nlp
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -113,10 +113,10 @@ object CorpusOps extends QueryGroup {
     val edges = pairs.toDF("src", "dst")
       .union(pairs.select(col("doc_b"), col("doc_a")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // LAZY checkpoints (r19 opt, the trainBpe discipline at
-    // [[trainBpeUncached]]): materialization rides the convergence
-    // sum's job instead of scheduling its own — halves the job count
-    // of a loop that is job-overhead-bound at fixture scale.
+    // LAZY checkpoints (r19 opt, the [[trainBpe]] discipline):
+    // materialization rides the convergence sum's job instead of
+    // scheduling its own — halves the job count of a loop that is
+    // job-overhead-bound at fixture scale.
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint(false)
@@ -165,18 +165,18 @@ object CorpusOps extends QueryGroup {
     "(?<=^| )" + java.util.regex.Pattern.quote(a) +
       " " + java.util.regex.Pattern.quote(b) + "(?= |$)"
 
-  /** Training is deterministic in (corpus dir, rounds), so one VERIFY
-    * pass never needs to train the same table twice — text_bpe_merges
-    * and text_bpe_encode share one training run. Registered with
-    * [[graft.RunCaches]] so the BENCH clears it before every timed
-    * run: a warm memo would make the merges median measure a map
-    * lookup and hide training regressions. (A fixture changing mid-JVM
-    * is not a real scenario; the driver regenerates fixtures only
-    * between processes.) */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, Int), Seq[(Int, String, Long)]]
-  graft.RunCaches.register("bpe")(() => bpeCache.clear())
+  /** The trained BPE merge table (merge_rank, pair, n_occurrences):
+    * tokenizers are trained once and SHIPPED. text_bpe_merges serves it
+    * and text_bpe_encode applies it, so the encode key times encoding,
+    * not training. */
+  val bpeMerges = Artifact("bpe_merges", "documents")
+
+  private def bpeMergesDir(s: SparkSession, d: String): String =
+    bpeMerges.get(d) { out =>
+      import s.implicits._
+      trainBpe(s, d).toDF("merge_rank", "pair", "n_occurrences")
+        .coalesce(1).write.parquet(out)
+    }
 
   /** Candidate-list depth per batched training round: both the engine
     * and CurationOpsSpec's plain-Scala replay accept disjoint pairs
@@ -198,11 +198,7 @@ object CorpusOps extends QueryGroup {
     * (measured: 3.69 s → see BENCH_r09) without changing the per-round
     * plan shape. */
   private def trainBpe(s: SparkSession, d: String,
-      rounds: Int = 10): Seq[(Int, String, Long)] =
-    bpeCache.getOrElseUpdate((d, rounds), trainBpeUncached(s, d, rounds))
-
-  private def trainBpeUncached(s: SparkSession, d: String,
-      rounds: Int): Seq[(Int, String, Long)] = {
+      rounds: Int = 10): Seq[(Int, String, Long)] = {
     var corpus = docs(s, d).select(col("doc_id"), col("text"))
       .localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, Long)]
@@ -251,6 +247,10 @@ object CorpusOps extends QueryGroup {
     merges.result()
   }
 
+  /** The incremental-clustering history: `post/` (doc_id, bigram, set
+    * size) postings and `comp/` its (doc_id, lbl) component map. */
+  val njcInc = Artifact("njc_inc", "documents")
+
   /** Shared core of the incremental-clustering family: merge the batch
     * (doc_id in [300, 1000)) into the PERSISTED history component map
     * via super-node contraction — returns (doc_id, cluster_id) for
@@ -262,21 +262,16 @@ object CorpusOps extends QueryGroup {
         .filter(size(col("sh")) > 0)
         .select(col("doc_id"), col("sh"))
       val hist = scope.filter(col("doc_id") < 300)
-      // r20: the persisted posting index carries the set size on every
-      // row (the ngramJaccardPairs move) — min(n) inside the pair
-      // aggregate replaces the two size-lookup joins per detection
-      // round, and the separate sizes table disappears. Dir names
-      // bumped (_post2/_comp2) so a stale r19-schema index on disk
-      // can never be read by the new plan.
-      val postDir = Tables.scratch(d, "njc_inc_post2")
-      val compDir = Tables.scratch(d, "njc_inc_comp2")
-      if (!Tables.scratchCurrent(d, "documents", compDir)) {
+      // the persisted posting index carries the set size on every row
+      // (the ngramJaccardPairs move): min(n) inside the pair aggregate
+      // replaces two size-lookup joins per detection round
+      val dir = njcInc.get(d) { out =>
         hist.select(col("doc_id"), explode(col("sh")).as("g"),
             size(col("sh")).as("n"))
-          .write.mode("overwrite").parquet(postDir)
+          .write.parquet(s"$out/post")
         // one-time history clustering (yesterday's batch job); from
         // here on only batches propagate
-        val hPost = s.read.parquet(postDir)
+        val hPost = s.read.parquet(s"$out/post")
         val hPairs = hPost.as("x").join(hPost.as("y"),
             col("x.g") === col("y.g"))
           .filter(col("x.doc_id") < col("y.doc_id"))
@@ -289,11 +284,10 @@ object CorpusOps extends QueryGroup {
           .select(col("doc_a"), col("doc_b"))
         connectedComponents(hPairs)
           .select(col("id").as("doc_id"), col("lbl"))
-          .write.mode("overwrite").parquet(compDir)
-        Tables.stampScratch(d, "documents", compDir)
+          .write.parquet(s"$out/comp")
       }
-      val hPost = s.read.parquet(postDir)
-      val hComp = s.read.parquet(compDir)
+      val hPost = s.read.parquet(s"$dir/post")
+      val hComp = s.read.parquet(s"$dir/comp")
       val batch = scope.filter(col("doc_id") >= 300)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val bPost = batch.select(col("doc_id"), explode(col("sh")).as("g"),
@@ -421,12 +415,9 @@ object CorpusOps extends QueryGroup {
             |     WHEN cluster_id = doc_id THEN 'keeper'
             |     ELSE 'dropped' END""".stripMargin).as("status"),
           lit("batch").as("kind"))
-      // _comp2: the r20 dir-name bump (size-carrying posting schema)
-      // renamed the persisted history map; this read missed the rename
-      // and kept pointing at the r19 dir — fine on a machine where the
-      // stale dir survived, PATH_NOT_FOUND on any fresh checkout. The
-      // incClusterMembers call above guarantees the dir exists.
-      val histMap = s.read.parquet(Tables.scratch(d, "njc_inc_comp2"))
+      // the persisted history map; the incClusterMembers call above
+      // published it
+      val histMap = s.read.parquet(s"${njcInc.dir(d)}/comp")
       val flips = members.filter(col("doc_id") < 300)
         .withColumn("status", expr(
           "CASE WHEN cluster_id = doc_id THEN 'keeper' " +
@@ -777,17 +768,7 @@ object CorpusOps extends QueryGroup {
     // CurationOpsSpec replays the batched rule in plain Scala and
     // requires the identical merge table.
     "text_bpe_merges" -> ((s, d) => {
-      import s.implicits._
-      // persist the trained table as an artifact (fixture-stamped):
-      // tokenizers are trained once and SHIPPED — text_bpe_encode
-      // consumes this instead of re-training, which is both the real
-      // pipeline shape and what keeps the bench's encode timing an
-      // encoding measurement
-      val dir = Tables.scratch(d, "bpe_merges")
-      trainBpe(s, d).toDF("merge_rank", "pair", "n_occurrences")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      Tables.stampScratch(d, "documents", dir)
-      s.read.parquet(dir).orderBy("merge_rank")
+      s.read.parquet(bpeMergesDir(s, d)).orderBy("merge_rank")
     }),
 
     // Tokenizer APPLICATION: encode the corpus with the merge table the
@@ -801,19 +782,10 @@ object CorpusOps extends QueryGroup {
     // shrinkage. No oracle: the merge regex needs lookaround, which
     // DuckDB's RE2 cannot express.
     "text_bpe_encode" -> ((s, d) => {
-      // consume the shipped artifact when it is current for this
-      // fixture; train only when it is missing/stale (key ordering in
-      // a verify pass is arbitrary)
-      val dir = Tables.scratch(d, "bpe_merges")
-      val merges: Seq[(Int, String, Long)] =
-        if (Tables.scratchCurrent(d, "documents", dir))
-          s.read.parquet(dir).orderBy("merge_rank").collect()
-            .map(r => (r.getAs[Int]("merge_rank"),
-              r.getAs[String]("pair"), r.getAs[Long]("n_occurrences")))
-            .toSeq
-        else trainBpe(s, d)
+      val merges = s.read.parquet(bpeMergesDir(s, d))
+        .orderBy("merge_rank").collect().map(_.getAs[String]("pair"))
       val encoded = merges.foldLeft(col("text")) {
-        case (c, (_, pair, _)) =>
+        case (c, pair) =>
           val Array(a, b) = pair.split(" ", 2)
           regexp_replace(c, bpePattern(a, b), a + "_" + b)
       }

@@ -1,6 +1,5 @@
 package graft.nlp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the MinHash+LSH dedup pipeline: runs
@@ -18,13 +17,7 @@ object DedupScale {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     for (d <- dirs) {
       val docs = graft.Tables(spark, d, "documents").select("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft.nlp
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -732,19 +732,19 @@ object TextOps extends QueryGroup {
   private[graft] def minhashHistIndex(
       s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val bandDir = Tables.scratch(d, "mh_inc_bands")
-    val grpDir = Tables.scratch(d, "mh_inc_groups")
-    if (!Tables.scratchCurrent(d, "documents", bandDir)) {
+    val dir = minhashHist.get(d) { out =>
       val hist = shingled(docs(s, d).filter(col("doc_id") < 300))
       val hg = dupGroups(hist)
-      hg.write.mode("overwrite").parquet(grpDir)
+      hg.write.parquet(s"$out/groups")
       bandsOf(hist.join(hg.filter(col("doc_id") === col("rep"))
         .select("doc_id"), "doc_id"))
-        .write.mode("overwrite").parquet(bandDir)
-      Tables.stampScratch(d, "documents", bandDir)
+        .write.parquet(s"$out/bands")
     }
-    (s.read.parquet(bandDir), s.read.parquet(grpDir))
+    (s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/groups"))
   }
+
+  /** [[minhashHistIndex]]'s `bands/` and `groups/` dirs. */
+  val minhashHist = Artifact("mh_inc", "documents")
 
   /** One incremental near-dup detection round — the
     * dedup_minhash_incremental machinery, factored so the streaming

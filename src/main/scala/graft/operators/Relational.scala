@@ -305,13 +305,7 @@ object Relational extends QueryGroup {
     // reads only the partitions the dim selects. PlanSpec asserts it.
     "join_dpp" -> ((s, d) => {
       import s.implicits._
-      val dir = graft.Tables.scratch(d, "lineitem_by_flag")
-      if (!graft.Tables.scratchCurrent(d, "lineitem", dir)) {
-        Tables(s, d, "lineitem").write.mode("overwrite")
-          .partitionBy("l_returnflag").parquet(dir)
-        graft.Tables.stampScratch(d, "lineitem", dir)
-      }
-      val fact = s.read.parquet(dir)
+      val fact = s.read.parquet(graft.sources.Scans.lineitemByFlagDir(s, d))
       // the dim must be a file relation: a local Seq folds its filter
       // into the relation at optimize time and DPP then sees no
       // selective predicate to derive the runtime partition filter from.

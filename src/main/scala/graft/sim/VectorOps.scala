@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -198,6 +198,11 @@ object VectorOps extends QueryGroup {
        |  FROM subs s JOIN cb2 c ON s.sidx = c.sidx) WHERE rn = 1)""".stripMargin
   }
 
+  val ivfCentroidsArt = Artifact("ivf_centroids", "embeddings")
+  val pqCodebookArt = Artifact("pq_codebook", "embeddings")
+  val ivfAssignHist = Artifact("ivf_assign_hist", "embeddings")
+  val semIncIndex = Artifact("sem_inc_index", "embeddings")
+
   /** Trained IVF coarse quantizer as a fixture-stamped artifact: two
     * [[kmeansStep]] refinements of the %29 seeds over the %2 half-sample,
     * trained ONCE per fixture and persisted (the text_bpe_merges
@@ -211,8 +216,7 @@ object VectorOps extends QueryGroup {
     * oracle — which re-derives training in SQL — still hash-matches.
     * On a cluster the scratch dir moves to object storage unchanged. */
   private[graft] def ivfCentroids(s: SparkSession, d: String): DataFrame = {
-    val dir = Tables.scratch(d, "ivf_centroids")
-    if (!Tables.scratchCurrent(d, "embeddings", dir)) {
+    val dir = ivfCentroidsArt.get(d) { out =>
       val e = emb(s, d)
       val seeds = e.filter(col("vec_id") % 29 === 0)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
@@ -222,8 +226,7 @@ object VectorOps extends QueryGroup {
       // consumes materialized centroids, not step 1's lineage.
       val train = e.filter(col("vec_id") % 2 === 0)
       kmeansStep(train, kmeansStep(train, seeds).localCheckpoint())
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      Tables.stampScratch(d, "embeddings", dir)
+        .coalesce(1).write.parquet(out)
     }
     import s.implicits._
     s.read.parquet(dir).select("cid", "cv").collect()
@@ -239,8 +242,7 @@ object VectorOps extends QueryGroup {
   private def pqCodebook(s: SparkSession, d: String)
       : Seq[(Int, Int, Seq[Double])] = {
     val M = 8; val subDim = 8; val K = 16
-    val dir = Tables.scratch(d, "pq_codebook")
-    if (!Tables.scratchCurrent(d, "embeddings", dir)) {
+    val dir = pqCodebookArt.get(d) { out =>
       val subs = emb(s, d).select(col("vec_id"), posexplode(expr(
           s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $subDim + 1, $subDim))")))
         .withColumnRenamed("pos", "sidx").withColumnRenamed("col", "sv")
@@ -273,8 +275,7 @@ object VectorOps extends QueryGroup {
             array((1 to subDim).map(i => col(s"c$i")): _*).as("cv"))
           .localCheckpoint()
       }
-      cb.coalesce(1).write.mode("overwrite").parquet(dir)
-      Tables.stampScratch(d, "embeddings", dir)
+      cb.coalesce(1).write.parquet(out)
       subs.unpersist(blocking = false)
     }
     s.read.parquet(dir).collect()
@@ -410,16 +411,9 @@ object VectorOps extends QueryGroup {
     * the day-one artifact [[queries sim_ann_ivf_append]] grows. Built
     * once per fixture (ivfCentroids discipline). */
   private[graft] def ivfHistAssignments(s: SparkSession, d: String)
-      : DataFrame = {
-    val dir = Tables.scratch(d, "ivf_assign_hist")
-    if (!Tables.scratchCurrent(d, "embeddings", dir)) {
-      ivfAssign(ivfCentroids(s, d),
-        emb(s, d).filter(col("vec_id") % 5 =!= 3))
-        .write.mode("overwrite").parquet(dir)
-      Tables.stampScratch(d, "embeddings", dir)
-    }
-    s.read.parquet(dir)
-  }
+      : DataFrame =
+    s.read.parquet(ivfAssignHist.get(d)(ivfAssign(ivfCentroids(s, d),
+      emb(s, d).filter(col("vec_id") % 5 =!= 3)).write.parquet(_)))
 
   /** Fresh assignment of the append batch (vec_id % 5 = 3). */
   private[graft] def ivfBatchAssignments(s: SparkSession, d: String)
@@ -855,17 +849,14 @@ object VectorOps extends QueryGroup {
       val e = emb(s, d)
       val cent = e.filter(col("vec_id") % 29 === 0)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val dir = Tables.scratch(d, "sem_inc_index")
-      if (!Tables.scratchCurrent(d, "embeddings", dir)) {
+      val dir = semIncIndex.get(d)(
         e.select(col("vec_id"), col("v")).crossJoin(broadcast(cent))
           .withColumn("ccos", expr(cosExpr("v", "cv")))
           .groupBy("vec_id")
           .agg(max_by(col("cid"),
             struct(col("ccos"), (-col("cid")).as("nc"))).as("cell"),
             first(col("v")).as("v"))
-          .write.mode("overwrite").parquet(dir)
-        Tables.stampScratch(d, "embeddings", dir)
-      }
+          .write.parquet(_))
       val hist = s.read.parquet(dir)
       val batch = e.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"), expr(

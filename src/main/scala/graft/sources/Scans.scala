@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -111,14 +111,7 @@ object Scans extends QueryGroup {
     }),
 
     "scan_partition_prune" -> ((s, d) => {
-      val dir = Tables.scratch(d, "lineitem_by_flag")
-      // write-once per sf dir, re-done if the source fixture changes
-      if (!Tables.scratchCurrent(d, "lineitem", dir)) {
-        Tables(s, d, "lineitem")
-          .write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
-        Tables.stampScratch(d, "lineitem", dir)
-      }
-      s.read.parquet(dir)
+      s.read.parquet(lineitemByFlagDir(s, d))
         .filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_returnflag"))
@@ -211,25 +204,16 @@ object Scans extends QueryGroup {
     // oracle pins the healthy content, so the diff proves BOTH that
     // the corrupt file was skipped AND that nothing else was dropped.
     "scan_ignore_corrupt" -> ((s, d) => {
-      val dir = Tables.scratch(d, "nation_with_corrupt")
-      if (!Tables.scratchCurrent(d, "nation", dir)) {
-        val dst = new java.io.File(dir)
+      val dir = nationWithCorrupt.get(d) { out =>
+        val dst = new java.io.File(out)
         dst.mkdirs()
         java.nio.file.Files.copy(
           new java.io.File(s"$d/nation.parquet").toPath,
-          new java.io.File(dst, "part-0.parquet").toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          new java.io.File(dst, "part-0.parquet").toPath)
         // a "parquet" file that is nothing of the sort
         java.nio.file.Files.write(
           new java.io.File(dst, "part-1-corrupt.parquet").toPath,
           "this is not a parquet file".getBytes)
-        // hand-built dir: scratchCurrent requires the _SUCCESS marker a
-        // Spark write would have left (meta_import_remap precedent) —
-        // without it the freshness guard is permanently false and every
-        // run re-copies the fixture
-        java.nio.file.Files.writeString(
-          new java.io.File(dst, "_SUCCESS").toPath, "")
-        Tables.stampScratch(d, "nation", dir)
       }
       s.read.option("ignoreCorruptFiles", "true").parquet(dir)
         .orderBy("n_nationkey")
@@ -398,13 +382,10 @@ object Scans extends QueryGroup {
     // hold the orders frame's rows, so both read back with its schema
     // (loading the frame runs no job) instead of inferring it.
     "sink_compact" -> ((s, d) => {
-      val frag = Tables.scratch(d, "orders_fragmented")
       val compact = Tables.scratch(d, "orders_compacted")
       val orders = Tables(s, d, "orders")
-      if (!Tables.scratchCurrent(d, "orders", frag)) {
-        orders.repartition(64).write.mode("overwrite").parquet(frag)
-        Tables.stampScratch(d, "orders", frag)
-      }
+      val frag =
+        ordersFragmented.get(d)(orders.repartition(64).write.parquet(_))
       s.read.schema(orders.schema).parquet(frag).repartition(2)
         .write.mode("overwrite").parquet(compact)
       val outPath = new org.apache.hadoop.fs.Path(compact)
@@ -445,20 +426,10 @@ object Scans extends QueryGroup {
     // a catalog-backed table with a file index replaces the walk
     // entirely — the note a real deployment needs next to this key.
     "scan_recursive_glob" -> ((s, d) => {
-      val base = Tables.scratch(d, "nation_nested")
-      // Staleness is gated on the SOURCE fixture ("nation"), not the
-      // scratch tag — fingerprinting a nonexistent nation_nested.parquet
-      // yields a constant and the guard never fires (r10 advice). The
-      // writes land in subdirs, so the root _SUCCESS that scratchCurrent
-      // checks must be touched explicitly.
-      if (!Tables.scratchCurrent(d, "nation", base)) {
+      val base = nationNested.get(d) { out =>
         val n = Tables(s, d, "nation")
         for (r <- 0 to 4)
-          n.filter(col("n_regionkey") === r).write.mode("overwrite")
-            .parquet(s"$base/r$r/sub")
-        java.nio.file.Files.writeString(
-          new java.io.File(base, "_SUCCESS").toPath, "")
-        Tables.stampScratch(d, "nation", base)
+          n.filter(col("n_regionkey") === r).write.parquet(s"$out/r$r/sub")
       }
       s.read.option("recursiveFileLookup", "true").parquet(base)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -670,11 +641,8 @@ object Scans extends QueryGroup {
     // losslessly; the rectangle filter below reads back through the
     // layout with both range predicates pushed to the scan.
     "sink_zorder" -> ((s, d) => {
-      val dir = Tables.scratch(d, "lineitem_zorder")
-      if (!Tables.scratchCurrent(d, "lineitem", dir)) {
-        zorderWrite(Tables(s, d, "lineitem"), "l_orderkey", "l_partkey", dir)
-        Tables.stampScratch(d, "lineitem", dir)
-      }
+      val dir = lineitemZorder.get(d)(
+        zorderWrite(Tables(s, d, "lineitem"), "l_orderkey", "l_partkey", _))
       s.read.parquet(dir)
         .filter(col("l_orderkey").between(1000, 3000) &&
           col("l_partkey").between(50, 120))
@@ -691,8 +659,7 @@ object Scans extends QueryGroup {
     // contain the key. The write enables bloom filters on o_custkey;
     // the read is the equality probe that exercises them.
     "scan_bloom_skip" -> ((s, d) => {
-      val dir = Tables.scratch(d, "orders_bloom")
-      if (!Tables.scratchCurrent(d, "orders", dir, ver = ":bloom2")) {
+      val dir = ordersBloom.get(d) { out =>
         Tables(s, d, "orders")
           // sort by date so o_custkey is uncorrelated with file order —
           // the layout where min/max skipping fails and blooms matter
@@ -708,8 +675,7 @@ object Scans extends QueryGroup {
           // (caught by ScansSpec's footer check); at 100 TB the key
           // blows the dictionary threshold and blooms write either way.
           .option("parquet.enable.dictionary#o_custkey", "false")
-          .parquet(dir)
-        Tables.stampScratch(d, "orders", dir, ver = ":bloom2")
+          .parquet(out)
       }
       s.read.parquet(dir)
         .filter(col("o_custkey") === 42)
@@ -737,6 +703,23 @@ object Scans extends QueryGroup {
         .orderBy("s_suppkey")
     })
   )
+
+  /** lineitem hive-partitioned by `l_returnflag`: the partitioned fact
+    * table of the pruning, DPP and metastore-partition keys. */
+  val lineitemByFlag = Artifact("lineitem_by_flag", "lineitem")
+
+  /** [[lineitemByFlag]]'s dir, built on first use. */
+  def lineitemByFlagDir(s: org.apache.spark.sql.SparkSession,
+      d: String): String =
+    lineitemByFlag.get(d)(
+      Tables(s, d, "lineitem").write.partitionBy("l_returnflag").parquet(_))
+
+  val nationWithCorrupt = Artifact("nation_with_corrupt", "nation")
+  val ordersFragmented = Artifact("orders_fragmented", "orders")
+  val nationNested = Artifact("nation_nested", "nation")
+  val lineitemZorder = Artifact("lineitem_zorder", "lineitem")
+  val ordersBloom = Artifact("orders_bloom", "orders",
+    recipe = "bloom filter, no dictionary on o_custkey")
 
   /** Write `df` z-ordered on (`cx`, `cy`): normalize both columns onto
     * a 16-bit grid (bounds from one tiny pre-agg, broadcast), interleave
@@ -805,7 +788,7 @@ object Scans extends QueryGroup {
     * under-arity, ≡5 carries an unparseable numeric. Written
     * unconditionally (700 tiny rows): an exists() guard would keep
     * serving a stale file after the recipe changes — the staleness
-    * class the ver-stamped scratch discipline exists for. */
+    * class an [[graft.Artifact]] recipe stamp exists for. */
   private[graft] def writeMalformedCsv(): String = {
     val f = new java.io.File(malformedCsvPath)
     val rows = (0 until 700).map { i =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryGroup, Tables}
+import graft.{Artifact, QueryGroup, Tables}
 import graft.catalog.KeyCatalog.keyed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,6 +38,39 @@ object StreamOps extends QueryGroup {
     Tables.normalizeTs(
       s.readStream.schema(raw).option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
+  }
+
+  /** The replay `stream_watermark_late` streams: three event files, one
+    * per micro-batch, in mtime order (the key says why). */
+  val lateReplayFiles = Artifact("wm_late_replay", "events",
+    recipe = "three mtime-ordered files")
+
+  /** File stream over [[lateReplayFiles]], one file per trigger, with
+    * the schema of the frame that wrote the files. */
+  def lateReplay(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables(s, d, "events").select("event_id", "ts", "event_type")
+    val dir = lateReplayFiles.get(d) { out =>
+      val mx = ev.agg(max("ts")).head.getTimestamp(0) // bounded scalar
+      val fw = date_trunc("HOUR", lit(mx))
+      val fw1 = fw - expr("INTERVAL 1 DAY")
+      val t0 = System.currentTimeMillis - 120000
+      val splits = Seq(
+        ("b0_final_window.parquet", col("ts") >= fw, t0),
+        ("b1_spacer.parquet", col("ts") < fw && col("ts") >= fw1, t0 + 5000),
+        ("b2_late.parquet", col("ts") < fw1, t0 + 10000))
+      for ((name, pred, mt) <- splits) {
+        val w = new java.io.File(out, "_write")
+        ev.filter(pred).coalesce(1).write.parquet(w.getPath)
+        val dst = new java.io.File(out, name)
+        java.nio.file.Files.move(
+          w.listFiles().find(_.getName.endsWith(".parquet")).get.toPath,
+          dst.toPath)
+        dst.setLastModified(mt)
+        org.apache.commons.io.FileUtils.deleteQuietly(w)
+      }
+    }
+    s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
+      .parquet(dir)
   }
 
   /** Run a streaming DataFrame to completion into a memory sink and
@@ -220,44 +253,7 @@ object StreamOps extends QueryGroup {
     // monotone). MemoryStream-driven hand-ordered variants stay in
     // StreamingSpec.
     "stream_watermark_late" -> ((s, d) => {
-      val dir = Tables.scratch(d, "wm_late_replay")
-      if (!Tables.scratchCurrent(d, "events", dir, ver = ":3file")) {
-        val ev = Tables(s, d, "events").select("event_id", "ts", "event_type")
-        val mx = ev.agg(max("ts")).head.getTimestamp(0) // bounded scalar
-        val fw = date_trunc("HOUR", lit(mx))
-        val fw1 = fw - expr("INTERVAL 1 DAY")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        new java.io.File(dir).mkdirs()
-        val t0 = System.currentTimeMillis - 120000
-        val splits = Seq(
-          ("b0_final_window.parquet", col("ts") >= fw, t0),
-          ("b1_spacer.parquet", col("ts") < fw && col("ts") >= fw1,
-            t0 + 5000),
-          ("b2_late.parquet", col("ts") < fw1, t0 + 10000))
-        for ((name, pred, mt) <- splits) {
-          val tmp = dir + "_tmp"
-          ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(dir, name)
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt)
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-        }
-        // scratchCurrent requires _SUCCESS in the dir, but the part files
-        // above were MOVED out of tmp writes (each tmp's own _SUCCESS was
-        // deleted with it) — without this marker the guard is always
-        // false and the fixture is rebuilt + re-timestamped every run.
-        // Spark's file listing ignores underscore-prefixed files, so the
-        // marker never becomes a fourth micro-batch.
-        new java.io.File(dir, "_SUCCESS").createNewFile()
-        Tables.stampScratch(d, "events", dir, ver = ":3file")
-      }
-      val schema = s.read.parquet(dir).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      val agg = src
+      val agg = lateReplay(s, d)
         .withWatermark("ts", "10 days")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.catalog._
+import graft.sources.Scans
 import org.apache.spark.sql.functions.col
 
 /** Group G semantics: export→import→export fixed point, DDL rendering,
@@ -57,13 +58,11 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("partitioned table round-trips with recovered partitions") {
-    val partDir = Tables.scratch(sf, "lineitem_by_flag")
-    Tables(spark, sf, "lineitem").write.mode("overwrite")
-      .partitionBy("l_returnflag").parquet(partDir)
+    val partDir = Scans.lineitemByFlagDir(spark, sf)
     spark.sql("DROP DATABASE IF EXISTS graft_part CASCADE")
     spark.sql("CREATE DATABASE graft_part")
     spark.sql(CatalogTransfer.externalPartitionedDdl(spark, "graft_part.li",
-      new java.io.File(partDir).getAbsolutePath, Seq("l_returnflag")))
+      partDir, Seq("l_returnflag")))
     spark.catalog.recoverPartitions("graft_part.li")
     val before = spark.table("graft_part.li").count()
     val dir = Tables.scratch(sf, "catalog_rt_part")
@@ -109,11 +108,7 @@ class CatalogSpec extends SparkSpec {
     // a partition whose data lives OUTSIDE the table directory — exactly
     // what recoverPartitions cannot find; the snapshot must carry the
     // explicit (spec, location) pairs like HMS does.
-    val partDir = Tables.scratch(sf, "lineitem_by_flag")
-    if (!new java.io.File(partDir, "_SUCCESS").exists())
-      Tables(spark, sf, "lineitem").write.mode("overwrite")
-        .partitionBy("l_returnflag").parquet(partDir)
-    val abs = new java.io.File(partDir).getAbsolutePath
+    val abs = Scans.lineitemByFlagDir(spark, sf)
     val elsewhere = Tables.scratch(sf, "li_flag_R_elsewhere")
     Tables(spark, sf, "lineitem").filter(col("l_returnflag") === "R")
       .drop("l_returnflag").write.mode("overwrite").parquet(elsewhere)
@@ -403,6 +398,7 @@ class CatalogSpec extends SparkSpec {
 
   test("remap renames dbs, rewrites view refs, longest prefix wins") {
     import graft.catalog._
+import graft.sources.Scans
     val snap = CatalogSnapshot(
       databases = Seq(DatabaseInfo("src_db", "")),
       tables = Seq(

@@ -1,6 +1,7 @@
 package graft
 
 import graft.catalog.KeyCatalog
+import graft.sources.Scans
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the 100 TB design checks from
@@ -48,8 +49,8 @@ class PlanSpec extends SparkSpec {
   test("scan_partition_prune scans only the selected partition") {
     // run once to materialize the partitioned scratch dir
     SparkEntry.queries("scan_partition_prune")(spark, sf).count()
-    val dir = Tables.scratch(sf, "lineitem_by_flag")
-    val df = spark.read.parquet(dir).filter(col("l_returnflag") === "R")
+    val df = spark.read.parquet(Scans.lineitemByFlag.dir(sf))
+      .filter(col("l_returnflag") === "R")
     val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters: [isnotnull(l_returnflag"),
       s"no partition filter in:\n$scan")

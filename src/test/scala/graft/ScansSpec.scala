@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Scans
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +14,7 @@ class ScansSpec extends SparkSpec {
   test("z-order layout shrinks per-file spans on BOTH dimensions") {
     // materialize the z-ordered scratch dir through the public query
     SparkEntry.queries("sink_zorder")(spark, sf).count()
-    val dir = Tables.scratch(sf, "lineitem_zorder")
+    val dir = Scans.lineitemZorder.dir(sf)
     val perFile = spark.read.parquet(dir)
       .groupBy(input_file_name().as("f"))
       .agg(
@@ -48,7 +49,7 @@ class ScansSpec extends SparkSpec {
   test("bloom-filtered parquet skips row groups on a point probe") {
     // materialize the bloom-filtered scratch dir
     SparkEntry.queries("scan_bloom_skip")(spark, sf).count()
-    val dir = Tables.scratch(sf, "orders_bloom")
+    val dir = Scans.ordersBloom.dir(sf)
     // the write sorted by o_orderdate, so o_custkey is uncorrelated with
     // file order: min/max alone cannot skip, and the bloom filter is the
     // only reason a point probe reads less than everything. Verify the
@@ -75,7 +76,7 @@ class ScansSpec extends SparkSpec {
   }
 
   test("malformed CSV: permissive quarantines, dropmalformed drops") {
-    val rows = graft.sources.Scans.csvMalformedModes(spark)
+    val rows = Scans.csvMalformedModes(spark)
       .collect().map(r => r.getAs[String]("mode") -> r).toMap
     val perm = rows("permissive")
     val drop = rows("dropmalformed")

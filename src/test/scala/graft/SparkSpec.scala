@@ -6,15 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites — one JVM-wide SparkSession. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.ScaleOps
 import graft.streaming.StreamOps
 
 /** Fixture loads take their schema from the parquet footer on the
@@ -48,6 +49,30 @@ class TablesSpec extends SparkSpec {
     assert(df.schema.fieldNames.toSeq ==
       Seq("o_orderkey", "o_custkey", "o_totalprice"))
     assert(df.count() == Tables(ss, sf, "orders").count())
+  }
+
+  test("a fresh session builds stream_watermark_late's replay stream and " +
+      "registers the bucketed tables with no Spark job once their " +
+      "artefacts are current: both take the schema the code holds") {
+    // warm-up: publishes both artefacts
+    StreamOps.lateReplay(spark.newSession(), sf)
+    ScaleOps.bucketedTables(spark.newSession(), sf)
+    val ss = spark.newSession()
+    RunCaches.reset()
+    val (replay, jobs) = withJobCount {
+      ScaleOps.bucketedTables(ss, sf)
+      StreamOps.lateReplay(ss, sf)
+    }
+    assert(jobs == 0, s"the builds started $jobs Spark jobs")
+    def typed(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(typed(replay.schema) == typed(ss.read.parquet(
+      StreamOps.lateReplayFiles.dir(sf)).schema))
+    for ((art, cols, _) <- ScaleOps.bucketed) {
+      val t = ss.table(art.name)
+      assert(t.columns.toSeq == cols)
+      assert(typed(t.schema) == typed(ss.read.parquet(art.dir(sf)).schema))
+    }
   }
 
   for (name <- Tables.names)
