@@ -77,6 +77,8 @@ final case class Artifact(name: String, source: String, recipe: String = "") {
 }
 
 object Artifact {
-  /** Inside the published dir; Spark's file listing skips `_` names. */
-  val StampFile = "_GRAFT_SRC"
+  /** Inside the published dir. Spark's file index and partition
+    * recovery both skip `.` names, so a partitioned artefact's root
+    * holds only its `col=value` dirs as far as either can tell. */
+  val StampFile = ".graft_src"
 }

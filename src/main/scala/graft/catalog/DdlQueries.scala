@@ -1494,19 +1494,21 @@ object DdlQueries extends QueryGroup {
       val head = new java.io.File(kc.dir, "HEAD")
       val rev = new String(java.nio.file.Files
         .readAllBytes(head.toPath)).trim.split("\\s+")(0).toInt
-      val loc2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
-        .find(_.name == "orders_mc").get.location
-      // the compaction: merged rows → clean generation (gc-recognized
-      // `_rl` naming), atomic swap — same primitive as meta_v2_compact
-      val gen2 = Mor.normLoc(loc2) +
-        s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-      s.table(s"$cat.corp.orders_mc").repartition(4)
-        .write.parquet(gen2)
-      s.sql(s"ALTER TABLE $cat.corp.orders_mc SET LOCATION '$gen2'")
+      val ti2 = CatalogTransfer.readLocal(s"${kc.dir}/revs/$rev").tables
+        .find(_.name == "orders_mc").get
+      // the compaction: merged rows → clean generation, atomic swap —
+      // same primitive as meta_v2_compact
+      val gen2 = Generation.of(ti2)
+      gen2.stage {
+        s.table(s"$cat.corp.orders_mc").repartition(4)
+          .write.mode("append").parquet(gen2.root)
+        gen2.publishBy(s.sql(
+          s"ALTER TABLE $cat.corp.orders_mc SET LOCATION '${gen2.root}'"))
+      }
       val post = s.table(s"$cat.corp.orders_mc")
       require(!servesMor(post),
         "a compacted table must serve the unwrapped stock parquet scan")
-      require(!new java.io.File(gen2, "_deletes").exists(),
+      require(!new java.io.File(gen2.root, "_deletes").exists(),
         "compaction must clear the sidecars")
       require(post.count() == nPre,
         "compaction changed the table's content")
@@ -1758,24 +1760,22 @@ object DdlQueries extends QueryGroup {
       val snapA = CatalogTransfer.readLocal(s"${kc.dir}/revs/$revA")
       val tiO = snapA.tables.find(_.name == "orders_tp").get
       val tiC = snapA.tables.find(_.name == "cust_tp").get
-      def norm(l: String): String =
-        l.stripPrefix("file:").stripSuffix("/")
       // stage BOTH migrated generations fully — nothing published yet
-      val genO = norm(tiO.location) + "_rltxa"
-      val genC = norm(tiC.location) + "_rltxb"
-      s.table(s"$cat.corp.orders_tp")
+      val genO = Generation.of(tiO)
+      val genC = Generation.of(tiC)
+      genO.stage(s.table(s"$cat.corp.orders_tp")
         .withColumn("o_totalprice", col("o_totalprice") * 2.0)
-        .write.parquet(genO)
-      s.table(s"$cat.corp.cust_tp")
+        .write.mode("append").parquet(genO.root))
+      genC.stage(s.table(s"$cat.corp.cust_tp")
         .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-        .write.parquet(genC)
+        .write.mode("append").parquet(genC.root))
       require(headRev() == revA,
         "staging must not publish anything")
       val plug = new WritableSnapshotCatalog
       plug.initialize(cat + "_txn",
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Map.of("path", kc.dir)))
-      plug.publishAll(Seq(tiO -> genO, tiC -> genC))
+      Generation.publishAll(plug, Seq(genO, genC))
       val revB = headRev()
       require(revB == revA + 1,
         s"the cutover must be ONE atomic revision, got $revA -> $revB")
@@ -1783,7 +1783,7 @@ object DdlQueries extends QueryGroup {
       // stale TableInfos must refuse and re-point NOTHING
       val stale =
         try {
-          plug.publishAll(Seq(tiO -> (norm(tiO.location) + "_rltxc")))
+          Generation.publishAll(plug, Seq(Generation.of(tiO)))
           false
         } catch {
           case _: java.util.ConcurrentModificationException => true
@@ -2637,7 +2637,7 @@ object DdlQueries extends QueryGroup {
       // scoped DML: the DELETE matches exactly bucket 1; untouched
       // buckets carry over BY INODE (hard link, zero bytes moved)
       def inodesOf(location: String, bucket: Int): Set[Long] = {
-        val bd = new java.io.File(Mor.normLoc(location),
+        val bd = new java.io.File(Generation.path(location),
           s"o_custkey_bucket=$bucket")
         Option(bd.listFiles()).toSeq.flatten
           .filter(f => f.isFile && !f.getName.startsWith("_") &&
@@ -2651,12 +2651,12 @@ object DdlQueries extends QueryGroup {
       val newLoc = CatalogTransfer.readLocal(
           s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_pb").get.location
-      require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
+      require(Generation.path(newLoc) != Generation.path(loc),
         "scoped DELETE must publish a fresh generation")
       require(inodesOf(newLoc, 0) == inodes0,
         s"untouched bucket 0 must carry over by hard link: " +
           s"$inodes0 -> ${inodesOf(newLoc, 0)} (newLoc=$newLoc)")
-      require(Option(new java.io.File(Mor.normLoc(newLoc),
+      require(Option(new java.io.File(Generation.path(newLoc),
           "o_custkey_bucket=1").listFiles()).toSeq.flatten
           .forall(f => !f.isFile || f.getName.startsWith("_")),
         "matched bucket 1 must be rewritten empty")
@@ -2726,7 +2726,7 @@ object DdlQueries extends QueryGroup {
         s"o_custkey_bhash=$delBucket").getOrElse(
         throw new IllegalStateException("need a sibling bucket"))
       def inodesOf(location: String, rel: String): Set[Long] =
-        Option(new java.io.File(Mor.normLoc(location), rel)
+        Option(new java.io.File(Generation.path(location), rel)
           .listFiles()).toSeq.flatten
           .filter(f => f.isFile && !f.getName.startsWith("_") &&
             !f.getName.startsWith("."))
@@ -2738,7 +2738,7 @@ object DdlQueries extends QueryGroup {
       val newLoc = CatalogTransfer.readLocal(
           s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_ph").get.location
-      require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
+      require(Generation.path(newLoc) != Generation.path(loc),
         "scoped DELETE must publish a fresh generation")
       require(inodesOf(newLoc, sibling) == sibInodes,
         "sibling hash bucket must carry over by hard link")
@@ -2941,7 +2941,7 @@ object DdlQueries extends QueryGroup {
       // with its survivors kept; the SAME day's sibling bucket and a
       // different day carry over by inode (hard link, zero bytes)
       def inodesOf(location: String, rel: String): Set[Long] = {
-        val bd = new java.io.File(Mor.normLoc(location), rel)
+        val bd = new java.io.File(Generation.path(location), rel)
         Option(bd.listFiles()).toSeq.flatten
           .filter(f => f.isFile && !f.getName.startsWith("_") &&
             !f.getName.startsWith("."))
@@ -2993,7 +2993,7 @@ object DdlQueries extends QueryGroup {
       val newLoc = CatalogTransfer.readLocal(
           s"${kc.dir}/revs/${headRevAt(kc.dir)}").tables
         .find(_.name == "orders_px").get.location
-      require(Mor.normLoc(newLoc) != Mor.normLoc(loc),
+      require(Generation.path(newLoc) != Generation.path(loc),
         "cell-scoped DELETE must publish a fresh generation")
       require(inodesOf(newLoc, sibling) == sibInodes,
         "same-day sibling bucket must carry over by hard link")

@@ -457,7 +457,7 @@ object FileSkipping {
     for ((name, _, isForeign) <- reusable if isForeign) {
       val dst = new java.io.File(shardDir, name)
       if (!dst.isFile)
-        Mor.linkOne(new java.io.File(
+        Generation.link(new java.io.File(
           new java.io.File(prevRoot.get, ShardDirName), name), dst)
     }
     // SIZE-CAPPED harvest: a cold analyze of an N-file table streams

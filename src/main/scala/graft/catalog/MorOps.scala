@@ -51,14 +51,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[Mor.sidecarBytes]] is the page-on signal), which rewrites merged
   * data and clears `_deletes`.
   *
-  * Publish protocol is the catalog's one atomic primitive, unchanged: a
-  * DELETE lands a FRESH generation dir holding hard links of every data
-  * file and prior sidecar (same inodes — byte-identical, zero data
-  * movement) plus the new sidecar, then swaps the table location with
-  * the same OCC as the COW path. Crash mid-delta: the half-written dir
-  * carries the `_graftwriting` marker ([[WritableSnapshotCatalog
-  * .gcGenerations]] leaves it alone until the rewrite grace window) and
-  * the table still points at the old generation — nothing published.
+  * Publish protocol: a delta statement lands a fresh [[Generation]]
+  * holding hard links of every data file and prior sidecar plus its new
+  * sidecar, and publishes it like any COW rewrite — a crash mid-delta
+  * publishes nothing.
   *
   * Read-path cost model (the honest trade): a table with ZERO
   * outstanding deletes serves the UNWRAPPED stock parquet scan
@@ -149,9 +145,6 @@ private[catalog] object Mor {
   def cdcFileName(sidecarName: String): String =
     sidecarName + ".cdc.parquet"
 
-  def normLoc(loc: String): String =
-    loc.stripPrefix("file:").stripSuffix("/")
-
   /** One key per line; strings URL-encoded so any value stays
     * one-line-safe. The reader-side comparison forms are what
     * InternalRow.get returns (boxed Long/Integer, UTF8String). */
@@ -203,7 +196,7 @@ private[catalog] object Mor {
     * applies-to entries qualified by the partition dir (the [[fileId]]
     * form). Sorted file order for determinism. */
   def loadSidecars(loc: String): Seq[DeleteSidecar] = {
-    val root = new java.io.File(normLoc(loc))
+    val root = new java.io.File(Generation.path(loc))
     def loadDir(dir: java.io.File, prefix: String): Seq[DeleteSidecar] = {
       val files = Option(dir.listFiles()).toSeq.flatten
         .filter(f => f.isFile && f.getName.endsWith(".keys"))
@@ -232,7 +225,7 @@ private[catalog] object Mor {
   /** Outstanding sidecar volume — the compaction page-on signal —
     * summed over the root and every hive partition dir. */
   def sidecarBytes(loc: String): Long = {
-    val root = new java.io.File(normLoc(loc))
+    val root = new java.io.File(Generation.path(loc))
     def bytes(dir: java.io.File): Long =
       Option(dir.listFiles()).toSeq.flatten.filter(_.isFile)
         .map(_.length).sum
@@ -242,29 +235,18 @@ private[catalog] object Mor {
         .map(d => bytes(new java.io.File(d, DeletesDirName))).sum
   }
 
-  /** Hard-link every visible file of `src` into `dst` (same inodes —
-    * byte-identical, zero data movement); honest copy on filesystems
-    * without links. The COW carry-over primitive shared with
-    * [[PartitionRoutedCowWrite]]. */
-  def linkAll(src: java.io.File, dst: java.io.File): Unit = {
-    Option(src.listFiles()).toSeq.flatten
-      .filter(f => f.isFile && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))
-      .foreach(f => linkOne(f, new java.io.File(dst, f.getName)))
-  }
-
-  /** Hard-link one file; honest copy ONLY on filesystems without
-    * links. A name collision rethrows loudly — falling through to a
-    * REPLACE_EXISTING copy would silently clobber a just-committed
-    * fresh file with the old generation's bytes. */
-  def linkOne(src: java.io.File, dst: java.io.File): Unit = {
-    try java.nio.file.Files.createLink(dst.toPath, src.toPath): Unit
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException => throw e
-      case _: UnsupportedOperationException |
-           _: java.nio.file.FileSystemException =>
-        java.nio.file.Files.copy(src.toPath, dst.toPath): Unit
-    }
+  /** Data-file names per dir of a generation — the applies-to sets of
+    * the sidecars a delta statement lands: the root's under `""`, each
+    * hive partition dir's under its name. Names are stable across
+    * hard-linked generations; a later INSERT's fresh files are never
+    * listed, so re-inserted keys stay visible (the sequence-number
+    * rule). */
+  def dataFilesByDir(loc: String): Map[String, Seq[String]] = {
+    val root = new java.io.File(Generation.path(loc))
+    def names(d: java.io.File) = Generation.dataFiles(d).map(_.getName).sorted
+    Generation.list(root)
+      .filter(d => d.isDirectory && d.getName.contains("="))
+      .map(d => d.getName -> names(d)).toMap + ("" -> names(root))
   }
 
   /** The property keys [[validateTableProps]] guards. */
@@ -397,11 +379,11 @@ private[graft] case class AutoCompactDecision(table: String,
   * on — the same threshold→decision→action shape as the IVF index
   * drift monitor (`sim_ann_ivf_append`'s retrain flag). The compaction
   * itself is the catalog's one maintenance primitive: merged rows →
-  * fresh `_rl` generation (gc-recognized naming) → atomic SET LOCATION
-  * swap; a reader holding the old generation keeps a consistent file
-  * set. At 100 TB the policy runs table-parallel off the snapshot
-  * metadata (KiB per table — no data is read to DECIDE; only flagged
-  * tables pay the rewrite, which is the point of the thresholds). */
+  * fresh [[Generation]] → atomic SET LOCATION swap; a reader holding
+  * the old generation keeps a consistent file set. At 100 TB the
+  * policy runs table-parallel off the snapshot metadata (KiB per table
+  * — no data is read to DECIDE; only flagged tables pay the rewrite,
+  * which is the point of the thresholds). */
 private[graft] object MorMaintenance {
   /** Scan class a table currently serves: "mor" (sidecar-merging row
     * path) or "stock" (unwrapped vectorized parquet). */
@@ -426,14 +408,11 @@ private[graft] object MorMaintenance {
     val morTables = snap.tables.filter(t => t.properties.exists(p =>
       p.key == Mor.DeleteModeProp && p.value == Mor.ModeMergeOnRead))
     morTables.sortBy(t => (t.db, t.name)).map { t =>
-      val loc = Mor.normLoc(t.location)
+      val loc = Generation.path(t.location)
       val sidecars = Mor.loadSidecars(loc)
       val scBytes = Mor.sidecarBytes(loc)
-      val dataBytes = Option(new java.io.File(loc).listFiles()).toSeq
-        .flatten
-        .filter(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))
-        .map(_.length).sum
+      val dataBytes =
+        Generation.dataFiles(new java.io.File(loc)).map(_.length).sum
       val fqn = s"$catName.${t.db}.${t.name}"
       val before = scanClass(s, fqn)
       val fire = sidecars.length >= maxSidecars ||
@@ -441,11 +420,13 @@ private[graft] object MorMaintenance {
       val newLoc =
         if (fire) {
           // the compaction: merged rows -> clean generation, atomic swap
-          val gen2 =
-            loc + s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-          s.table(fqn).write.parquet(gen2)
-          s.sql(s"ALTER TABLE $fqn SET LOCATION '$gen2'")
-          gen2
+          val gen = Generation.of(t)
+          gen.stage {
+            s.table(fqn).write.mode("append").parquet(gen.root)
+            gen.publishBy(
+              s.sql(s"ALTER TABLE $fqn SET LOCATION '${gen.root}'"))
+          }
+          gen.root
         } else loc
       val after = scanClass(s, fqn)
       AutoCompactDecision(t.name, sidecars.length, scBytes, dataBytes,
@@ -485,7 +466,7 @@ private[graft] object MorChangeFeed {
     * companion — i.e. [[between]] will take the O(delta) CDC path. */
   def cdcCovered(locA: String, locB: String): Boolean = {
     val oldSidecars = sidecarNames(locA)
-    val cdcDir = new java.io.File(Mor.normLoc(locB), Mor.CdcDirName)
+    val cdcDir = new java.io.File(Generation.path(locB), Mor.CdcDirName)
     Mor.loadSidecars(locB)
       .filterNot(sc => oldSidecars.contains(sc.name))
       .forall(sc => new java.io.File(cdcDir,
@@ -493,7 +474,7 @@ private[graft] object MorChangeFeed {
   }
 
   private def sidecarNames(loc: String): Set[String] =
-    Option(new java.io.File(Mor.normLoc(loc), Mor.DeletesDirName)
+    Option(new java.io.File(Generation.path(loc), Mor.DeletesDirName)
       .listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(".keys"))
       .map(_.getName).toSet
@@ -503,9 +484,7 @@ private[graft] object MorChangeFeed {
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     def dataFiles(loc: String): Set[String] =
-      Option(new java.io.File(Mor.normLoc(loc)).listFiles()).toSeq.flatten
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
+      Generation.dataFiles(new java.io.File(Generation.path(loc)))
         .map(_.getName).toSet
     val filesA = dataFiles(locA)
     val freshNames = (dataFiles(locB) -- filesA).toSeq.sorted
@@ -534,7 +513,7 @@ private[graft] object MorChangeFeed {
           .withColumn("_fname", lit(null: String))
       else
         s.read.parquet(freshNames.map(n =>
-            s"${Mor.normLoc(locB)}/$n"): _*)
+            s"${Generation.path(locB)}/$n"): _*)
           .withColumn("_fname",
             element_at(split(col("_metadata.file_path"), "/"), -1))
           .drop("_metadata")
@@ -551,7 +530,7 @@ private[graft] object MorChangeFeed {
       if (newSidecars.isEmpty)
         stateA.withColumn("_k", keyStr).limit(0)
       else if (cdcCovered(locA, locB)) {
-        val cdcDir = s"${Mor.normLoc(locB)}/${Mor.CdcDirName}"
+        val cdcDir = s"${Generation.path(locB)}/${Mor.CdcDirName}"
         val paths = newSidecars.map(sc =>
           s"$cdcDir/${Mor.cdcFileName(sc.name)}")
         // keep pre-images whose source file existed at A: exactly the
@@ -746,7 +725,9 @@ private[catalog] class MorDeltaOperation(table: MorRowLevelTable,
   override def newWriteBuilder(wInfo: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new MorDeltaWrite(cat, ti, keyField, table.schema())
+        new MorDeltaWrite(cat, ti, (root, appliesTo) =>
+          MorDeltaWriterFactory(root, appliesTo(""), keyField.dataType,
+            table.schema()))
     }
 }
 
@@ -1073,130 +1054,75 @@ private[catalog] class MorReaderFactory(delegate: PartitionReaderFactory,
   }
 }
 
-private[catalog] case class MorDeleteMsg(file: Option[String], keys: Long,
-    dataFile: Option[String] = None,
-    cdcFile: Option[String] = None) extends WriterCommitMessage
-
-/** The delta write: tasks append encoded row-id keys to per-task
-  * sidecar files under the fresh generation's `_deletes/` and land
-  * inserted/updated rows in per-task FRESH parquet files at its root
-  * (commit coordinator arbitrates attempts; task aborts delete their
-  * own files); driver commit sweeps strays, hard-links the old
-  * generation's data files and prior sidecars (same inodes — zero data
-  * movement), and publishes through the catalog's atomic location swap
-  * + OCC. Fresh files are never in any sidecar's applies-to set, so an
-  * updated row is hidden from its OLD file and served from its new one
-  * — exactly once. */
+/** The delta write of both merge-on-read serving tables: tasks append
+  * encoded row-id keys to per-task sidecar files under `_deletes/` (of
+  * the row's partition dir on a partitioned table) and land inserted or
+  * updated rows in per-task FRESH parquet files; each sidecar applies
+  * to its dir's data files in the generation the statement was planned
+  * against ([[Mor.dataFilesByDir]]). The commit coordinator arbitrates
+  * attempts and task aborts delete their own files. The driver commit
+  * sweeps strays, carries every data file and prior sidecar over (zero
+  * data movement, even in touched partitions) and publishes the
+  * [[Generation]]. Fresh files are never in any sidecar's applies-to
+  * set, so an updated row is hidden from its OLD file and served from
+  * its new one — exactly once. `writers` builds the task-side factory
+  * from the generation root and the applies-to sets. */
 private[catalog] class MorDeltaWrite(cat: WritableSnapshotCatalog,
-    ti: TableInfo, keyField: StructField,
-    tableSchema: StructType) extends DeltaWrite {
+    ti: TableInfo,
+    writers: (String, Map[String, Seq[String]]) => DeltaWriterFactory)
+  extends DeltaWrite {
 
-  private val oldRoot = Mor.normLoc(ti.location)
-  // the COW generation naming — gcGenerations recognizes and (once
-  // unreferenced) reclaims these like any other generation dir
-  private val newRoot =
-    oldRoot + s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
+  private val gen = Generation.of(ti)
 
   override def description(): String =
-    s"graft-mor-delta ${ti.db}.${ti.name} -> $newRoot"
+    s"graft-mor-delta ${ti.db}.${ti.name} -> ${gen.root}"
 
   override def toBatch: DeltaBatchWrite = {
-    // the applies-to set: data files of the generation this statement
-    // was planned against (names are stable across hard-linked
-    // generations; a later INSERT's fresh files are never listed, so
-    // re-inserted keys stay visible — the sequence-number rule)
-    val dataFiles = Option(new java.io.File(oldRoot).listFiles()).toSeq
-      .flatten
-      .filter(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-      .map(_.getName).sorted
-    val delDir = new java.io.File(newRoot, Mor.DeletesDirName)
-    delDir.mkdirs()
-    // in-flight marker for gcGenerations (no _temporary on this path)
-    val marker = new java.io.File(newRoot, "_graftwriting")
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray): Unit
-    // fresh-data-file writer machinery (MERGE inserts/updates); the
-    // stock parquet OutputWriterFactory, serialized to tasks
-    val spark = SparkSession.active
-    val job = org.apache.hadoop.mapreduce.Job
-      .getInstance(spark.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[InternalRow])
-    val owf = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, tableSchema)
-    // CDC pre-image files get their own factory (schema = _src_file +
-    // the table's columns); prepared on a separate Job so the two
-    // schemas don't clobber each other's conf
-    val cdcJob = org.apache.hadoop.mapreduce.Job
-      .getInstance(spark.sessionState.newHadoopConf())
-    cdcJob.setOutputKeyClass(classOf[Void])
-    cdcJob.setOutputValueClass(classOf[InternalRow])
-    val cdcOwf = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-      .prepareWrite(spark, cdcJob, Map.empty, Mor.cdcSchema(tableSchema))
-    val cdcDir = new java.io.File(newRoot, Mor.CdcDirName)
-    cdcDir.mkdirs()
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      job.getConfiguration)
-    val cdcSerConf = new org.apache.spark.util.SerializableConfiguration(
-      cdcJob.getConfiguration)
-
+    val appliesTo = Mor.dataFilesByDir(ti.location)
+    val factory = gen.stage(writers(gen.root, appliesTo))
     new DeltaBatchWrite {
       override def createBatchWriterFactory(
-          pInfo: PhysicalWriteInfo): DeltaWriterFactory =
-        new MorDeltaWriterFactory(newRoot, dataFiles,
-          keyField.dataType, tableSchema, owf, serConf, cdcOwf,
-          cdcSerConf)
+          pInfo: PhysicalWriteInfo): DeltaWriterFactory = factory
 
       override def useCommitCoordinator(): Boolean = true
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val msgs = messages.collect { case m: MorDeleteMsg => m }
-        val authorized = msgs.flatMap(_.file).toSet
-        Option(delDir.listFiles()).toSeq.flatten.filter(_.isFile)
-          .filterNot(f => authorized.contains(f.getName))
-          .foreach(f => f.delete(): Unit)
-        // sweep stray CDC files the same way (one per sidecar)
-        val authorizedCdc = msgs.flatMap(_.cdcFile).toSet
-        Option(cdcDir.listFiles()).toSeq.flatten.filter(_.isFile)
-          .filterNot(f => authorizedCdc.contains(f.getName))
-          .foreach(f => f.delete(): Unit)
-        // sweep stray DATA files from attempts that died without abort
-        val authorizedData = msgs.flatMap(_.dataFile).toSet
-        Option(new java.io.File(newRoot).listFiles()).toSeq.flatten
-          .filter(f => f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith("."))
-          .filterNot(f => authorizedData.contains(f.getName))
-          .foreach(f => f.delete(): Unit)
-        Mor.linkAll(new java.io.File(oldRoot), new java.io.File(newRoot))
-        val oldDel = new java.io.File(oldRoot, Mor.DeletesDirName)
-        if (oldDel.isDirectory) {
-          // prior sidecars carry forward untouched (underscore dirs
-          // are skipped by linkAll's visible-file filter, so link
-          // them explicitly dir-to-dir)
-          Option(oldDel.listFiles()).toSeq.flatten
-            .filter(f => f.isFile && f.getName.endsWith(".keys"))
-            .foreach(f =>
-              Mor.linkOne(f, new java.io.File(delDir, f.getName)))
-        }
-        // prior CDC files carry forward too — the feed reads the
-        // range's NEW ones as the locB-minus-locA set difference
-        val oldCdc = new java.io.File(oldRoot, Mor.CdcDirName)
-        if (oldCdc.isDirectory) {
-          Option(oldCdc.listFiles()).toSeq.flatten
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .foreach(f =>
-              Mor.linkOne(f, new java.io.File(cdcDir, f.getName)))
-        }
-        marker.delete(): Unit
-        cat.swapLocation(ti, newRoot) // the ONLY publish point (atomic)
+        gen.sweep(messages)
+        gen.carryOver()
+        gen.publish(cat)
       }
 
       override def abort(messages: Array[WriterCommitMessage]): Unit =
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(newRoot)): Unit
+        gen.abort()
     }
+  }
+}
+
+private[catalog] object MorDeltaWriterFactory {
+  /** Prepares, on the driver, the parquet writers of fresh data files
+    * and of CDC pre-image files (schema = `_src_file` + the table's
+    * columns; each on its own Job, so the two schemas don't clobber
+    * each other's conf), and the sidecar and CDC dirs. */
+  def apply(root: String, appliesTo: Seq[String], keyType: DataType,
+      schema: StructType): MorDeltaWriterFactory = {
+    val spark = SparkSession.active
+    def prepare(fileSchema: StructType) = {
+      val job = org.apache.hadoop.mapreduce.Job
+        .getInstance(spark.sessionState.newHadoopConf())
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      val owf = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, fileSchema)
+      (owf, new org.apache.spark.util.SerializableConfiguration(
+        job.getConfiguration))
+    }
+    val (owf, conf) = prepare(schema)
+    val (cdcOwf, cdcConf) = prepare(Mor.cdcSchema(schema))
+    Seq(Mor.DeletesDirName, Mor.CdcDirName)
+      .foreach(d => new java.io.File(root, d).mkdirs())
+    new MorDeltaWriterFactory(root, appliesTo, keyType, schema, owf, conf,
+      cdcOwf, cdcConf)
   }
 }
 
@@ -1225,7 +1151,6 @@ private[catalog] class MorDeltaWriter(newRoot: String,
 
   private var out: java.io.BufferedWriter = _
   private var file: java.io.File = _
-  private var n = 0L
   private var dataOut
       : org.apache.spark.sql.execution.datasources.OutputWriter = _
   private var dataFile: java.io.File = _
@@ -1294,7 +1219,6 @@ private[catalog] class MorDeltaWriter(newRoot: String,
     val w = writer()
     w.write(Mor.KeyLinePrefix + Mor.encodeKey(id.get(0, keyType)))
     w.newLine()
-    n += 1
     // commit-time CDC: the row's full pre-image + source file, carried
     // by the _cdc metadata struct the rewrite scan served
     require(meta != null && !meta.isNullAt(0),
@@ -1330,9 +1254,10 @@ private[catalog] class MorDeltaWriter(newRoot: String,
     if (out != null) out.close()
     if (dataOut != null) dataOut.close()
     if (cdcOut != null) cdcOut.close()
-    MorDeleteMsg(Option(file).map(_.getName), n,
+    TaskFiles(Seq(
+      Option(file).map(f => s"${Mor.DeletesDirName}/${f.getName}"),
       Option(dataFile).map(_.getName),
-      Option(cdcFile).map(_.getName))
+      Option(cdcFile).map(f => s"${Mor.CdcDirName}/${f.getName}")).flatten)
   }
 
   override def abort(): Unit = {
@@ -1412,7 +1337,7 @@ private[catalog] class MorPartitionedTable(inner: Table,
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     () =>
       if (info.command == RowLevelOperation.Command.DELETE)
-        new MorPartDeltaOperation(this, cat, ti, partField, keyField, info)
+        new MorPartDeltaOperation(this, cat, ti, keyField, info)
       else
         // UPDATE/MERGE: partition-scoped COW, reading through `this`
         // (the merged read — outstanding deletes must not resurrect);
@@ -1428,8 +1353,8 @@ private[catalog] class MorPartitionedTable(inner: Table,
   * key to its partition's sidecar with that partition's applies-to
   * set). */
 private[catalog] class MorPartDeltaOperation(table: MorPartitionedTable,
-    cat: WritableSnapshotCatalog, ti: TableInfo, partField: StructField,
-    keyField: StructField, info: RowLevelOperationInfo)
+    cat: WritableSnapshotCatalog, ti: TableInfo, keyField: StructField,
+    info: RowLevelOperationInfo)
   extends RowLevelOperation with SupportsDelta {
 
   override def command(): RowLevelOperation.Command = info.command
@@ -1445,215 +1370,16 @@ private[catalog] class MorPartDeltaOperation(table: MorPartitionedTable,
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array(Expressions.column(PartitionScoped.PartCol))
 
+  // the table's own scan: the merged read, serving `_partition`
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MorPartScanBuilder(table.newScanBuilder(options), partField)
+    table.newScanBuilder(options)
 
   override def newWriteBuilder(wInfo: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new MorPartDeltaWrite(cat, ti, keyField)
+        new MorDeltaWrite(cat, ti, (root, appliesTo) =>
+          new MorPartDeltaWriterFactory(root, appliesTo, keyField.dataType))
     }
-}
-
-/** Scan builder serving `_partition` (hive dir name of each row's
-  * origin partition) on top of the MERGED scan. Filter pushdown
-  * forwards through — the DELETE condition, including any
-  * partition-column predicate, reaches the parquet file index, so the
-  * delta scan reads only matched partitions' matched rows. The
-  * partition COLUMN itself is appended to the delegate projection if
-  * the planner didn't ask for it (needed to derive `_partition`) and
-  * dropped again after. */
-private[catalog] class MorPartScanBuilder(delegate: ScanBuilder,
-    partField: StructField)
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-
-  private var partRequested = false
-  private var addedPart = false
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    partRequested =
-      requiredSchema.fieldNames.contains(PartitionScoped.PartCol)
-    var pruned = StructType(requiredSchema.fields
-      .filterNot(_.name == PartitionScoped.PartCol))
-    if (partRequested) {
-      require(requiredSchema.fieldNames.last == PartitionScoped.PartCol,
-        s"metadata column ${PartitionScoped.PartCol} must be requested " +
-          s"last, got ${requiredSchema.fieldNames.mkString(", ")}")
-      if (!pruned.fieldNames.contains(partField.name)) {
-        addedPart = true
-        pruned = pruned.add(partField)
-      }
-    }
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(pruned)
-      case _ => ()
-    }
-  }
-
-  override def pushFilters(
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushFilters(filters)
-      case _ => filters
-    }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
-
-  override def build(): Scan = {
-    val ds = delegate.build()
-    if (partRequested) new MorPartScan(ds, partField, addedPart) else ds
-  }
-}
-
-/** Appends the per-row `_partition` (hive dir name derived from the
-  * stored partition value) to the merged scan's rows; drops the
-  * partition column again when the builder had to append it. */
-private[catalog] class MorPartScan(delegate: Scan,
-    partField: StructField, dropPart: Boolean) extends Scan {
-
-  override def readSchema(): StructType = {
-    val base =
-      if (dropPart) StructType(delegate.readSchema().fields.dropRight(1))
-      else delegate.readSchema()
-    base.add(PartitionScoped.PartCol, StringType, nullable = true)
-  }
-
-  override def description(): String =
-    s"graft-mor-part-scan(${delegate.description()})"
-
-  override def toBatch: Batch = new Batch {
-    private val db = delegate.toBatch
-    override def planInputPartitions(): Array[InputPartition] =
-      db.planInputPartitions()
-    override def createReaderFactory(): PartitionReaderFactory =
-      new MorPartReaderFactory(db.createReaderFactory(),
-        delegate.readSchema(), partField, dropPart)
-  }
-}
-
-private[catalog] class MorPartReaderFactory(
-    delegate: PartitionReaderFactory, fullSchema: StructType,
-    partField: StructField, dropPart: Boolean)
-  extends PartitionReaderFactory {
-
-  private val partOrd = fullSchema.fieldIndex(partField.name)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val dr = delegate.createReader(p)
-    val proj =
-      if (dropPart)
-        UnsafeProjection.create(fullSchema.fields.indices.dropRight(1)
-          .map(i => BoundReference(i, fullSchema(i).dataType,
-            fullSchema(i).nullable)))
-      else null
-    new PartitionReader[InternalRow] {
-      private val joined =
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = dr.next()
-      override def get(): InternalRow = {
-        val row = dr.get()
-        val dir = PartitionScoped.dirName(partField.name,
-          row.get(partOrd, partField.dataType))
-        val out = if (proj != null) proj(row) else row
-        joined(out, InternalRow(UTF8String.fromString(dir)))
-      }
-      override def close(): Unit = dr.close()
-    }
-  }
-}
-
-private[catalog] case class MorPartDeleteMsg(
-    files: Seq[(String, String)], keys: Long) extends WriterCommitMessage
-
-/** The partitioned delta write: tasks append row-id keys to per-task
-  * sidecar files under `<newRoot>/<partdir>/_deletes/`, each carrying
-  * ITS partition's applies-to file list; driver commit sweeps strays,
-  * hard-links every partition's data files and prior sidecars (same
-  * inodes — zero data movement, even in touched partitions), and
-  * publishes through the atomic location swap + OCC. */
-private[catalog] class MorPartDeltaWrite(cat: WritableSnapshotCatalog,
-    ti: TableInfo, keyField: StructField) extends DeltaWrite {
-
-  private val oldRoot = Mor.normLoc(ti.location)
-  private val newRoot =
-    oldRoot + s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-
-  override def description(): String =
-    s"graft-mor-part-delta ${ti.db}.${ti.name} -> $newRoot"
-
-  override def toBatch: DeltaBatchWrite = {
-    def partDirs(root: String): Seq[java.io.File] =
-      Option(new java.io.File(root).listFiles()).toSeq.flatten
-        .filter(d => d.isDirectory && d.getName.contains("="))
-        .sortBy(_.getName)
-    // per-partition applies-to: THAT partition's data files at delete
-    // time (bare names on disk; the loader re-qualifies with the
-    // partition dir). KiB of driver-side metadata per partition.
-    val appliesTo: Map[String, Seq[String]] = partDirs(oldRoot).map { d =>
-      d.getName -> Option(d.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-        .map(_.getName).sorted
-    }.toMap
-    new java.io.File(newRoot).mkdirs()
-    val marker = new java.io.File(newRoot, "_graftwriting")
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray): Unit
-
-    new DeltaBatchWrite {
-      override def createBatchWriterFactory(
-          pInfo: PhysicalWriteInfo): DeltaWriterFactory =
-        new MorPartDeltaWriterFactory(newRoot, appliesTo,
-          keyField.dataType)
-
-      override def useCommitCoordinator(): Boolean = true
-
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val authorized = messages
-          .collect { case m: MorPartDeleteMsg => m.files }.flatten
-          .map { case (d, f) => s"$d/$f" }.toSet
-        // sweep stray sidecars from attempts that died without abort
-        partDirs(newRoot).foreach { pd =>
-          val del = new java.io.File(pd, Mor.DeletesDirName)
-          Option(del.listFiles()).toSeq.flatten.filter(_.isFile)
-            .filterNot(f => authorized.contains(s"${pd.getName}/${f.getName}"))
-            .foreach(f => f.delete(): Unit)
-        }
-        // hard-link every partition's data files and prior sidecars
-        partDirs(oldRoot).foreach { src =>
-          val dst = new java.io.File(newRoot, src.getName)
-          dst.mkdirs()
-          Mor.linkAll(src, dst)
-          val srcDel = new java.io.File(src, Mor.DeletesDirName)
-          if (srcDel.isDirectory) {
-            val dstDel = new java.io.File(dst, Mor.DeletesDirName)
-            dstDel.mkdirs()
-            Option(srcDel.listFiles()).toSeq.flatten
-              .filter(f => f.isFile && f.getName.endsWith(".keys"))
-              .foreach(f =>
-                Mor.linkOne(f, new java.io.File(dstDel, f.getName)))
-          }
-        }
-        marker.delete(): Unit
-        cat.swapLocation(ti, newRoot) // the ONLY publish point (atomic)
-      }
-
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(newRoot)): Unit
-    }
-  }
 }
 
 private[catalog] class MorPartDeltaWriterFactory(newRoot: String,
@@ -1672,7 +1398,6 @@ private[catalog] class MorPartDeltaWriter(newRoot: String,
   private val uniq = java.util.UUID.randomUUID.toString.take(8)
   private val writers = scala.collection.mutable.LinkedHashMap
     .empty[String, (java.io.BufferedWriter, java.io.File)]
-  private var n = 0L
 
   private def writer(partDir: String): java.io.BufferedWriter =
     writers.getOrElseUpdate(partDir, {
@@ -1704,7 +1429,6 @@ private[catalog] class MorPartDeltaWriter(newRoot: String,
     val w = writer(meta.getUTF8String(0).toString)
     w.write(Mor.KeyLinePrefix + Mor.encodeKey(id.get(0, keyType)))
     w.newLine()
-    n += 1
   }
 
   override def insert(row: InternalRow): Unit =
@@ -1717,8 +1441,8 @@ private[catalog] class MorPartDeltaWriter(newRoot: String,
 
   override def commit(): WriterCommitMessage = {
     writers.values.foreach(_._1.close())
-    MorPartDeleteMsg(writers.toSeq.map { case (d, (_, f)) =>
-      d -> f.getName }, n)
+    TaskFiles(writers.toSeq.map { case (d, (_, f)) =>
+      s"$d/${Mor.DeletesDirName}/${f.getName}" })
   }
 
   override def abort(): Unit =

@@ -28,17 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark reads the current generation through the operation's scan,
   * computes the full replacement row set itself (carry-over rows +
   * updated/merged rows — the ReplaceData contract), and hands it to the
-  * operation's write, which lands the new generation in a FRESH
-  * directory and publishes it with the catalog's atomic SET-LOCATION
-  * swap (the meta_v2_compact / meta_v2_merge primitive). Consequences:
-  *  - a mid-rewrite crash leaves the table untouched (the swap is the
-  *    only publish point; the half-written generation dir is aborted
-  *    and removed);
-  *  - readers holding the old generation keep a consistent file set —
-  *    the snapshot-isolation story the whole catalog is built on;
-  *  - a CONCURRENT row-level commit is detected at swap time (the
-  *    location the rewrite was derived from moved) and fails loudly
-  *    instead of silently dropping the other writer's rows.
+  * operation's write, which lands it as a fresh [[Generation]]: staged
+  * next to the current one, published by the catalog's atomic location
+  * swap, aborted away on failure. So a mid-rewrite crash leaves the
+  * table untouched, readers holding the old generation keep a
+  * consistent file set, and a CONCURRENT row-level commit fails the
+  * swap's OCC loudly instead of silently dropping the other writer's
+  * rows.
   *
   * Metadata-column plumbing (the part the stock planner dictates): the
   * operation REQUIRES the `_gen` metadata column — the generation
@@ -126,45 +122,35 @@ private[catalog] class RowLevelCowTable(inner: Table,
     () => new GroupCowRowLevelOperation(inner, cat, ti, info)
 }
 
-/** One `UPDATE`/`DELETE`/`MERGE` rewrite: scan the current generation
-  * (serving `_gen`), write the replacement rows Spark computes into a
-  * fresh generation dir, atomically re-point the table at commit. */
-/** Shared COW write machinery: land rows in a fresh generation dir via
-  * Spark's own V2 parquet write, publish with the catalog's atomic
-  * location swap at commit, remove the dir on abort. Used by both the
-  * row-level operations and the wrapper's TRUNCATE (INSERT OVERWRITE)
-  * path. */
+/** Shared COW write machinery: land rows in a fresh [[Generation]] via
+  * Spark's own V2 parquet write, publish it at commit, abort it on
+  * failure. Used by the row-level operations, the wrapper's TRUNCATE
+  * (INSERT OVERWRITE) path and a branch attach's appends, which also
+  * carry the current generation over. */
 private[catalog] object CowWrites {
   def swapWrite(cat: WritableSnapshotCatalog, ti: TableInfo,
-      schema: StructType, wInfo: LogicalWriteInfo): Write = {
-    val spark = SparkSession.active
-    // fresh-generation sibling of the current location; the random
-    // suffix keeps racing statements (and aborted attempts) disjoint.
-    // Normalize a `file:` scheme away first (SET LOCATION stores the
-    // URI verbatim): Hadoop resolves both forms to the same files, but
-    // abort's java.io.File delete would silently miss a scheme-carrying
-    // path, leaking the half-written generation forever.
-    val newLoc = ti.location.stripPrefix("file:").stripSuffix("/") +
-      s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
+      schema: StructType, wInfo: LogicalWriteInfo,
+      carryOver: Boolean = false): Write = {
+    val gen = Generation.of(ti)
     val target = org.apache.spark.sql.execution.datasources.v2.parquet
-      .ParquetTable(s"${ti.db}.${ti.name}_cow", spark,
-        CaseInsensitiveStringMap.empty(), Seq(newLoc), Some(schema),
+      .ParquetTable(s"${ti.db}.${ti.name}_cow", SparkSession.active,
+        CaseInsensitiveStringMap.empty(), Seq(gen.root), Some(schema),
         classOf[org.apache.spark.sql.execution.datasources
           .parquet.ParquetFileFormat])
-    new SwapOnCommitWrite(cat, ti, newLoc,
-      target.newWriteBuilder(wInfo).build())
+    new SwapOnCommitWrite(cat, gen, target.newWriteBuilder(wInfo).build(),
+      carryOver)
   }
 }
 
-/** Wraps the fresh-generation file write; commit additionally
-  * publishes the generation through the catalog's atomic location
-  * swap, abort removes the half-written dir. */
+/** Wraps the fresh-generation file write: commit additionally carries
+  * the current generation over (appends) and publishes the generation;
+  * abort removes it. */
 private[catalog] class SwapOnCommitWrite(cat: WritableSnapshotCatalog,
-    ti: TableInfo, newLoc: String, d: Write) extends Write {
+    gen: Generation, d: Write, carryOver: Boolean) extends Write {
   override def description(): String =
-    s"graft-cow-swap ${ti.db}.${ti.name} -> $newLoc"
+    s"graft-cow-swap ${gen.ti.db}.${gen.ti.name} -> ${gen.root}"
   override def toBatch: BatchWrite = new BatchWrite {
-    private val db = d.toBatch
+    private val db = gen.stage(d.toBatch)
     override def createBatchWriterFactory(
         pInfo: PhysicalWriteInfo): DataWriterFactory =
       db.createBatchWriterFactory(pInfo)
@@ -173,17 +159,20 @@ private[catalog] class SwapOnCommitWrite(cat: WritableSnapshotCatalog,
     override def onDataWriterCommit(message: WriterCommitMessage): Unit =
       db.onDataWriterCommit(message)
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      db.commit(messages) // files final under newLoc, nothing published
-      cat.swapLocation(ti, newLoc) // the ONLY publish point (atomic)
+      db.commit(messages) // files final in the generation, unpublished
+      if (carryOver) gen.carryOver()
+      gen.publish(cat)
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
       db.abort(messages)
-      org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(newLoc)): Unit
+      gen.abort()
     }
   }
 }
 
+/** One `UPDATE`/`DELETE`/`MERGE` rewrite: scan the current generation
+  * (serving `_gen`), write the replacement rows Spark computes into a
+  * fresh generation, publish it at commit. */
 private[catalog] class GroupCowRowLevelOperation(inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo,
     info: RowLevelOperationInfo) extends RowLevelOperation {
@@ -310,11 +299,10 @@ private[catalog] class GenReaderFactory(delegate: PartitionReaderFactory,
 //    values back through Scan.filter — the scan then serves ONLY touched
 //    partitions (file-level pruning on PartitionedFile.partitionValues),
 //    which is exactly the set the write replaces;
-//  - the write routes each row to a per-partition parquet file under a
-//    fresh generation root; commit hard-links every untouched partition
-//    from the old root, then publishes with the same atomic location
-//    swap + OCC as the table-granular path. A mid-rewrite crash leaves
-//    the table untouched; an aborted attempt removes its root.
+//  - the write routes each row to a per-partition parquet file in a
+//    fresh [[Generation]], whose commit carries every untouched
+//    partition over by hard link and publishes it like the
+//    table-granular path.
 //
 // Deliberate refusals (loud, atomic — the statement fails, nothing
 // publishes): cross-partition moves (UPDATE/MERGE writing a row whose
@@ -383,10 +371,11 @@ private[catalog] class PartitionScopedRowLevelTable(inner: Table,
     partField: org.apache.spark.sql.types.StructField)
   extends Table with SupportsRead with SupportsWrite
   with SupportsRowLevelOperations with SupportsMetadataColumns
-  with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
+  with ForwardsPartitions {
 
-  private def pm = inner
-    .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsPartitionManagement]
+  override protected def partitions =
+    inner.asInstanceOf[
+      org.apache.spark.sql.connector.catalog.SupportsPartitionManagement]
 
   override def name(): String = inner.name()
   override def schema(): StructType = inner.schema()
@@ -421,25 +410,6 @@ private[catalog] class PartitionScopedRowLevelTable(inner: Table,
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     () => new PartitionCowOperation(inner, cat, ti,
       IdentityDeriver(partField), info)
-
-  // ---- partition management, forwarded ----
-  import org.apache.spark.sql.catalyst.InternalRow
-  override def partitionSchema(): StructType = pm.partitionSchema()
-  override def createPartition(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    pm.createPartition(ident, properties)
-  override def dropPartition(ident: InternalRow): Boolean =
-    pm.dropPartition(ident)
-  override def replacePartitionMetadata(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    pm.replacePartitionMetadata(ident, properties)
-  override def loadPartitionMetadata(ident: InternalRow)
-      : util.Map[String, String] = pm.loadPartitionMetadata(ident)
-  override def listPartitionIdentifiers(names: Array[String],
-      ident: InternalRow): Array[InternalRow] =
-    pm.listPartitionIdentifiers(names, ident)
-  override def partitionExists(ident: InternalRow): Boolean =
-    pm.partitionExists(ident)
 }
 
 /** One partition-scoped UPDATE/DELETE/MERGE rewrite. The operation
@@ -744,41 +714,21 @@ private[catalog] class PartReaderFactory(delegate: PartitionReaderFactory,
   }
 }
 
-/** One task's written files: (hive partition dir name, file name). */
-private[catalog] case class PartFilesMsg(files: Seq[(String, String)])
-  extends WriterCommitMessage
-
 /** The partition-routing COW write. Tasks write rows straight into
-  * `<newRoot>/<col>=<val>/part-...` (no Hadoop committer — task commits
-  * are arbitrated by Spark's commit coordinator, task aborts delete
-  * their own files, and driver commit sweeps any unauthorized stray
-  * before the swap). Commit hard-links every untouched partition from
-  * the old generation (same inodes — byte-identical by construction),
-  * then publishes via the catalog's atomic location swap. */
+  * `<generation>/<col>=<val>/part-...` (no Hadoop committer — task
+  * commits are arbitrated by Spark's commit coordinator, task aborts
+  * delete their own files, and the driver commit sweeps any
+  * unauthorized stray). Commit carries every untouched partition over
+  * from the current generation and publishes the [[Generation]]. */
 private[catalog] class PartitionRoutedCowWrite(cat: WritableSnapshotCatalog,
     ti: TableInfo, op: PartitionCowOperation,
     derivers: Seq[PartDeriver],
     tableSchema: StructType) extends Write {
 
-  private val oldRoot = ti.location.stripPrefix("file:").stripSuffix("/")
-  private val newRoot =
-    oldRoot + s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
+  private val gen = Generation.of(ti)
 
   override def description(): String =
-    s"graft-partition-cow-swap ${ti.db}.${ti.name} -> $newRoot"
-
-  /** Leaf partition dirs (RELATIVE paths, one `name=value` component
-    * per deriver, nesting order) under `root`. */
-  private def leafDirs(root: java.io.File): Seq[String] = {
-    def walk(d: java.io.File, depth: Int): Seq[String] =
-      Option(d.listFiles()).toSeq.flatten
-        .filter(c => c.isDirectory && c.getName.contains("="))
-        .flatMap { c =>
-          if (depth == derivers.length - 1) Seq(c.getName)
-          else walk(c, depth + 1).map(rel => s"${c.getName}/$rel")
-        }
-    walk(root, 0)
-  }
+    s"graft-partition-cow-swap ${ti.db}.${ti.name} -> ${gen.root}"
 
   override def toBatch: BatchWrite = {
     val spark = SparkSession.active
@@ -797,16 +747,12 @@ private[catalog] class PartitionRoutedCowWrite(cat: WritableSnapshotCatalog,
       .prepareWrite(spark, job, Map.empty, fileSchema)
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       job.getConfiguration)
-    new java.io.File(newRoot).mkdirs()
-    // in-flight marker for gcGenerations (this path has no _temporary):
-    // present from first byte until just before the swap
-    val marker = new java.io.File(newRoot, "_graftwriting")
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray): Unit
+    gen.create()
 
     new BatchWrite {
       override def createBatchWriterFactory(
           pInfo: PhysicalWriteInfo): DataWriterFactory =
-        new PartitionRoutedWriterFactory(newRoot, tableSchema,
+        new PartitionRoutedWriterFactory(gen.root, tableSchema,
           derivers.map(d =>
             tableSchema.fieldIndex(d.srcField.name)).toArray,
           fileSchema, factory, serConf, derivers.toArray)
@@ -816,57 +762,20 @@ private[catalog] class PartitionRoutedCowWrite(cat: WritableSnapshotCatalog,
       override def useCommitCoordinator(): Boolean = true
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val committed = messages.collect { case m: PartFilesMsg => m.files }
-          .flatten.toSeq
-        // sweep strays: files from attempts that died without abort()
-        val authorized = committed.map { case (d, f) => s"$d/$f" }.toSet
-        for (rel <- leafDirs(new java.io.File(newRoot)))
-          Option(new java.io.File(newRoot, rel).listFiles()).toSeq
-            .flatten.filter(_.isFile)
-            .filterNot(f => authorized.contains(s"$rel/${f.getName}"))
-            .foreach { f => f.delete(): Unit }
-        // replaced groups: what the scan served (every cell when the
-        // runtime group filter never fired) — scope already holds the
-        // rendered relative cell paths
-        val oldDirs = leafDirs(new java.io.File(oldRoot))
-        val replaced: Set[String] = op.scopeDirs match {
-          case Some(cells) => cells
-          case None => oldDirs.toSet
-        }
-        // hard-link untouched partitions file-for-file (same inodes —
-        // byte-identical, zero data movement); insert-only destinations
-        // (new rows landed in a partition the scan never read) keep
-        // their old files AND the new ones
-        for (dir <- oldDirs if !replaced.contains(dir)) {
-          val src = new java.io.File(oldRoot, dir)
-          val dst = new java.io.File(newRoot, dir) // nested rel path
-          dst.mkdirs()
-          // linkOne rethrows name collisions loudly — an insert-only
-          // destination holds fresh files, and a REPLACE_EXISTING copy
-          // fallback would silently clobber one with old bytes
-          Mor.linkAll(src, dst)
-          // an untouched partition of a merge-on-read table keeps its
-          // delete sidecars (hidden rows must not resurrect); touched
-          // partitions were rewritten from the MERGED read, so their
-          // fresh files are clean by construction and carry none
-          val srcDel = new java.io.File(src, Mor.DeletesDirName)
-          if (srcDel.isDirectory) {
-            val dstDel = new java.io.File(dst, Mor.DeletesDirName)
-            dstDel.mkdirs()
-            Option(srcDel.listFiles()).toSeq.flatten
-              .filter(f => f.isFile && f.getName.endsWith(".keys"))
-              .foreach(f =>
-                Mor.linkOne(f, new java.io.File(dstDel, f.getName)))
-          }
-        }
-        marker.delete(): Unit
-        cat.swapLocation(ti, newRoot) // the ONLY publish point (atomic)
+        gen.sweep(messages)
+        // the replaced cells are what the scan served; with no runtime
+        // group filter it served (and replaces) every cell. Untouched
+        // cells carry over with their merge-on-read sidecars (hidden
+        // rows must not resurrect); replaced ones were rewritten from
+        // the MERGED read, so their fresh files carry none. An
+        // insert-only destination (new rows in a cell the scan never
+        // read) keeps its old files AND the new ones.
+        op.scopeDirs.foreach(cells => gen.carryOver(except = cells))
+        gen.publish(cat)
       }
 
-      override def abort(messages: Array[WriterCommitMessage]): Unit = {
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(newRoot)): Unit
-      }
+      override def abort(messages: Array[WriterCommitMessage]): Unit =
+        gen.abort()
     }
   }
 }
@@ -957,8 +866,8 @@ private[catalog] class PartitionRoutedDataWriter(newRoot: String,
 
   override def commit(): WriterCommitMessage = {
     writers.values.foreach(_._1.close())
-    PartFilesMsg(writers.toSeq.map { case (dir, (_, f)) =>
-      dir -> f.getName })
+    TaskFiles(writers.toSeq.map { case (dir, (_, f)) =>
+      s"$dir/${f.getName}" })
   }
 
   override def abort(): Unit = {
@@ -994,20 +903,15 @@ private[graft] object PartitionCowChangeFeed {
 
   final case class PartDiff(touched: Seq[String], untouched: Seq[String])
 
-  private def norm(loc: String): String =
-    loc.stripPrefix("file:").stripSuffix("/")
-
   private def partDirs(root: String): Map[String, java.io.File] =
-    Option(new java.io.File(norm(root)).listFiles()).toSeq.flatten
+    Option(new java.io.File(Generation.path(root)).listFiles()).toSeq.flatten
       .filter(d => d.isDirectory && d.getName.contains("="))
       .map(d => d.getName -> d).toMap
 
   /** name -> inode for a partition dir's data files; inode identity
     * across generations == the hard-link carry-over's byte identity. */
   private def fileIds(d: java.io.File): Map[String, Long] =
-    Option(d.listFiles()).toSeq.flatten
-      .filter(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
+    Generation.dataFiles(d)
       .map(f => f.getName -> java.nio.file.Files
         .getAttribute(f.toPath, "unix:ino").asInstanceOf[Long]).toMap
 
@@ -1040,14 +944,14 @@ private[graft] object PartitionCowChangeFeed {
     val d = diff(locA, locB)
     def read(loc: String, parts: Seq[String])
         : Option[org.apache.spark.sql.DataFrame] = {
-      val dirs = parts.map(p => new java.io.File(norm(loc), p))
+      val dirs = parts.map(p => new java.io.File(Generation.path(loc), p))
         .filter(_.isDirectory)
       if (dirs.isEmpty) None
-      else Some(s.read.option("basePath", norm(loc))
+      else Some(s.read.option("basePath", Generation.path(loc))
         .parquet(dirs.map(_.getPath): _*))
     }
     // schema template (op + table columns) from generation B's layout
-    val template = s.read.parquet(norm(locB))
+    val template = s.read.parquet(Generation.path(locB))
     val cols = template.columns.toSeq
     val empty = template.limit(0)
       .select(lit("").as("op") +: cols.map(col): _*).limit(0)

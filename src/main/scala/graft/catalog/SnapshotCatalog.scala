@@ -1027,8 +1027,7 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
     val target = CatalogTransfer.readLocal(revDir.getPath)
     val missing = target.tables.filter(t =>
       t.tableType != "VIEW" && t.location.nonEmpty &&
-        !new java.io.File(
-          t.location.stripPrefix("file:").stripSuffix("/")).isDirectory)
+        !new java.io.File(Generation.path(t.location)).isDirectory)
     require(missing.isEmpty,
       s"rollback to revision $toRev would dangle: " +
         missing.map(t => s"${t.db}.${t.name} -> ${t.location}")
@@ -1046,7 +1045,7 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
     * since a generation stays live while any retained revision still
     * points at it, which is exactly what keeps `VERSION AS OF`
     * consistent). Scope is deliberately conservative: only dirs carrying
-    * [[CowWrites]]' private `_rl<8 hex>` naming, found next to
+    * a [[Generation]]'s name, found next to
     * locations the catalog references, are candidates — the original
     * (pre-COW) table dir and anything user-named is never touched
     * (EXTERNAL discipline: this reclaims the catalog's OWN write
@@ -1055,8 +1054,6 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
     val revsDir = new java.io.File(s"$snapshotDir/revs")
     val revs = Option(revsDir.list()).toSeq.flatten
       .flatMap(_.toIntOption).sorted
-    def norm(p: String): String =
-      p.stripPrefix("file:").stripSuffix("/")
     // live BRANCHES pin their generations too: a branch's staged COW
     // dirs are referenced by branch revisions only — wiping them would
     // tear an audit in progress (dropBranch is what releases them)
@@ -1074,15 +1071,15 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
         .map(CatalogTransfer.readLocal)
     // spec-evolution prev-leg locations are live data exactly like
     // table locations — a prev leg that was itself a COW generation
-    // (_rl naming) must never be reclaimed while referenced
+    // must never be reclaimed while referenced
     val referenced = snaps.flatMap(_.tables.flatMap(t =>
         t.location +: SpecEvolution.legLocations(t)))
-      .map(norm).filter(_.nonEmpty).toSet
-    val genName = ".*_rl[0-9a-f]{8}$"
+      .map(Generation.path).filter(_.nonEmpty).toSet
     val candidates = referenced.toSeq.sorted
       .map(l => new java.io.File(l).getParentFile).distinct
       .flatMap(p => Option(p.listFiles()).toSeq.flatten)
-      .filter(d => d.isDirectory && d.getName.matches(genName))
+      .filter(d =>
+        d.isDirectory && d.getName.matches(Generation.NamePattern))
       .distinct
     // A generation MID-WRITE is not aged by its top-level mtime:
     // Spark's file committer stages all task output under _temporary,
@@ -1096,7 +1093,7 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
       (f.lastModified +: Option(f.listFiles).toSeq.flatten
         .map(newestMtime)).max
     val (kept, drop) = candidates.partition(d =>
-      referenced.contains(norm(d.getPath)) ||
+      referenced.contains(Generation.path(d.getPath)) ||
         // grace filter (the vacuum stage/tomb discipline): an
         // unreferenced-LOOKING generation younger than the claim grace
         // window may be a concurrent COW rewrite between its file
@@ -1106,11 +1103,11 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
         // Deleting it would wipe the rewrite out from under an
         // acknowledged-soon statement.
         System.currentTimeMillis - d.lastModified <= claimGraceMs ||
-        // _temporary = the Hadoop committer's staging area (stock COW
-        // path mid-job); _graftwriting = the partition-routed writer's
-        // explicit marker (that path writes final files directly)
+        // _temporary = the Hadoop committer's staging area (a Spark
+        // file write mid-job); the Generation marker = an unpublished
+        // generation
         ((new java.io.File(d, "_temporary").exists ||
-          new java.io.File(d, "_graftwriting").exists) &&
+          new java.io.File(d, Generation.Marker).exists) &&
           System.currentTimeMillis - newestMtime(d) <= rewriteGraceMs))
     drop.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     (drop.map(_.getPath).sorted, kept.map(_.getPath).sorted)
@@ -1369,7 +1366,10 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
       if (!BranchCow.isBranchAttach(snapshotDir)) direct
       else direct match {
         case pm: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
-          new BranchCowAppendPartitionedTable(pm, this, ti, partCols)
+          new BranchCowAppendTable(direct, this, ti, partCols)
+            with ForwardsPartitions {
+            override protected def partitions = pm
+          }
         case _ if ti.provider.equalsIgnoreCase("parquet") =>
           // unpartitioned parquet sits under the row-level wrappers,
           // whose TRUNCATE builds V2 writes — declaring V1_BATCH_WRITE
@@ -1387,8 +1387,10 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
       else served match {
         // preserve partition management under a CHECK constraint — the
         // plain wrapper would strip SupportsPartitionManagement
-        case _: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
-          new ConstraintPartitionedTable(served, checks)
+        case pm: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
+          new ConstraintTable(served, checks) with ForwardsPartitions {
+            override protected def partitions = pm
+          }
         case _ => new ConstraintTable(served, checks)
       }
     // stock row-level DML (MERGE/UPDATE/DELETE): table-granular COW on
@@ -1888,34 +1890,31 @@ private[catalog] class ConstraintTable(inner: Table,
       .newWriteBuilder(info)
 }
 
-/** [[ConstraintTable]] for inners that also manage partitions
-  * ([[PartitionedWriteTable]]): without this variant, adding a CHECK
-  * constraint to a partitioned table would silently strip
-  * `SupportsPartitionManagement` from the served table and break SHOW
-  * PARTITIONS / partition ops. All partition methods delegate to the
-  * wrapped table. */
-private[catalog] class ConstraintPartitionedTable(inner: Table,
-    checks: Seq[(String, String)]) extends ConstraintTable(inner, checks)
-    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
+/** Forwards the partition-management surface to [[partitions]]. A
+  * serving wrapper around a partitioned table mixes it in: without it
+  * the wrapper would silently strip `SupportsPartitionManagement` from
+  * the served table and break SHOW PARTITIONS and partition ops. */
+private[catalog] trait ForwardsPartitions
+    extends org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
   import org.apache.spark.sql.catalyst.InternalRow
-  private val pm = inner
-    .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsPartitionManagement]
-  override def partitionSchema(): StructType = pm.partitionSchema()
+  protected def partitions
+      : org.apache.spark.sql.connector.catalog.SupportsPartitionManagement
+  override def partitionSchema(): StructType = partitions.partitionSchema()
   override def createPartition(ident: InternalRow,
       properties: util.Map[String, String]): Unit =
-    pm.createPartition(ident, properties)
+    partitions.createPartition(ident, properties)
   override def dropPartition(ident: InternalRow): Boolean =
-    pm.dropPartition(ident)
+    partitions.dropPartition(ident)
   override def replacePartitionMetadata(ident: InternalRow,
       properties: util.Map[String, String]): Unit =
-    pm.replacePartitionMetadata(ident, properties)
+    partitions.replacePartitionMetadata(ident, properties)
   override def loadPartitionMetadata(ident: InternalRow)
-      : util.Map[String, String] = pm.loadPartitionMetadata(ident)
+      : util.Map[String, String] = partitions.loadPartitionMetadata(ident)
   override def listPartitionIdentifiers(names: Array[String],
       ident: InternalRow): Array[InternalRow] =
-    pm.listPartitionIdentifiers(names, ident)
+    partitions.listPartitionIdentifiers(names, ident)
   override def partitionExists(ident: InternalRow): Boolean =
-    pm.partitionExists(ident)
+    partitions.partitionExists(ident)
 }
 
 private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
@@ -2071,15 +2070,15 @@ private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
   * live locations, so a stock in-place INSERT through the branch would
   * drop files into a directory main readers resolve — an unaudited row
   * leaking past the audit gate. This helper detects a branch attach by
-  * its `BASE` marker and turns every plain append/overwrite into the
-  * catalog's own generation discipline: hard-link the current
-  * generation into a fresh sibling (inode links — KiB of metadata,
-  * bytes shared), land the new rows there, publish by swapping the
-  * BRANCH snapshot's location. Main's snapshot never references the
-  * new dir; [[WritableSnapshotCatalog.fastForward]] is what publishes
-  * it, and [[WritableSnapshotCatalog.gcGenerations]] reclaims it if
-  * the audit is abandoned. Row-level DML (UPDATE/DELETE/MERGE) already
-  * stages fresh generations on every path and needs no routing.
+  * its `BASE` marker, and the branch wrappers below turn every plain
+  * append/overwrite into a fresh [[Generation]] (an append carries the
+  * current one over by hard link: KiB of metadata, bytes shared)
+  * published by swapping the BRANCH snapshot's location. Main's
+  * snapshot never references the new dir;
+  * [[WritableSnapshotCatalog.fastForward]] is what publishes it, and
+  * [[WritableSnapshotCatalog.gcGenerations]] reclaims it if the audit
+  * is abandoned. Row-level DML (UPDATE/DELETE/MERGE) already stages
+  * fresh generations on every path and needs no routing.
   *
   * Scale note (100 TB): the link pass is one inode link per live data
   * file of the table — metadata-speed, zero bytes moved; the append
@@ -2089,44 +2088,13 @@ private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
 private[catalog] object BranchCow {
   def isBranchAttach(snapshotDir: String): Boolean =
     new java.io.File(snapshotDir, "BASE").isFile
-
-  /** Hard-link one generation's live contents into a fresh sibling:
-    * visible data files, hive partition subtrees (with their nested
-    * MOR sidecars), top-level `_deletes` sidecars and `_cdc` pre-image
-    * files. Committer/engine litter (`_SUCCESS`, `_temporary`,
-    * `_graftwriting`, stats docs — re-derivable) is never carried. */
-  def linkGeneration(oldRoot: String, newRoot: String): Unit = {
-    def linkSidecars(src: java.io.File, dst: java.io.File): Unit =
-      for (dn <- Seq(Mor.DeletesDirName, Mor.CdcDirName)) {
-        val sd = new java.io.File(src, dn)
-        if (sd.isDirectory) {
-          val dd = new java.io.File(dst, dn)
-          dd.mkdirs()
-          Option(sd.listFiles()).toSeq.flatten.filter(_.isFile)
-            .foreach(f => Mor.linkOne(f, new java.io.File(dd, f.getName)))
-        }
-      }
-    def walk(src: java.io.File, dst: java.io.File): Unit = {
-      Mor.linkAll(src, dst) // visible files only
-      linkSidecars(src, dst)
-      Option(src.listFiles()).toSeq.flatten
-        .filter(d => d.isDirectory && d.getName.contains("=") &&
-          !d.getName.startsWith(".") && !d.getName.startsWith("_"))
-        .foreach { d =>
-          val nd = new java.io.File(dst, d.getName)
-          nd.mkdirs()
-          walk(d, nd)
-        }
-    }
-    walk(new java.io.File(oldRoot), new java.io.File(newRoot))
-  }
 }
 
 /** Serving wrapper a BRANCH attach puts around the direct table:
   * reads delegate untouched; plain INSERT INTO / INSERT OVERWRITE
-  * route through a V1 write that stages a fresh hard-linked generation
-  * and swaps the branch snapshot's location at the end — never a byte
-  * into the fork-shared directory (see [[BranchCow]]). */
+  * route through a V1 write that stages a fresh generation and swaps
+  * the branch snapshot's location at the end — never a byte into the
+  * fork-shared directory (see [[BranchCow]]). */
 private[catalog] class BranchCowAppendTable(inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo, partCols: Seq[String])
   extends Table
@@ -2180,33 +2148,17 @@ private[catalog] class BranchCowAppendTable(inner: Table,
           new org.apache.spark.sql.sources.InsertableRelation {
             override def insert(data: org.apache.spark.sql.DataFrame,
                 legacyOverwrite: Boolean): Unit = {
-              val oldRoot = Mor.normLoc(ti.location)
-              val newRoot = oldRoot +
-                s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-              new java.io.File(newRoot).mkdirs()
-              // in-flight marker for gcGenerations (no _temporary
-              // until the V1 writer starts; present from first byte)
-              val marker = new java.io.File(newRoot, "_graftwriting")
-              java.nio.file.Files.write(marker.toPath,
-                Array.emptyByteArray): Unit
-              try {
+              val gen = Generation.of(ti)
+              gen.stage {
                 val w = data.write.format(ti.provider)
                   .mode(org.apache.spark.sql.SaveMode.Append)
                 (if (partCols.nonEmpty) w.partitionBy(partCols: _*)
-                 else w).save(newRoot)
-                // OVERWRITE = fresh generation with only the new rows;
-                // APPEND additionally carries the old generation over
-                // by hard link (bytes shared, names disjoint — fresh
-                // writes use fresh UUID part names)
-                if (!(overwrite || legacyOverwrite))
-                  BranchCow.linkGeneration(oldRoot, newRoot)
-                marker.delete(): Unit
-                cat.swapLocation(ti, newRoot) // the ONLY publish point
-              } catch {
-                case e: Throwable =>
-                  org.apache.commons.io.FileUtils
-                    .deleteQuietly(new java.io.File(newRoot)): Unit
-                  throw e
+                 else w).save(gen.root)
+                // OVERWRITE = only the new rows; APPEND carries the
+                // current generation over too (fresh writes use fresh
+                // UUID part names, so the names stay disjoint)
+                if (!(overwrite || legacyOverwrite)) gen.carryOver()
+                gen.publish(cat)
               }
             }
           }
@@ -2214,42 +2166,13 @@ private[catalog] class BranchCowAppendTable(inner: Table,
     }
 }
 
-/** [[BranchCowAppendTable]] for partitioned inners — preserves the
-  * partition-management surface the outer wrappers cast for. */
-private[catalog] class BranchCowAppendPartitionedTable(
-    inner: Table
-      with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement,
-    cat: WritableSnapshotCatalog, ti: TableInfo, partCols: Seq[String])
-  extends BranchCowAppendTable(inner, cat, ti, partCols)
-  with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
-  import org.apache.spark.sql.catalyst.InternalRow
-  override def partitionSchema(): StructType = inner.partitionSchema()
-  override def createPartition(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    inner.createPartition(ident, properties)
-  override def dropPartition(ident: InternalRow): Boolean =
-    inner.dropPartition(ident)
-  override def replacePartitionMetadata(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    inner.replacePartitionMetadata(ident, properties)
-  override def loadPartitionMetadata(ident: InternalRow)
-      : util.Map[String, String] = inner.loadPartitionMetadata(ident)
-  override def listPartitionIdentifiers(names: Array[String],
-      ident: InternalRow): Array[InternalRow] =
-    inner.listPartitionIdentifiers(names, ident)
-  override def partitionExists(ident: InternalRow): Boolean =
-    inner.partitionExists(ident)
-}
-
 /** The V2 rendering of branch copy-on-write appends, for unpartitioned
   * PARQUET tables (which are served under the row-level DML wrappers —
   * those build V2 writes for TRUNCATE, so this wrapper must keep the
   * BATCH_WRITE capability; declaring V1_BATCH_WRITE would make the
-  * planner reject every V2 write on the table). The append itself is
-  * Spark's stock executor-parallel V2 parquet write into a FRESH
-  * generation dir; commit hard-links the current generation in (append
-  * semantics) and publishes via the branch catalog's atomic location
-  * swap — the [[SwapOnCommitWrite]] discipline plus one link pass. */
+  * planner reject every V2 write on the table). Its writes are the
+  * row-level path's [[CowWrites.swapWrite]], carrying the current
+  * generation over on append. */
 private[catalog] class BranchCowAppendV2Table(inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo)
   extends Table
@@ -2257,7 +2180,7 @@ private[catalog] class BranchCowAppendV2Table(inner: Table,
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
 
   override def name(): String = inner.name()
   override def schema(): StructType = inner.schema()
@@ -2293,49 +2216,8 @@ private[catalog] class BranchCowAppendV2Table(inner: Table,
     new WriteBuilder with SupportsTruncate {
       private var overwrite = false
       override def truncate(): WriteBuilder = { overwrite = true; this }
-      override def build(): Write = {
-        val spark = SparkSession.active
-        val oldRoot = Mor.normLoc(ti.location)
-        val newLoc = oldRoot +
-          s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-        val target = org.apache.spark.sql.execution.datasources.v2.parquet
-          .ParquetTable(s"${ti.db}.${ti.name}_branch_cow", spark,
-            CaseInsensitiveStringMap.empty(), Seq(newLoc),
-            Some(inner.schema()),
-            classOf[org.apache.spark.sql.execution.datasources
-              .parquet.ParquetFileFormat])
-        val d = target
-          .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-          .newWriteBuilder(info).build()
-        val linkOld = !overwrite
-        new Write {
-          override def description(): String =
-            s"graft-branch-cow-append ${ti.db}.${ti.name} -> $newLoc"
-          override def toBatch: BatchWrite = new BatchWrite {
-            private val db = d.toBatch
-            override def createBatchWriterFactory(
-                pInfo: PhysicalWriteInfo): DataWriterFactory =
-              db.createBatchWriterFactory(pInfo)
-            override def useCommitCoordinator(): Boolean =
-              db.useCommitCoordinator()
-            override def onDataWriterCommit(
-                message: WriterCommitMessage): Unit =
-              db.onDataWriterCommit(message)
-            override def commit(messages: Array[WriterCommitMessage])
-                : Unit = {
-              db.commit(messages) // fresh rows final, nothing published
-              if (linkOld) // append: carry the old generation by link
-                BranchCow.linkGeneration(oldRoot, newLoc)
-              cat.swapLocation(ti, newLoc) // the ONLY publish point
-            }
-            override def abort(messages: Array[WriterCommitMessage])
-                : Unit = {
-              db.abort(messages)
-              org.apache.commons.io.FileUtils
-                .deleteQuietly(new java.io.File(newLoc)): Unit
-            }
-          }
-        }
-      }
+      override def build(): Write =
+        CowWrites.swapWrite(cat, ti, inner.schema(), info,
+          carryOver = !overwrite)
     }
 }

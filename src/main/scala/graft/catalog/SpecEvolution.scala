@@ -175,7 +175,7 @@ private[graft] object SpecEvolution {
       else None)
     // fresh leg location: strip any prior _spec suffix so legs stay
     // siblings of the original dir
-    val base = Mor.normLoc(ti.location).replaceAll("_spec\\d+$", "")
+    val base = Generation.path(ti.location).replaceAll("_spec\\d+$", "")
     val newLoc = s"${base}_spec${n + 1}"
     new java.io.File(newLoc).mkdirs()
     val kept = ti.properties.filterNot(p =>

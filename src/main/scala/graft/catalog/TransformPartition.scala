@@ -423,33 +423,20 @@ private[catalog] class TransformPartitionTable(inner: Table,
                   .partitionBy(derivers.map(_.derivedName): _*)
                   .mode(org.apache.spark.sql.SaveMode.Append)
                   .save(target)
-              if (!branchAttach) {
-                if (ow) {
-                  // static overwrite: fresh generation + atomic swap
-                  // when this attach owns the catalog; else rewrite in
-                  // place (read-only attaches shouldn't write at all)
-                  val c = cat.getOrElse(throw new IllegalStateException(
-                    s"overwrite of ${ti.db}.${ti.name} without a " +
-                      "writable catalog attach"))
-                  val newRoot = Mor.normLoc(ti.location) +
-                    s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-                  save(newRoot)
-                  c.swapLocation(ti, newRoot)
-                } else save(Mor.normLoc(ti.location))
-              } else {
-                // branch attach: never a byte into the shared dir
-                val oldRoot = Mor.normLoc(ti.location)
-                val newRoot = oldRoot +
-                  s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-                try {
-                  save(newRoot)
-                  if (!ow) BranchCow.linkGeneration(oldRoot, newRoot)
-                  cat.get.swapLocation(ti, newRoot)
-                } catch {
-                  case e: Throwable =>
-                    org.apache.commons.io.FileUtils.deleteQuietly(
-                      new java.io.File(newRoot)): Unit
-                    throw e
+              // appends land in place; an overwrite, and any write
+              // through a branch attach (never a byte into the shared
+              // dir), stage a fresh generation — a branch append
+              // carrying the current one over
+              if (!ow && !branchAttach) save(Generation.path(ti.location))
+              else {
+                val c = cat.getOrElse(throw new IllegalStateException(
+                  s"write to ${ti.db}.${ti.name} without a writable " +
+                    "catalog attach"))
+                val gen = Generation.of(ti)
+                gen.stage {
+                  save(gen.root)
+                  if (!ow) gen.carryOver()
+                  gen.publish(c)
                 }
               }
             }
@@ -611,7 +598,7 @@ private[catalog] class TransformScanBuilder(delegate: ScanBuilder,
   * so a daily-append table accumulates K files per day. This rewrites
   * each cell with >= `minFiles` data files into ONE file, PRESERVING
   * the derived directory layout, and publishes through the same COW
-  * discipline as row-level DML: fresh `_rl` generation, untouched
+  * discipline as row-level DML: a fresh [[Generation]], untouched
   * cells hard-linked file-for-file (zero bytes moved), one atomic
   * location swap — which also routes the incremental stats path, so
   * only the freshly-compacted files pay a footer read
@@ -639,11 +626,6 @@ private[graft] object TransformCompaction {
     walk(root, 0)
   }
 
-  private def dataFiles(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).toSeq.flatten.filter(f =>
-      f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-
   def compact(s: SparkSession, cat: WritableSnapshotCatalog,
       ti: TableInfo, minFiles: Int = 2): CompactResult = {
     val derivers = TransformPartition.derivers(ti)
@@ -653,17 +635,15 @@ private[graft] object TransformCompaction {
         "and unpartitioned tables")
     require(minFiles >= 2,
       s"minFiles must be >= 2, got $minFiles")
-    val root = Mor.normLoc(ti.location)
+    val root = Generation.path(ti.location)
     val cells = leafDirs(new java.io.File(root), derivers.length)
-      .map(rel => rel -> dataFiles(new java.io.File(root, rel)))
+      .map(rel => rel -> Generation.dataFiles(new java.io.File(root, rel)))
     val (toCompact, toLink) =
       cells.partition(_._2.length >= minFiles)
     if (toCompact.isEmpty)
       return CompactResult(root, Nil, toLink.map(_._1))
-    val newRoot =
-      root + s"_rl${java.util.UUID.randomUUID.toString.take(8)}"
-    new java.io.File(newRoot).mkdirs()
-    try {
+    val gen = Generation.of(ti)
+    gen.stage {
       import org.apache.spark.sql.functions.col
       // one job over ONLY the multi-file cells; basePath restores the
       // derived partition columns from the directory names
@@ -678,21 +658,12 @@ private[graft] object TransformCompaction {
         .write.format(ti.provider)
         .partitionBy(derivers.map(_.derivedName): _*)
         .mode(org.apache.spark.sql.SaveMode.Append)
-        .save(newRoot)
+        .save(gen.root)
       // untouched cells carry over by inode — byte-identical proof,
       // and the stats shards covering them reuse across the swap
-      for ((rel, _) <- toLink) {
-        val dst = new java.io.File(newRoot, rel)
-        dst.mkdirs()
-        Mor.linkAll(new java.io.File(root, rel), dst)
-      }
-      cat.swapLocation(ti, newRoot)
-      CompactResult(newRoot, toCompact.map(_._1), toLink.map(_._1))
-    } catch {
-      case e: Throwable =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(newRoot)): Unit
-        throw e
+      gen.carryOver(except = toCompact.map(_._1).toSet)
+      gen.publish(cat)
+      CompactResult(gen.root, toCompact.map(_._1), toLink.map(_._1))
     }
   }
 }

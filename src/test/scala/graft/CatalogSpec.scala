@@ -2672,6 +2672,129 @@ import graft.sources.Scans
     assert(plug.gcGenerations()._1.isEmpty, "gc not idempotent")
   }
 
+  /** A fresh writable catalog over an empty snapshot dir, registered
+    * as `cat`; returns the dir. */
+  private def freshWritable(cat: String, scratch: String): java.io.File = {
+    val dir = new java.io.File(Tables.scratch(sf, scratch))
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir.getPath)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.WritableSnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.path", dir.getPath)
+    dir
+  }
+
+  test("every rewrite path publishes one generation and leaves " +
+      "nothing staged") {
+    import org.apache.spark.sql.functions._
+    val cat = "genlaw"
+    val dir = freshWritable(cat, "v2_genlaw_snapshot")
+    spark.sql(s"CREATE NAMESPACE $cat.g")
+    val mor = "TBLPROPERTIES('graft.delete.mode'='merge-on-read', " +
+      "'graft.row.id'='k')"
+    def create(t: String, cols: String, tail: String = ""): Unit = {
+      spark.sql(s"CREATE TABLE $cat.g.$t ($cols) USING parquet $tail")
+      spark.sql(s"INSERT INTO $cat.g.$t SELECT * FROM VALUES " +
+        (0 until 12).map(i => s"($i, ${i}D" +
+          (if (cols.contains(" p ")) s", '${"ab"(i % 2)}')" else ")"))
+          .mkString(", "))
+    }
+    create("cow", "k BIGINT, v DOUBLE")
+    create("part", "k BIGINT, v DOUBLE, p STRING", "PARTITIONED BY (p)")
+    create("mor", "k BIGINT NOT NULL, v DOUBLE", mor)
+    create("morpart", "k BIGINT NOT NULL, v DOUBLE, p STRING",
+      s"PARTITIONED BY (p) $mor")
+    create("bpart", "k BIGINT, v DOUBLE, p STRING", "PARTITIONED BY (p)")
+    create("bplain", "k BIGINT, v DOUBLE")
+    create("tf", "k BIGINT, v DOUBLE", "PARTITIONED BY (bucket(2, k))")
+    val plug = attachWritable("genlaw_plug", dir.getPath)
+    plug.createBranch("b")
+    val bcat = "genlaw_br"
+    spark.conf.set(s"spark.sql.catalog.$bcat",
+      classOf[graft.catalog.WritableSnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$bcat.path", plug.branchDir("b"))
+    def headRev(): Int = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "HEAD").toPath)).trim.split("\\s+")(0).toInt
+    // every revision of main and of the branch
+    def referenced(): Set[String] =
+      (Option(new java.io.File(dir, "revs").listFiles).toSeq.flatten ++
+        Option(new java.io.File(dir, "branches").listFiles).toSeq.flatten
+          .flatMap(b => Option(new java.io.File(b, "revs").listFiles)
+            .toSeq.flatten))
+        .flatMap(r => CatalogTransfer.readLocal(r.getPath).tables)
+        .map(t => graft.catalog.Generation.path(t.location)).toSet
+    val base = new java.io.File(s"${dir.getPath}/_warehouse/g")
+    def siblings(t: String): Set[String] =
+      Option(base.listFiles).toSeq.flatten
+        .filter(d => d.getName.startsWith(s"${t}_rl") &&
+          d.getName.matches(graft.catalog.Generation.NamePattern))
+        .map(_.getPath).toSet
+    def law(t: String)(rewrite: => Unit): Unit = {
+      val before = siblings(t)
+      rewrite
+      val after = siblings(t)
+      assert(after.size == before.size + 1,
+        s"$t: expected one new generation, got ${after -- before}")
+      val unreferenced = after -- referenced()
+      assert(unreferenced.isEmpty, s"$t: staged, unpublished $unreferenced")
+      val marked = after.filter(g =>
+        new java.io.File(g, graft.catalog.Generation.Marker).exists)
+      assert(marked.isEmpty, s"$t: in-flight marker left in $marked")
+    }
+    law("cow")(spark.sql(s"UPDATE $cat.g.cow SET v = -v WHERE k < 3"))
+    law("part")(spark.sql(s"""MERGE INTO $cat.g.part t
+      |USING (SELECT 1L AS k, 9D AS v, 'b' AS p) s ON t.k = s.k
+      |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin))
+    law("mor")(spark.sql(s"DELETE FROM $cat.g.mor WHERE k = 4"))
+    law("morpart")(spark.sql(s"DELETE FROM $cat.g.morpart WHERE k = 5"))
+    law("bpart")(spark.sql(
+      s"INSERT INTO $bcat.g.bpart VALUES (100L, 1D, 'c')"))
+    law("bplain")(spark.sql(s"INSERT INTO $bcat.g.bplain VALUES (100L, 1D)"))
+    law("tf")(spark.sql(
+      s"INSERT OVERWRITE $cat.g.tf SELECT id, 1D FROM range(8)"))
+    // two appends give every bucket two files to compact
+    for (_ <- 0 until 2)
+      spark.sql(s"INSERT INTO $cat.g.tf SELECT id, 2D FROM range(8)")
+    law("tf") {
+      val ti = CatalogTransfer.readLocal(s"${dir.getPath}/revs/${headRev()}")
+        .tables.find(_.name == "tf").get
+      val res = graft.catalog.TransformCompaction.compact(spark, plug, ti)
+      assert(res.compacted.size == 2)
+    }
+    // the rewrites kept their rows
+    assert(spark.table(s"$cat.g.cow").agg(sum("v")).head.getDouble(0)
+      == 66.0 - 2 * 3.0)
+    assert(spark.table(s"$cat.g.part").filter(col("k") === 1)
+      .head.getDouble(1) == 9.0)
+    assert(spark.table(s"$cat.g.mor").count() == 11)
+    assert(spark.table(s"$cat.g.morpart").count() == 11)
+    assert(spark.table(s"$bcat.g.bpart").count() == 13)
+    assert(spark.table(s"$bcat.g.bplain").count() == 13)
+    assert(spark.table(s"$cat.g.bpart").count() == 12)
+    assert(spark.table(s"$cat.g.tf").count() == 24)
+    plug.dropBranch("b")
+  }
+
+  test("a failed INSERT OVERWRITE into a transform-partitioned table " +
+      "leaves no generation behind and serves the old rows") {
+    val cat = "tfow"
+    val dir = freshWritable(cat, "v2_tfow_snapshot")
+    spark.sql(s"CREATE NAMESPACE $cat.g")
+    spark.sql(s"CREATE TABLE $cat.g.t (k BIGINT, v DOUBLE) USING parquet " +
+      "PARTITIONED BY (bucket(2, k))")
+    spark.sql(s"INSERT INTO $cat.g.t SELECT id, 1D FROM range(10)")
+    def rows() = spark.table(s"$cat.g.t").collect().map(_.toString).sorted
+      .toSeq
+    val before = rows()
+    intercept[Exception](spark.sql(s"""INSERT OVERWRITE $cat.g.t
+      |SELECT id, CASE WHEN id = 5 THEN CAST(raise_error('boom') AS DOUBLE)
+      |ELSE 2D END FROM range(10)""".stripMargin))
+    val gens = Option(new java.io.File(s"${dir.getPath}/_warehouse/g")
+      .list).toSeq.flatten.filter(_.startsWith("t_rl"))
+    assert(gens.isEmpty, s"the failed overwrite left $gens")
+    assert(rows() == before)
+  }
+
   test("meta_ddl_script executes verbatim and reproduces the snapshot") {
     val script = graft.catalog.DdlQueries.ddlScript(spark, sf)
       .orderBy("stmt_order").collect()

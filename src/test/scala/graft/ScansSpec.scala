@@ -46,6 +46,15 @@ class ScansSpec extends SparkSpec {
       "— y dimension not clustered; layout degraded to a 1-D sort?")
   }
 
+  test("the published lineitem_by_flag dir lists only its partition " +
+      "dirs, so partition recovery ignores nothing in it") {
+    val dir = Scans.lineitemByFlagDir(spark, sf)
+    val names = Option(new java.io.File(dir).list).toSeq.flatten
+      .filterNot(n => n.startsWith(".") || n == "_SUCCESS")
+    assert(names.nonEmpty && names.forall(_.startsWith("l_returnflag=")),
+      s"non-partition entries in $dir: ${names.sorted}")
+  }
+
   test("bloom-filtered parquet skips row groups on a point probe") {
     // materialize the bloom-filtered scratch dir
     SparkEntry.queries("scan_bloom_skip")(spark, sf).count()
