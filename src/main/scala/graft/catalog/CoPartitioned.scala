@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey,
   InputPartition, PartitionReaderFactory, Scan, ScanBuilder,
-  SupportsPushDownRequiredColumns, SupportsReportPartitioning}
+  SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{
   KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -117,18 +117,11 @@ private[catalog] object CoPartitioned {
 
   /** Builder shim: column pruning forwards (public interface); the
     * built scan is wrapped only while the SPJ flag is on. */
-  final class SpjScanBuilder(base: ScanBuilder, partSchema: StructType)
-      extends ScanBuilder with SupportsPushDownRequiredColumns {
-
-    override def pruneColumns(requiredSchema: StructType): Unit =
-      base match {
-        case b: SupportsPushDownRequiredColumns =>
-          b.pruneColumns(requiredSchema)
-        case _ => ()
-      }
+  final class SpjScanBuilder(protected val delegate: ScanBuilder,
+      partSchema: StructType) extends ScanBuilder with ForwardsColumns {
 
     override def build(): Scan = {
-      val built = base.build()
+      val built = delegate.build()
       if (spjEnabled) new SpjScan(built, partSchema) else built
     }
   }
@@ -138,12 +131,8 @@ private[catalog] object CoPartitioned {
     * Constructed only while the SPJ flag is on (see
     * [[SnapshotCatalog.loadTable]]) — with the flag off the read-only
     * catalog serves the stock file table, byte-identical to before. */
-  final class CoPartitionedReadTable(inner: Table, partCols: Seq[String])
-      extends Table with SupportsRead {
-
-    override def name(): String = inner.name()
-
-    override def schema(): StructType = inner.schema()
+  final class CoPartitionedReadTable(protected val inner: Table,
+      partCols: Seq[String]) extends ForwardingTable with SupportsRead {
 
     override def partitioning(): Array[Transform] =
       partCols.map(c => Expressions.identity(c)).toArray
@@ -152,14 +141,12 @@ private[catalog] object CoPartitioned {
       Set(TableCapability.BATCH_READ).asJava
 
     private def partSchema: StructType = StructType(partCols.map(c =>
-      inner.schema().fields.find(_.name == c).getOrElse(
+      schema().fields.find(_.name == c).getOrElse(
         throw new IllegalStateException(
-          s"partition column $c missing from ${inner.name()} schema"))))
+          s"partition column $c missing from ${name()} schema"))))
 
     override def newScanBuilder(
         options: CaseInsensitiveStringMap): ScanBuilder =
-      new SpjScanBuilder(
-        inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-        partSchema)
+      new SpjScanBuilder(innerScanBuilder(options), partSchema)
   }
 }

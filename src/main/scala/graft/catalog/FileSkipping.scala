@@ -1,11 +1,9 @@
 package graft.catalog
 
-import java.util
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -710,59 +708,35 @@ object FileSkipping {
   * unchanged — like [[MorRowLevelTable]], this hides the inner
   * FileTable from FallBackFileSourceV2 (harmless: the V2 path is the
   * served path). */
-private[catalog] class StatsTable(inner: Table,
+private[catalog] class StatsTable(protected val inner: Table,
     stats: Map[String, FileSkipping.FileStat])
-  extends Table with SupportsRead with SupportsWrite
+  extends ForwardingTable with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
-
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning()
-      : Array[org.apache.spark.sql.connector.expressions.Transform] =
-    inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def capabilities(): util.Set[TableCapability] =
-    inner.capabilities()
 
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    inner match {
-      case m: org.apache.spark.sql.connector.catalog.SupportsMetadataColumns =>
-        m.metadataColumns()
-      case _ => Array.empty
-    }
+    innerMetadataColumns
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new StatsScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options), stats)
+    new StatsScanBuilder(innerScanBuilder(options), stats)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    inner.asInstanceOf[SupportsWrite].newWriteBuilder(info)
+    innerWriteBuilder(info)
 }
 
 /** Forwards pushdown to the stock parquet builder, REMEMBERS the
   * pushed predicates, and wraps the built scan with the file pruner.
   * Skipped when an aggregate was pushed (the delegate then serves
   * footer-computed rows, not file partitions). */
-private[catalog] class StatsScanBuilder(delegate: ScanBuilder,
+private[catalog] class StatsScanBuilder(protected val delegate: ScanBuilder,
     stats: Map[String, FileSkipping.FileStat])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
+  extends ScanBuilder with ForwardsColumns with ForwardsFilters
+  with ForwardsAggregates {
 
   private var filters
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
   private var aggPushed = false
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(requiredSchema)
-      case _ => ()
-    }
 
   override def pushFilters(
       fs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
@@ -771,37 +745,15 @@ private[catalog] class StatsScanBuilder(delegate: ScanBuilder,
     // all are sound pruning evidence regardless of what the delegate
     // reports back as post-scan residue
     filters = fs
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushFilters(fs)
-      case _ => fs
-    }
-  }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
-
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      a.supportCompletePushDown(agg)
-    case _ => false
+    super.pushFilters(fs)
   }
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      val ok = a.pushAggregation(agg)
-      if (ok) aggPushed = true
-      ok
-    case _ => false
+      : Boolean = {
+    val ok = super.pushAggregation(agg)
+    if (ok) aggPushed = true
+    ok
   }
 
   override def build(): Scan = {

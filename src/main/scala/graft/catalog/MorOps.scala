@@ -1,13 +1,11 @@
 package graft.catalog
 
-import java.util
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -105,6 +103,14 @@ private[catalog] object Mor {
     * column itself (buildOriginalRowIdValues), so even a key-moving
     * UPDATE deletes the old key and inserts the new one. */
   val UpdateModeProp = "graft.update.mode"
+
+  /** `schema` with the row id re-asserted NOT NULL. The file table
+    * relaxes every column to nullable; the catalog's declared NOT NULL
+    * is authoritative, and Spark's delta rewrite refuses nullable row
+    * ids (NULLABLE_ROW_ID_ATTRIBUTES). */
+  def rowIdNotNull(schema: StructType, keyField: StructField): StructType =
+    StructType(schema.fields.map(f =>
+      if (f.name == keyField.name) f.copy(nullable = false) else f))
 
   /** Sidecar directory under the generation dir (underscore-prefixed:
     * hidden from the stock parquet file index). */
@@ -597,30 +603,15 @@ private[catalog] object MorReadTable {
   * generation this TableInfo points at (time travel thus applies the
   * HISTORICAL generation's sidecars). Zero outstanding sidecars costs
   * nothing — the builder hands back the delegate scan verbatim. */
-private[catalog] class MorReadTable(inner: Table, ti: TableInfo,
-    keyField: StructField) extends Table with SupportsRead {
-  override def name(): String = inner.name()
+private[catalog] class MorReadTable(protected val inner: Table,
+    ti: TableInfo, keyField: StructField)
+  extends ForwardingTable with SupportsRead {
   override def schema(): StructType =
-    StructType(inner.schema().fields.map(f =>
-      if (f.name == keyField.name) f.copy(nullable = false) else f))
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema().fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column
-        .create(f.name, f.dataType, f.nullable))
-  override def partitioning()
-      : Array[org.apache.spark.sql.connector.expressions.Transform] =
-    inner.partitioning()
-  override def properties(): util.Map[String, String] =
-    inner.properties()
-  override def capabilities()
-      : util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    inner.capabilities()
+    Mor.rowIdNotNull(super.schema(), keyField)
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new MorScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-      keyField, Mor.loadSidecars(ti.location))
+    new MorScanBuilder(innerScanBuilder(options), keyField,
+      Mor.loadSidecars(ti.location))
 }
 
 /** Serves an unpartitioned parquet table whose DELETE mode is
@@ -637,23 +628,11 @@ private[catalog] class MorRowLevelTable(inner: Table,
   // fresh per scan/statement: the sidecar set is generation state
   private def sidecars: Seq[DeleteSidecar] = Mor.loadSidecars(ti.location)
 
-  // the file table relaxes every column to nullable; the catalog's
-  // declared NOT NULL on the row id is re-asserted here (Spark's
-  // delta rewrite refuses nullable row ids — NULLABLE_ROW_ID_ATTRIBUTES)
   override def schema(): StructType =
-    StructType(inner.schema().fields.map(f =>
-      if (f.name == keyField.name) f.copy(nullable = false) else f))
-
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema().fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column
-        .create(f.name, f.dataType, f.nullable))
+    Mor.rowIdNotNull(super.schema(), keyField)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MorScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-      keyField, sidecars)
+    new MorScanBuilder(innerScanBuilder(options), keyField, sidecars)
 
   // next to the COW path's `_gen`: the CDC provenance struct the delta
   // operations require (served only by their own scans — see CdcScan)
@@ -737,10 +716,9 @@ private[catalog] class MorDeltaOperation(table: MorRowLevelTable,
   * carries the whole pre-image) while the scan's own output keeps
   * exactly the requested shape; filter pushdown forwards through, so
   * the delta scan still reads only matched row groups. */
-private[catalog] class CdcScanBuilder(delegate: ScanBuilder,
+private[catalog] class CdcScanBuilder(protected val delegate: ScanBuilder,
     tableSchema: StructType)
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
+  extends ScanBuilder with ForwardsColumns with ForwardsFilters {
 
   private var cdcRequested = false
   private var requested: StructType = tableSchema
@@ -752,37 +730,12 @@ private[catalog] class CdcScanBuilder(delegate: ScanBuilder,
         s"metadata column ${Mor.CdcCol} must be requested last, got " +
           requiredSchema.fieldNames.mkString(", "))
       requested = StructType(requiredSchema.fields.dropRight(1))
-      delegate match {
-        case p: SupportsPushDownRequiredColumns =>
-          p.pruneColumns(tableSchema) // the struct needs every column
-        case _ => ()
-      }
+      super.pruneColumns(tableSchema) // the struct needs every column
     } else {
       requested = requiredSchema
-      delegate match {
-        case p: SupportsPushDownRequiredColumns =>
-          p.pruneColumns(requiredSchema)
-        case _ => ()
-      }
+      super.pruneColumns(requiredSchema)
     }
   }
-
-  override def pushFilters(
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushFilters(filters)
-      case _ => filters
-    }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
 
   override def build(): Scan = {
     val ds = delegate.build()
@@ -875,43 +828,19 @@ private[catalog] class CdcReaderFactory(delegate: PartitionReaderFactory,
   * still forwards — deleted-row filtering composes with any pushed
   * predicate conjunctively — but aggregate pushdown is REFUSED: a
   * parquet-metadata COUNT cannot see delete vectors. */
-private[catalog] class MorScanBuilder(delegate: ScanBuilder,
+private[catalog] class MorScanBuilder(protected val delegate: ScanBuilder,
     keyField: StructField, sidecars: Seq[DeleteSidecar])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
+  extends ScanBuilder with ForwardsColumns with ForwardsFilters
+  with ForwardsAggregates {
 
   private var addedKey = false
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    val withKey =
-      if (sidecars.nonEmpty &&
-          !requiredSchema.fieldNames.contains(keyField.name)) {
-        addedKey = true
-        requiredSchema.add(keyField)
-      } else requiredSchema
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(withKey)
-      case _ => ()
-    }
+    addedKey = sidecars.nonEmpty &&
+      !requiredSchema.fieldNames.contains(keyField.name)
+    super.pruneColumns(
+      if (addedKey) requiredSchema.add(keyField) else requiredSchema)
   }
-
-  override def pushFilters(
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushFilters(filters)
-      case _ => filters
-    }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
 
   // aggregate pushdown forwards ONLY on a clean generation (the
   // builder knows the sidecar set at construction): a pushed COUNT
@@ -919,21 +848,11 @@ private[catalog] class MorScanBuilder(delegate: ScanBuilder,
   // just-compacted table must not pay for a mode it isn't using
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean =
-    sidecars.isEmpty && (delegate match {
-      case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-        a.supportCompletePushDown(agg)
-      case _ => false
-    })
+      : Boolean = sidecars.isEmpty && super.supportCompletePushDown(agg)
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean =
-    sidecars.isEmpty && (delegate match {
-      case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-        a.pushAggregation(agg)
-      case _ => false
-    })
+      : Boolean = sidecars.isEmpty && super.pushAggregation(agg)
 
   override def build(): Scan = {
     val ds = delegate.build()
@@ -1025,7 +944,7 @@ private[catalog] class MorReaderFactory(delegate: PartitionReaderFactory,
     val hit = hitSidecars(p)
     val dr = delegate.createReader(p)
     if (hit.isEmpty && !dropKey) return dr
-    val deleted = new util.HashSet[Any]()
+    val deleted = new java.util.HashSet[Any]()
     hit.foreach(_.keys.foreach(k =>
       deleted.add(Mor.decodeKey(k, keyField.dataType)): Unit))
     val proj =
@@ -1303,34 +1222,23 @@ private[catalog] class MorDeltaWriter(newRoot: String,
   * COW UPDATE/MERGE over the merged read. */
 private[catalog] class MorPartitionedTable(inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo,
-    partField: StructField, keyField: StructField)
-  extends PartitionScopedRowLevelTable(inner, cat, ti, partField) {
+    derivers: Seq[PartDeriver], keyField: StructField)
+  extends PartitionScopedRowLevelTable(inner, cat, ti, derivers) {
 
   // fresh per scan/statement: the sidecar set is generation state
   private def sidecars: Seq[DeleteSidecar] = Mor.loadSidecars(ti.location)
 
-  // re-assert the catalog's declared NOT NULL on the row id (the file
-  // table relaxes every column; the delta rewrite refuses nullable ids)
   override def schema(): StructType =
-    StructType(inner.schema().fields.map(f =>
-      if (f.name == keyField.name) f.copy(nullable = false) else f))
-
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema().fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column
-        .create(f.name, f.dataType, f.nullable))
+    Mor.rowIdNotNull(super.schema(), keyField)
 
   // the merged read, plus `_partition` service on top (the runtime
   // group filter's build side reads the metadata column through this
   // REGULAR scan — without it a COW UPDATE's scope collapses to the
   // empty set and the rewrite silently no-ops)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PartMetaScanBuilder(
-      new MorScanBuilder(
-        inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-        keyField, sidecars),
-      Seq(IdentityDeriver(partField)))
+    PartScanBuilder(
+      new MorScanBuilder(innerScanBuilder(options), keyField, sidecars),
+      None, derivers)
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo)
@@ -1343,8 +1251,7 @@ private[catalog] class MorPartitionedTable(inner: Table,
         // (the merged read — outstanding deletes must not resurrect);
         // touched partitions rewrite clean, untouched ones hard-link
         // with their sidecars (PartitionRoutedCowWrite carries them)
-        new PartitionCowOperation(this, cat, ti,
-          IdentityDeriver(partField), info)
+        new PartitionCowOperation(this, cat, ti, derivers, info)
 }
 
 /** Delta DELETE on a partitioned merge-on-read table: the rewrite scan

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Literal, NamedReference, Transform}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Literal, NamedReference}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -66,17 +66,11 @@ private[catalog] object RowLevelCowTable {
   val GenCol = "_gen"
 }
 
-private[catalog] class RowLevelCowTable(inner: Table,
+private[catalog] class RowLevelCowTable(protected val inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo)
-  extends Table with SupportsRead with SupportsWrite
+  extends ForwardingTable with SupportsRead with SupportsWrite
   with SupportsRowLevelOperations with SupportsMetadataColumns {
 
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
   // the wrapper hides the inner FileTable from FallBackFileSourceV2
   // (the rule that used to route INSERT OVERWRITE through the V1
   // command), so TRUNCATE must be a first-class V2 capability here —
@@ -84,13 +78,10 @@ private[catalog] class RowLevelCowTable(inner: Table,
   // delete-in-place it replaces
   override def capabilities(): util.Set[TableCapability] = {
     val caps = util.EnumSet.noneOf(classOf[TableCapability])
-    caps.addAll(inner.capabilities())
+    caps.addAll(super.capabilities())
     caps.add(TableCapability.TRUNCATE)
     caps
   }
-  override def constraints():
-      Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    inner.constraints()
 
   override def metadataColumns(): Array[MetadataColumn] =
     Array(new MetadataColumn {
@@ -104,7 +95,7 @@ private[catalog] class RowLevelCowTable(inner: Table,
   // plain reads keep the STOCK parquet scan — full filter/column
   // pushdown; `_gen` is served only by the row-level operation's scan
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    inner.asInstanceOf[SupportsRead].newScanBuilder(options)
+    innerScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder
@@ -114,7 +105,7 @@ private[catalog] class RowLevelCowTable(inner: Table,
       override def build(): Write =
         if (doTruncate)
           CowWrites.swapWrite(cat, ti, inner.schema(), info)
-        else inner.asInstanceOf[SupportsWrite].newWriteBuilder(info).build()
+        else innerWriteBuilder(info).build()
     }
 
   override def newRowLevelOperationBuilder(
@@ -216,8 +207,8 @@ private[catalog] class GroupCowRowLevelOperation(inner: Table,
   * rewrites, whose UPDATE/MERGE replacement query must read every
   * carry-over row of the group anyway — a pushed filter would save
   * nothing on the dominant path (DELETE pays one post-scan filter). */
-private[catalog] class GenScanBuilder(delegate: ScanBuilder, gen: String)
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
+private[catalog] class GenScanBuilder(protected val delegate: ScanBuilder,
+    gen: String) extends ScanBuilder with ForwardsColumns {
 
   private var genRequested = false
 
@@ -228,12 +219,8 @@ private[catalog] class GenScanBuilder(delegate: ScanBuilder, gen: String)
       require(requiredSchema.fieldNames.last == RowLevelCowTable.GenCol,
         s"metadata column ${RowLevelCowTable.GenCol} must be requested " +
           s"last, got ${requiredSchema.fieldNames.mkString(", ")}")
-    val pruned = StructType(requiredSchema.fields
-      .filterNot(_.name == RowLevelCowTable.GenCol))
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(pruned)
-      case _ => ()
-    }
+    super.pruneColumns(StructType(requiredSchema.fields
+      .filterNot(_.name == RowLevelCowTable.GenCol)))
   }
 
   override def build(): Scan = {
@@ -287,6 +274,9 @@ private[catalog] class GenReaderFactory(delegate: PartitionReaderFactory,
 // granularity); here the group is the hive partition because the hive
 // directory IS the catalog's partition object (the HMS model the
 // reference migrates, yc-data-proc-metadata-import README_en.md:3).
+// One table, [[PartitionScopedRowLevelTable]], serves it for identity
+// layouts (`col=value`) and transform layouts (`col_bucket=k`) alike;
+// a [[PartDeriver]] sequence is the only difference between them.
 //
 // Moving parts, all stock-planner driven:
 //  - the operation requires the `_partition` metadata column (origin
@@ -362,32 +352,17 @@ private[catalog] case class IdentityDeriver(
   override def derive(v: Any): Any = v
 }
 
-/** Serves a single-column-partitioned parquet table with stock
-  * row-level DML at PARTITION granularity. Plain reads/writes and the
-  * partition-management surface forward to the wrapped
-  * [[PartitionedWriteTable]] untouched. */
-private[catalog] class PartitionScopedRowLevelTable(inner: Table,
-    cat: WritableSnapshotCatalog, ti: TableInfo,
-    partField: org.apache.spark.sql.types.StructField)
-  extends Table with SupportsRead with SupportsWrite
-  with SupportsRowLevelOperations with SupportsMetadataColumns
-  with ForwardsPartitions {
-
-  override protected def partitions =
-    inner.asInstanceOf[
-      org.apache.spark.sql.connector.catalog.SupportsPartitionManagement]
-
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def capabilities(): util.Set[TableCapability] =
-    inner.capabilities()
-  override def constraints():
-      Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    inner.constraints()
+/** Serves a partitioned parquet table with stock row-level DML at
+  * PARTITION granularity, for identity layouts (one
+  * [[IdentityDeriver]]; the construction site mixes in
+  * [[ForwardsPartitions]]) and transform layouts (the transform's
+  * deriver sequence) alike. Plain reads and writes forward to the
+  * wrapped table untouched; reads additionally serve `_partition`. */
+private[catalog] class PartitionScopedRowLevelTable(
+    protected val inner: Table, cat: WritableSnapshotCatalog,
+    ti: TableInfo, derivers: Seq[PartDeriver])
+  extends ForwardingTable with SupportsRead with SupportsWrite
+  with SupportsRowLevelOperations with SupportsMetadataColumns {
 
   override def metadataColumns(): Array[MetadataColumn] =
     Array(new MetadataColumn {
@@ -399,17 +374,14 @@ private[catalog] class PartitionScopedRowLevelTable(inner: Table,
     })
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PartMetaScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-      Seq(IdentityDeriver(partField)))
+    PartScanBuilder(innerScanBuilder(options), None, derivers)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    inner.asInstanceOf[SupportsWrite].newWriteBuilder(info)
+    innerWriteBuilder(info)
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    () => new PartitionCowOperation(inner, cat, ti,
-      IdentityDeriver(partField), info)
+    () => new PartitionCowOperation(inner, cat, ti, derivers, info)
 }
 
 /** One partition-scoped UPDATE/DELETE/MERGE rewrite. The operation
@@ -431,11 +403,6 @@ private[catalog] class PartitionCowOperation(inner: Table,
     derivers: Seq[PartDeriver],
     info: RowLevelOperationInfo) extends RowLevelOperation {
 
-  /** Single-transform convenience constructor (identity layouts). */
-  def this(inner: Table, cat: WritableSnapshotCatalog, ti: TableInfo,
-      deriver: PartDeriver, info: RowLevelOperationInfo) =
-    this(inner, cat, ti, Seq(deriver), info)
-
   private[catalog] val derivs: Seq[PartDeriver] = derivers
 
   /** Touched partition cells (RELATIVE dir paths, one `name=value`
@@ -453,9 +420,8 @@ private[catalog] class PartitionCowOperation(inner: Table,
     Array(Expressions.column(PartitionScoped.PartCol))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PartScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options),
-      this, derivers)
+    PartScanBuilder(inner.asInstanceOf[SupportsRead].newScanBuilder(options),
+      Some(this), derivers)
 
   override def newWriteBuilder(wInfo: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -465,15 +431,20 @@ private[catalog] class PartitionCowOperation(inner: Table,
     }
 }
 
-/** Scan builder serving `_partition` next to the data columns; same
-  * pruning contract as [[GenScanBuilder]] (metadata column last,
-  * stripped before delegating; no static filter pushdown — the ONLY
-  * pruning is the runtime group filter, so the served row set always
-  * equals the replaced group set). */
-private[catalog] class PartScanBuilder(delegate: ScanBuilder,
-    op: PartitionCowOperation,
-    derivers: Seq[PartDeriver])
-  extends ScanBuilder with SupportsPushDownRequiredColumns {
+/** Scan builder serving `_partition` next to the data columns when
+  * requested; same pruning contract as [[GenScanBuilder]] (metadata
+  * column last, stripped before delegating). The REGULAR path (`op` =
+  * None — the table's own scan, which the runtime group filter's build
+  * side reads `_partition` through, see [[PartScan.filterAttributes]])
+  * also forwards filters and aggregates, so plain reads keep their
+  * filters, partition pruning and metadata-only aggregates. The
+  * rewrite path (`op` = the operation) has no static filter pushdown:
+  * its ONLY pruning is the runtime group filter, so the served row set
+  * always equals the replaced group set. */
+private[catalog] class PartScanBuilder private (
+    protected val delegate: ScanBuilder,
+    op: Option[PartitionCowOperation], derivers: Seq[PartDeriver])
+  extends ScanBuilder with ForwardsColumns {
 
   private var partRequested = false
 
@@ -489,88 +460,24 @@ private[catalog] class PartScanBuilder(delegate: ScanBuilder,
     // the plan above.
     val pruned = StructType(requiredSchema.fields
       .filterNot(_.name == PartitionScoped.PartCol))
-    val withSrcs =
+    super.pruneColumns(
       if (!partRequested) pruned
       else StructType(pruned.fields ++ derivers.map(_.srcField)
-        .filterNot(f => pruned.fieldNames.contains(f.name)))
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(withSrcs)
-      case _ => ()
-    }
+        .filterNot(f => pruned.fieldNames.contains(f.name))))
   }
 
   override def build(): Scan = {
     val ds = delegate.build()
-    if (partRequested) new PartScan(ds, Some(op), derivers) else ds
+    if (partRequested) new PartScan(ds, op, derivers) else ds
   }
 }
 
-/** REGULAR-path scan builder for DML-capable partitioned tables:
-  * serves the `_partition` metadata column when requested (the
-  * runtime group filter's build side reads it through the table's
-  * ordinary scan — [[PartScan.filterAttributes]]) and forwards full
-  * pushdown to the delegate otherwise, so plain reads keep their
-  * filters, partition pruning and metadata-only aggregates. */
-private[catalog] class PartMetaScanBuilder(delegate: ScanBuilder,
-    derivers: Seq[PartDeriver])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-
-  private var partRequested = false
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    partRequested =
-      requiredSchema.fieldNames.contains(PartitionScoped.PartCol)
-    val pruned = StructType(requiredSchema.fields
-      .filterNot(_.name == PartitionScoped.PartCol))
-    val withSrcs =
-      if (!partRequested) pruned
-      else StructType(pruned.fields ++ derivers.map(_.srcField)
-        .filterNot(f => pruned.fieldNames.contains(f.name)))
-    delegate match {
-      case p: SupportsPushDownRequiredColumns => p.pruneColumns(withSrcs)
-      case _ => ()
-    }
-  }
-
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      a.supportCompletePushDown(agg)
-    case _ => false
-  }
-
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      a.pushAggregation(agg)
-    case _ => false
-  }
-
-  override def pushFilters(
-      fs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushFilters(fs)
-      case _ => fs
-    }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
-
-  override def build(): Scan = {
-    val ds = delegate.build()
-    if (partRequested) new PartScan(ds, None, derivers) else ds
-  }
+private[catalog] object PartScanBuilder {
+  def apply(delegate: ScanBuilder, op: Option[PartitionCowOperation],
+      derivers: Seq[PartDeriver]): ScanBuilder =
+    if (op.isDefined) new PartScanBuilder(delegate, op, derivers)
+    else new PartScanBuilder(delegate, op, derivers)
+      with ForwardsFilters with ForwardsAggregates
 }
 
 /** The rewrite scan: appends the per-row `_partition` (hive dir name

@@ -1305,10 +1305,6 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
     loadTable(ident)
   }
 
-  /** Serve PARTITIONED tables through the write-enabled wrapper: reads
-    * stay the stock file table (directory partition discovery +
-    * pruning), writes route through the V1 path that actually lays out
-    * `col=value` directories — see [[PartitionedWriteTable]]. */
   /** Declared so the analyzer routes `ALTER TABLE ... ADD CONSTRAINT`
     * to [[alterTable]] instead of refusing at resolution. */
   override def capabilities():
@@ -1353,7 +1349,7 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
           WritableSnapshotCatalog.ConstraintProp) -> p.value)
       val tGuarded =
         if (tChecks.isEmpty) tpt else new ConstraintTable(tpt, tChecks)
-      return new TransformRowLevelTable(tGuarded, this, ti, tds)
+      return new PartitionScopedRowLevelTable(tGuarded, this, ti, tds)
     }
     val direct =
       if (partCols.isEmpty) base
@@ -1365,11 +1361,9 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
     val served =
       if (!BranchCow.isBranchAttach(snapshotDir)) direct
       else direct match {
-        case pm: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
+        case _: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
           new BranchCowAppendTable(direct, this, ti, partCols)
-            with ForwardsPartitions {
-            override protected def partitions = pm
-          }
+            with ForwardsPartitions
         case _ if ti.provider.equalsIgnoreCase("parquet") =>
           // unpartitioned parquet sits under the row-level wrappers,
           // whose TRUNCATE builds V2 writes — declaring V1_BATCH_WRITE
@@ -1387,10 +1381,8 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
       else served match {
         // preserve partition management under a CHECK constraint — the
         // plain wrapper would strip SupportsPartitionManagement
-        case pm: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
-          new ConstraintTable(served, checks) with ForwardsPartitions {
-            override protected def partitions = pm
-          }
+        case _: org.apache.spark.sql.connector.catalog.SupportsPartitionManagement =>
+          new ConstraintTable(served, checks) with ForwardsPartitions
         case _ => new ConstraintTable(served, checks)
       }
     // stock row-level DML (MERGE/UPDATE/DELETE): table-granular COW on
@@ -1430,16 +1422,19 @@ class WritableSnapshotCatalog extends SnapshotCatalog {
       // sidecars when the table opts in; UPDATE/MERGE partition-scoped
       // COW over the merged read either way — see MorOps.scala
       Mor.validateTableProps(ti.db, ti.name, ti.properties, ti.columns)
-      val pf = base.schema().fields.find(_.name == partCols.head).get
+      val ids = Seq(IdentityDeriver(
+        base.schema().fields.find(_.name == partCols.head).get))
       val mode = ti.properties.find(_.key == Mor.DeleteModeProp)
         .map(_.value)
+      // the identity layout keeps the wrapped partition management
       if (mode.contains(Mor.ModeMergeOnRead)) {
         val rid = ti.properties.find(_.key == Mor.RowIdProp).get.value
         val kf = base.schema().fields.find(_.name == rid).get
-        new MorPartitionedTable(withChecks, this, ti, pf,
-          kf.copy(nullable = false))
+        new MorPartitionedTable(withChecks, this, ti, ids,
+          kf.copy(nullable = false)) with ForwardsPartitions
       } else
-        new PartitionScopedRowLevelTable(withChecks, this, ti, pf)
+        new PartitionScopedRowLevelTable(withChecks, this, ti, ids)
+          with ForwardsPartitions
     } else withChecks
   }
 
@@ -1856,19 +1851,11 @@ object WritableSnapshotCatalog {
   * fails at runtime with no graft-side execution code. Constraints are
   * served ENFORCED/UNVALIDATED (the catalog never claims it scanned
   * existing data) and rely=false. */
-private[catalog] class ConstraintTable(inner: Table,
-    checks: Seq[(String, String)]) extends Table
+private[catalog] class ConstraintTable(protected val inner: Table,
+    checks: Seq[(String, String)]) extends ForwardingTable
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   import org.apache.spark.sql.connector.catalog.constraints.Constraint
-
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def capabilities():
-      util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    inner.capabilities()
 
   override def constraints(): Array[Constraint] =
     checks.map { case (n, sql) =>
@@ -1879,46 +1866,22 @@ private[catalog] class ConstraintTable(inner: Table,
         .build(): Constraint
     }.toArray
 
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : org.apache.spark.sql.connector.read.ScanBuilder =
+    innerScanBuilder(options)
 
   override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-      .newWriteBuilder(info)
+      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
+      : org.apache.spark.sql.connector.write.WriteBuilder =
+    innerWriteBuilder(info)
 }
 
-/** Forwards the partition-management surface to [[partitions]]. A
-  * serving wrapper around a partitioned table mixes it in: without it
-  * the wrapper would silently strip `SupportsPartitionManagement` from
-  * the served table and break SHOW PARTITIONS and partition ops. */
-private[catalog] trait ForwardsPartitions
-    extends org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
-  import org.apache.spark.sql.catalyst.InternalRow
-  protected def partitions
-      : org.apache.spark.sql.connector.catalog.SupportsPartitionManagement
-  override def partitionSchema(): StructType = partitions.partitionSchema()
-  override def createPartition(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    partitions.createPartition(ident, properties)
-  override def dropPartition(ident: InternalRow): Boolean =
-    partitions.dropPartition(ident)
-  override def replacePartitionMetadata(ident: InternalRow,
-      properties: util.Map[String, String]): Unit =
-    partitions.replacePartitionMetadata(ident, properties)
-  override def loadPartitionMetadata(ident: InternalRow)
-      : util.Map[String, String] = partitions.loadPartitionMetadata(ident)
-  override def listPartitionIdentifiers(names: Array[String],
-      ident: InternalRow): Array[InternalRow] =
-    partitions.listPartitionIdentifiers(names, ident)
-  override def partitionExists(ident: InternalRow): Boolean =
-    partitions.partitionExists(ident)
-}
-
-private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
-    partCols: Seq[String]) extends Table
+/** Serves a PARTITIONED table: reads stay the stock file table
+  * (directory partition discovery + pruning); writes route through the
+  * V1 path that actually lays out `col=value` directories; partition
+  * management is backed by that layout. */
+private[catalog] class PartitionedWriteTable(protected val inner: Table,
+    ti: TableInfo, partCols: Seq[String]) extends ForwardingTable
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
@@ -1927,10 +1890,6 @@ private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
   import org.apache.spark.sql.connector.expressions.Expressions
   import org.apache.spark.sql.connector.read.ScanBuilder
   import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
-
-  override def name(): String = inner.name()
-
-  override def schema(): StructType = inner.schema()
 
   // ---- partition management (HMS SHOW PARTITIONS / partition-exists
   // surface). The hive-style directory LAYOUT is the source of truth
@@ -1945,7 +1904,7 @@ private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
       s"partition management on ${ti.db}.${ti.name} supports single-" +
         "column partitioning; multi-column layouts read/write fine " +
         "but list through the file index only")
-    inner.schema().fields.find(_.name == partCols.head).getOrElse(
+    schema().fields.find(_.name == partCols.head).getOrElse(
       StructField(partCols.head, org.apache.spark.sql.types.StringType))
   }
 
@@ -2013,15 +1972,13 @@ private[catalog] class PartitionedWriteTable(inner: Table, ti: TableInfo,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
-    val base = inner
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
+    val base = innerScanBuilder(options)
     // storage-partitioned-join serving, opt-in (see [[CoPartitioned]]):
     // with the SPJ flag off the stock builder passes through untouched,
     // keeping catalyst filter pushdown and bin-packed parallelism
     if (CoPartitioned.spjEnabled)
       new CoPartitioned.SpjScanBuilder(base, StructType(partCols.map(c =>
-        inner.schema().fields.find(_.name == c).getOrElse(
+        schema().fields.find(_.name == c).getOrElse(
           StructField(c, org.apache.spark.sql.types.StringType)))))
     else base
   }
@@ -2095,37 +2052,22 @@ private[catalog] object BranchCow {
   * route through a V1 write that stages a fresh generation and swaps
   * the branch snapshot's location at the end — never a byte into the
   * fork-shared directory (see [[BranchCow]]). */
-private[catalog] class BranchCowAppendTable(inner: Table,
+private[catalog] class BranchCowAppendTable(protected val inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo, partCols: Seq[String])
-  extends Table
+  extends ForwardingTable
   with org.apache.spark.sql.connector.catalog.SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   import org.apache.spark.sql.connector.catalog.TableCapability
   import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def constraints():
-      Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    inner.constraints()
-
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    inner match {
-      case m: org.apache.spark.sql.connector.catalog.SupportsMetadataColumns =>
-        m.metadataColumns()
-      case _ => Array.empty
-    }
+    innerMetadataColumns
 
   override def capabilities(): util.Set[TableCapability] = {
     val caps = util.EnumSet.noneOf(classOf[TableCapability])
-    caps.addAll(inner.capabilities())
+    caps.addAll(super.capabilities())
     // writes route V1 here, whatever the inner table speaks
     caps.remove(TableCapability.BATCH_WRITE)
     caps.add(TableCapability.V1_BATCH_WRITE)
@@ -2135,8 +2077,7 @@ private[catalog] class BranchCowAppendTable(inner: Table,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
+    innerScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -2173,44 +2114,29 @@ private[catalog] class BranchCowAppendTable(inner: Table,
   * planner reject every V2 write on the table). Its writes are the
   * row-level path's [[CowWrites.swapWrite]], carrying the current
   * generation over on append. */
-private[catalog] class BranchCowAppendV2Table(inner: Table,
+private[catalog] class BranchCowAppendV2Table(protected val inner: Table,
     cat: WritableSnapshotCatalog, ti: TableInfo)
-  extends Table
+  extends ForwardingTable
   with org.apache.spark.sql.connector.catalog.SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   import org.apache.spark.sql.connector.catalog.TableCapability
   import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
 
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def constraints():
-      Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    inner.constraints()
   override def capabilities(): util.Set[TableCapability] = {
     val caps = util.EnumSet.noneOf(classOf[TableCapability])
-    caps.addAll(inner.capabilities())
+    caps.addAll(super.capabilities())
     caps.add(TableCapability.TRUNCATE)
     caps
   }
 
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    inner match {
-      case m: org.apache.spark.sql.connector.catalog.SupportsMetadataColumns =>
-        m.metadataColumns()
-      case _ => Array.empty
-    }
+    innerMetadataColumns
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
+    innerScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {

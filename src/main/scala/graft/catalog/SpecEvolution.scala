@@ -247,11 +247,6 @@ private[catalog] class EvolvedPartitionTable(tableName: String,
 
   override def name(): String = tableName
   override def schema(): StructType = userSchema
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    userSchema.fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column
-        .create(f.name, f.dataType, f.nullable))
   override def partitioning(): Array[Transform] = current.partitioning()
   override def properties(): java.util.Map[String, String] =
     current.properties()

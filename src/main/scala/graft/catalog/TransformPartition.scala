@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,10 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    [[TransformScanBuilder]]), which the stock builder turns into
   *    partition pruning exactly as if the user had written the
   *    derived predicate;
-  *  - row-level DML scopes at PARTITION granularity through the same
-  *    [[PartitionCowOperation]] machinery as identity layouts, with a
-  *    [[PartDeriver]] mapping each row's SOURCE value to its directory
-  *    (a DELETE touching one bucket rewrites one bucket and hard-links
+  *  - row-level DML scopes at PARTITION granularity through the one
+  *    partition-scoped table identity layouts use
+  *    ([[PartitionScopedRowLevelTable]]), with a [[PartDeriver]]
+  *    sequence mapping each row's SOURCE value to its directory (a
+  *    DELETE touching one bucket rewrites one bucket and hard-links
   *    the rest).
   *
   * COMPOSITE transforms compose by SEQUENCE: `PARTITIONED BY
@@ -258,23 +259,15 @@ private[catalog] case class TimeDeriver(srcField: StructField,
   * derived column(s), translates predicates, derives directory values
   * on write. Reads otherwise delegate to the stock file table. A
   * composite transform sequence nests dirs in sequence order. */
-private[catalog] class TransformPartitionTable(inner: Table,
+private[catalog] class TransformPartitionTable(protected val inner: Table,
     ti: TableInfo, derivers: Seq[PartDeriver],
     cat: Option[WritableSnapshotCatalog], branchAttach: Boolean)
-  extends Table with SupportsRead with SupportsWrite {
+  extends ForwardingTable with SupportsRead with SupportsWrite {
 
   private val derivedNames = derivers.map(_.derivedName).toSet
 
-  override def name(): String = inner.name()
-
   override def schema(): StructType = StructType(
-    inner.schema().fields.filterNot(f => derivedNames.contains(f.name)))
-
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema().fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column
-        .create(f.name, f.dataType, f.nullable))
+    super.schema().fields.filterNot(f => derivedNames.contains(f.name)))
 
   override def partitioning(): Array[Transform] = derivers.map {
     case BucketDeriver(f, n) => Expressions.bucket(n, f.name)
@@ -290,8 +283,6 @@ private[catalog] class TransformPartitionTable(inner: Table,
     case d => throw new IllegalStateException(s"unreportable deriver $d")
   }.toArray
 
-  override def properties(): util.Map[String, String] = inner.properties()
-
   /** A READ-ONLY attach (cat=None, non-branch) must not declare write
     * capabilities: an INSERT through it would mutate the shared live
     * directory behind every other attach's back, bypassing generation
@@ -305,8 +296,7 @@ private[catalog] class TransformPartitionTable(inner: Table,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new TransformScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options), derivers)
+    new TransformScanBuilder(innerScanBuilder(options), derivers)
 
   /** V1 write deriving the directory column engine-side. Appends land
     * in place (the hive-partitioned discipline); on a BRANCH attach
@@ -453,36 +443,12 @@ private[catalog] class TransformPartitionTable(inner: Table,
   * predicates are implied by the originals, so results never change.
   * Synthesized conjuncts are stripped from the reported residue
   * (Spark cannot evaluate a hidden attribute post-scan). */
-private[catalog] class TransformScanBuilder(delegate: ScanBuilder,
-    derivers: Seq[PartDeriver])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    delegate match {
-      case p: SupportsPushDownRequiredColumns =>
-        p.pruneColumns(requiredSchema)
-      case _ => ()
-    }
-
+private[catalog] class TransformScanBuilder(
+    protected val delegate: ScanBuilder, derivers: Seq[PartDeriver])
+  extends ScanBuilder with ForwardsColumns with ForwardsFilters
   // aggregate pushdown (COUNT/MIN/MAX from footers) forwards — the
   // wrapper must not cost a clean table its metadata-only aggregates
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      a.supportCompletePushDown(agg)
-    case _ => false
-  }
-
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = delegate match {
-    case a: org.apache.spark.sql.connector.read.SupportsPushDownAggregates =>
-      a.pushAggregation(agg)
-    case _ => false
-  }
+  with ForwardsAggregates {
 
   private def translate(deriver: PartDeriver,
       e: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -571,23 +537,10 @@ private[catalog] class TransformScanBuilder(delegate: ScanBuilder,
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     synthesized =
       derivers.flatMap(d => fs.flatMap(f => translate(d, f)))
-    val res = delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters =>
-        f.pushFilters(fs ++ synthesized)
-      case _ => fs
-    }
     // never report a hidden-attribute conjunct back as residue
-    res.filterNot(r => synthesized.exists(_ fastEquals r))
+    super.pushFilters(fs ++ synthesized)
+      .filterNot(r => synthesized.exists(_ fastEquals r))
   }
-
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate match {
-      case f: org.apache.spark.sql.internal.connector
-          .SupportsPushDownCatalystFilters => f.pushedFilters
-      case _ => Array.empty
-    }
 
   override def build(): Scan = delegate.build()
 }
@@ -666,54 +619,4 @@ private[graft] object TransformCompaction {
       CompactResult(gen.root, toCompact.map(_._1), toLink.map(_._1))
     }
   }
-}
-
-/** Row-level DML for transform-partitioned tables: the identical
-  * partition-scoped COW machinery as identity layouts
-  * ([[PartitionCowOperation]]), parameterized by the transform's
-  * [[PartDeriver]] sequence — a DELETE touching K buckets/days/cells
-  * rewrites K leaf directories and hard-links the rest. */
-private[catalog] class TransformRowLevelTable(inner: Table,
-    cat: WritableSnapshotCatalog, ti: TableInfo,
-    derivers: Seq[PartDeriver])
-  extends Table with SupportsRead with SupportsWrite
-  with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
-  with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
-
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    inner.columns()
-  override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
-  override def capabilities(): util.Set[TableCapability] =
-    inner.capabilities()
-  override def constraints():
-      Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    inner.constraints()
-
-  override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name: String = PartitionScoped.PartCol
-      override def dataType: DataType = StringType
-      override def isNullable: Boolean = true // NULL on inserted rows
-      override def comment: String =
-        "hive partition directory that served this row (row-level " +
-          "rewrites; derived from the transform source column)"
-    })
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new PartMetaScanBuilder(
-      inner.asInstanceOf[SupportsRead].newScanBuilder(options), derivers)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    inner.asInstanceOf[SupportsWrite].newWriteBuilder(info)
-
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new PartitionCowOperation(inner, cat, ti, derivers, info)
 }

@@ -1606,6 +1606,144 @@ import graft.sources.Scans
       Option(e.getCause).exists(c2 =>
         Option(c2.getMessage).exists(_.contains("refused"))),
       s"unexpected refusal shape: ${e.getMessage}")
+    // every other serving shape serves the default too: the analyzer
+    // resolves DEFAULT against the table's columns(), so a wrapper that
+    // rebuilds them from name/type/nullability stores NULL instead
+    val mor = "TBLPROPERTIES ('graft.delete.mode'='merge-on-read', " +
+      "'graft.row.id'='k')"
+    val served = for ((t, ddl, values) <- Seq(
+        ("mor", s"(k BIGINT NOT NULL, v STRING DEFAULT 'x') USING parquet $mor",
+          "(1L, DEFAULT)"),
+        ("pmor", "(k BIGINT NOT NULL, v STRING DEFAULT 'x', p STRING) " +
+          s"USING parquet PARTITIONED BY (p) $mor", "(1L, DEFAULT, 'a')"),
+        ("bkt", "(k BIGINT, v STRING DEFAULT 'x') USING parquet " +
+          "PARTITIONED BY (bucket(4, k))", "(1L, DEFAULT)"),
+        ("evo", "(k BIGINT, v STRING DEFAULT 'x') USING parquet",
+          "(1L, DEFAULT)"))) yield {
+      spark.sql(s"CREATE TABLE $cat.ddb.$t $ddl")
+      if (t == "evo")
+        spark.sql(s"ALTER TABLE $cat.ddb.$t SET TBLPROPERTIES (" +
+          "'graft.part.evolve'='bucket(4, k)')")
+      val tbl = c.loadTable(org.apache.spark.sql.connector.catalog
+        .Identifier.of(Array("ddb"), t))
+      val fld = tbl.schema().fields.find(_.name == "v").get
+      val dv = tbl.columns().find(_.name == "v").get.defaultValue()
+      spark.sql(s"INSERT INTO $cat.ddb.$t VALUES $values")
+      val v = spark.table(s"$cat.ddb.$t").select("v").collect()
+        .map(_.getString(0)).toSeq
+      t -> Seq(fld.metadata.contains("CURRENT_DEFAULT") &&
+        fld.metadata.getString("CURRENT_DEFAULT") == "'x'",
+        dv != null && dv.getSql == "'x'", v)
+    }
+    // (schema serves it, columns() serve it, stored values)
+    assert(served == Seq("mor", "pmor", "bkt", "evo")
+      .map(_ -> Seq(true, true, Seq("x"))), served)
+  }
+
+  test("serving-surface law: every serving shape keeps its Spark surface") {
+    import org.apache.spark.sql.connector.catalog._
+    import scala.jdk.CollectionConverters._
+    val dir = new java.io.File(Tables.scratch(sf, "v2_surface_snapshot"))
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    CatalogTransfer.writeLocal(CatalogSnapshot(Nil, Nil), dir.getPath)
+    val cat = "surf_spec"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.WritableSnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.path", dir.getPath)
+    spark.sql(s"CREATE NAMESPACE $cat.s")
+    val mor = "TBLPROPERTIES ('graft.delete.mode'='merge-on-read', " +
+      "'graft.row.id'='k')"
+    val ddls = Seq(
+      ("plain", "(k BIGINT, v STRING) USING parquet"),
+      ("mor", s"(k BIGINT NOT NULL, v STRING) USING parquet $mor"),
+      ("ident", "(k BIGINT, v STRING, p STRING) USING parquet " +
+        "PARTITIONED BY (p)"),
+      ("pmor", "(k BIGINT NOT NULL, v STRING, p STRING) USING parquet " +
+        s"PARTITIONED BY (p) $mor"),
+      ("bkt", "(k BIGINT, v STRING) USING parquet " +
+        "PARTITIONED BY (bucket(4, k))"),
+      ("evo", "(k BIGINT, v STRING) USING parquet"))
+    for ((t, ddl) <- ddls; ck <- Seq("", "_ck")) {
+      spark.sql(s"CREATE TABLE $cat.s.$t$ck $ddl")
+      if (t == "evo")
+        spark.sql(s"ALTER TABLE $cat.s.$t$ck SET TBLPROPERTIES (" +
+          "'graft.part.evolve'='bucket(4, k)')")
+      if (ck.nonEmpty)
+        spark.sql(s"ALTER TABLE $cat.s.$t$ck ADD CONSTRAINT c CHECK (k > 0)")
+    }
+    val w = attachWritable("surf_w", dir.getPath)
+    w.createBranch("b")
+    val br = attachWritable("surf_b", w.branchDir("b"))
+    val ro = new graft.catalog.SnapshotCatalog
+    ro.initialize("surf_r", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(java.util.Map.of("path", dir.getPath)))
+    val ifaces = Seq(classOf[SupportsRead] -> "read",
+      classOf[SupportsWrite] -> "write",
+      classOf[SupportsRowLevelOperations] -> "rowlevel",
+      classOf[SupportsMetadataColumns] -> "meta",
+      classOf[SupportsPartitionManagement] -> "parts")
+    def surface(c: TableCatalog, t: String): String = {
+      val tbl = c.loadTable(Identifier.of(Array("s"), t))
+      // Table's own columns() default: CatalogV2Util.structTypeToV2Columns
+      val derived = new Table {
+        override def name(): String = t
+        override def schema() = tbl.schema()
+        override def capabilities() = java.util.Collections.emptySet()
+      }.columns()
+      assert(tbl.columns().toSeq == derived.toSeq,
+        s"$t: columns() is not derived from schema()")
+      val meta = tbl match {
+        case m: SupportsMetadataColumns => m.metadataColumns().map(_.name)
+        case _ => Array.empty[String]
+      }
+      Seq(ifaces.collect { case (i, n) if i.isInstance(tbl) => n }.mkString(","),
+        tbl.capabilities().asScala.map(_.toString).toSeq.sorted.mkString(","),
+        tbl.partitioning().map(_.describe).mkString(","),
+        meta.mkString(","), tbl.constraints().length.toString).mkString(" | ")
+    }
+    val got = ddls.flatMap { case (t, _) =>
+      Seq(s"w.$t" -> surface(w, t), s"w.${t}_ck" -> surface(w, s"${t}_ck"))
+    } ++ Seq("plain", "ident").map(t => s"b.$t" -> surface(br, t)) ++
+      Seq("plain", "mor", "bkt").map(t => s"r.$t" -> surface(ro, t))
+    // interfaces | capabilities | partitioning | metadata columns |
+    // constraint count
+    val expected = Seq(
+      "w.plain" ->
+        "read,write,rowlevel,meta | BATCH_READ,BATCH_WRITE,TRUNCATE |  | _gen | 0",
+      "w.plain_ck" ->
+        "read,write,rowlevel,meta | BATCH_READ,BATCH_WRITE,TRUNCATE |  | _gen | 1",
+      "w.mor" ->
+        "read,write,rowlevel,meta | BATCH_READ,BATCH_WRITE,TRUNCATE |  | _gen,_cdc | 0",
+      "w.mor_ck" ->
+        "read,write,rowlevel,meta | BATCH_READ,BATCH_WRITE,TRUNCATE |  | _gen,_cdc | 1",
+      "w.ident" ->
+        "read,write,rowlevel,meta,parts | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | p | _partition | 0",
+      "w.ident_ck" ->
+        "read,write,rowlevel,meta,parts | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | p | _partition | 1",
+      "w.pmor" ->
+        "read,write,rowlevel,meta,parts | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | p | _partition | 0",
+      "w.pmor_ck" ->
+        "read,write,rowlevel,meta,parts | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | p | _partition | 1",
+      "w.bkt" ->
+        "read,write,rowlevel,meta | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | bucket(4, k) | _partition | 0",
+      "w.bkt_ck" ->
+        "read,write,rowlevel,meta | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | bucket(4, k) | _partition | 1",
+      "w.evo" ->
+        "read,write | BATCH_READ,V1_BATCH_WRITE | bucket(4, k) |  | 0",
+      "w.evo_ck" ->
+        "read,write | BATCH_READ,V1_BATCH_WRITE | bucket(4, k) |  | 0",
+      "b.plain" ->
+        "read,write,rowlevel,meta | BATCH_READ,BATCH_WRITE,TRUNCATE |  | _gen | 0",
+      "b.ident" ->
+        "read,write,rowlevel,meta,parts | BATCH_READ,TRUNCATE,V1_BATCH_WRITE | p | _partition | 0",
+      "r.plain" ->
+        "read,write | BATCH_READ,BATCH_WRITE |  |  | 0",
+      "r.mor" ->
+        "read | BATCH_READ,BATCH_WRITE |  |  | 0",
+      "r.bkt" ->
+        "read,write | BATCH_READ | bucket(4, k) |  | 0")
+    assert(got == expected,
+      got.map { case (k, v) => s"\"$k\" -> \"$v\"" }.mkString("\n", ",\n", ""))
   }
 
   test("vacuum retains the newest revisions; DDL continues past it") {
